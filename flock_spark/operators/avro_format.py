@@ -45,6 +45,13 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from flock_spark.operators.bitio import (
+    crc32,
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag,
+)
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -67,20 +74,8 @@ MAGIC = b"Obj\x01"
 
 def read_long(d: bytes, p: int) -> tuple[int, int]:
     """Zig-zag base-128 varint (the spec's int/long encoding)."""
-    shift = 0
-    acc = 0
-    while True:
-        if p >= len(d):
-            raise ValueError("avro: truncated varint")
-        b = d[p]
-        p += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 63:
-            raise ValueError("avro: varint too long")
-    return (acc >> 1) ^ -(acc & 1), p
+    u, p = read_uvarint(d, p)
+    return unzigzag(u), p
 
 
 def _read_sized(d: bytes, p: int) -> tuple[bytes, int]:
@@ -210,13 +205,12 @@ def _decompress_block(codec: str, payload: bytes) -> bytes:
         return inflate(payload)
     if codec == "snappy":
         from flock_spark.operators.formats import snappy_decompress
-        from flock_spark.operators.multimodal import _crc32_own
 
         if len(payload) < 4:
             raise ValueError("avro: snappy block too short for CRC")
         raw = snappy_decompress(payload[:-4])
         want = struct.unpack(">I", payload[-4:])[0]  # big-endian per spec
-        if _crc32_own(raw) != want:
+        if crc32(raw) != want:
             raise ValueError("avro: snappy block CRC mismatch")
         _hit("codec:snappy")
         return raw
@@ -459,16 +453,7 @@ def scan_avro_container_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def write_long(v: int) -> bytes:
     """Zig-zag base-128 varint encode (the spec's int/long encoding)."""
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return write_uvarint(zigzag(v))
 
 
 def _write_sized(b: bytes) -> bytes:
@@ -569,13 +554,12 @@ def _compress_block(codec: str, raw: bytes) -> bytes:
 
         return deflate_compress(raw)
     if codec == "snappy":
-        from flock_spark.operators.multimodal import _crc32_own
         from flock_spark.operators.parquet_writer import (
             snappy_literal_compress,
         )
 
         return snappy_literal_compress(raw) + struct.pack(
-            ">I", _crc32_own(raw)
+            ">I", crc32(raw)
         )
     raise ValueError(f"avro encode: unsupported codec {codec!r}")
 

@@ -105,17 +105,6 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _spark_shingles(d: DataFrame, distinct: bool) -> DataFrame:
-    """doc_id → exploded character-K-gram shingles (JVM-side, no UDF)."""
-    grams = F.expr(
-        f"transform(sequence(1, greatest(length(text) - {SHINGLE_K - 1}, 1)),"
-        f" i -> substring(text, i, {SHINGLE_K}))"
-    )
-    if distinct:
-        grams = F.array_distinct(grams)
-    return d.select("doc_id", F.explode(grams).alias("shingle"))
-
-
 def _duck_shingles(distinct: bool) -> str:
     inner = (
         f"[substring(text, i, {SHINGLE_K})"

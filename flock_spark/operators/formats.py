@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flock_spark.operators.bitio import read_uvarint, unzigzag, write_uvarint
 from flock_spark.registry import register
 
 # Thrift compact protocol type nibbles (public spec).
@@ -39,27 +40,6 @@ _CT_MAP = 11
 _CT_STRUCT = 12
 
 
-def _varint(data: bytes, pos: int) -> tuple[int, int]:
-    """ULEB128 unsigned varint -> (value, next_pos)."""
-    shift = 0
-    out = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("varint runs past end of buffer")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
-def _zigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def thrift_read_value(data: bytes, pos: int, ctype: int):
     """Read one compact-protocol value of the given wire type."""
     if ctype in (_CT_TRUE, _CT_FALSE):
@@ -74,14 +54,14 @@ def thrift_read_value(data: bytes, pos: int, ctype: int):
         v = data[pos]
         return v - 256 if v > 127 else v, pos + 1
     if ctype in (_CT_I16, _CT_I32, _CT_I64):
-        v, pos = _varint(data, pos)
-        return _zigzag(v), pos
+        v, pos = read_uvarint(data, pos)
+        return unzigzag(v), pos
     if ctype == _CT_DOUBLE:
         import struct as _s
 
         return _s.unpack_from("<d", data, pos)[0], pos + 8
     if ctype == _CT_BINARY:
-        n, pos = _varint(data, pos)
+        n, pos = read_uvarint(data, pos)
         if pos + n > len(data):
             raise ValueError("binary value past end")
         return bytes(data[pos : pos + n]), pos + n
@@ -102,7 +82,7 @@ def thrift_read_list(data: bytes, pos: int) -> tuple[list, int]:
     size = b >> 4
     etype = b & 0x0F
     if size == 15:
-        size, pos = _varint(data, pos)
+        size, pos = read_uvarint(data, pos)
     out = []
     for _ in range(size):
         if etype in (_CT_TRUE, _CT_FALSE):
@@ -132,8 +112,8 @@ def thrift_read_struct(data: bytes, pos: int) -> tuple[dict[int, object], int]:
         if delta:
             fid = last_id + delta
         else:
-            raw, pos = _varint(data, pos)
-            fid = _zigzag(raw)
+            raw, pos = read_uvarint(data, pos)
+            fid = unzigzag(raw)
         last_id = fid
         val, pos = thrift_read_value(data, pos, ctype)
         fields[fid] = val
@@ -371,7 +351,7 @@ def snappy_decompress(data: bytes) -> bytes:
     bytes), 01 copy with 11-bit offset, 10 copy with 2-byte offset,
     11 copy with 4-byte offset. Copies may overlap their own output
     (RLE-style), so the copy loop is byte-at-a-time on purpose."""
-    n, pos = _varint(data, 0)
+    n, pos = read_uvarint(data, 0)
     out = bytearray()
     while pos < len(data):
         tag = data[pos]
@@ -422,7 +402,7 @@ def rle_bp_decode(
     out: list[int] = []
     wb = (bit_width + 7) // 8
     while len(out) < n:
-        header, pos = _varint(data, pos)
+        header, pos = read_uvarint(data, pos)
         if header & 1:
             cnt = (header >> 1) * 8
             nbytes = cnt * bit_width // 8
@@ -1258,10 +1238,10 @@ def delta_binary_packed_decode(data: bytes, pos: int = 0) -> tuple[list[int], in
     and LSB-first bit-packed deltas (value = previous + min_delta + delta).
     Trailing unneeded miniblocks carry a width byte but NO body bytes.
     Returns (values, next_pos)."""
-    block_size, pos = _varint(data, pos)
-    n_mini, pos = _varint(data, pos)
-    total, pos = _varint(data, pos)
-    raw_first, pos = _varint(data, pos)
+    block_size, pos = read_uvarint(data, pos)
+    n_mini, pos = read_uvarint(data, pos)
+    total, pos = read_uvarint(data, pos)
+    raw_first, pos = read_uvarint(data, pos)
     if n_mini == 0 or block_size % n_mini:
         raise ValueError("invalid delta block geometry")
     per_mini = block_size // n_mini
@@ -1269,10 +1249,10 @@ def delta_binary_packed_decode(data: bytes, pos: int = 0) -> tuple[list[int], in
         raise ValueError("miniblock size not a multiple of 8")
     values: list[int] = []
     if total:
-        values.append(_zigzag(raw_first))
+        values.append(unzigzag(raw_first))
     while len(values) < total:
-        raw_md, pos = _varint(data, pos)
-        min_delta = _zigzag(raw_md)
+        raw_md, pos = read_uvarint(data, pos)
+        min_delta = unzigzag(raw_md)
         widths = data[pos : pos + n_mini]
         if len(widths) < n_mini:
             raise ValueError("truncated miniblock width list")
@@ -1720,15 +1700,8 @@ def snappy_compress(data: bytes, max_chain: int = 16) -> bytes:
     element, longer matches split), literal runs with 1/2-byte extended
     length tags. Certified against the REAL snappy decoder (pyarrow) and
     this module's own from-spec decoder."""
-    out = bytearray()
     n = len(data)
-    v = n
-    while True:  # uncompressed-length preamble
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | 0x80 if v else b)
-        if not v:
-            break
+    out = bytearray(write_uvarint(n))  # uncompressed-length preamble
 
     def emit_literal(start: int, end: int) -> None:
         i = start

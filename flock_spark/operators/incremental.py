@@ -411,11 +411,18 @@ def ivm_distinct_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the untouched users' standing rows via an anti-join — the window "
     "never re-runs over unaffected partitions. The oracle recomputes "
     "directly from the final row set, so the green row proves "
-    "scoped-recompute == full recompute. At 100 TB the base is stored "
-    "bucketed by user_id: the semi-join prunes to affected buckets and "
-    "refresh cost is O(|delta| + rows of affected partitions), which is "
+    "scoped-recompute == full recompute. Trade: each refresh first pins "
+    "the whole skinny events projection (user_id, event_id, micros) with "
+    "an eager localCheckpoint, so every refresh reads and materialises all "
+    "events once and drops the lineage back to the parquet scan (a lost "
+    "executor cannot recompute the pinned blocks); in exchange the scan "
+    "runs once instead of under each of the DAG's seven consumers. So "
+    "refresh cost here is O(|events|) for that scan plus O(|delta| + "
+    "rows of affected partitions) for the window. The window part is "
     "the best possible for rank-class views (DBSP non-linear operator "
-    "treatment; complements agg/distinct/join deltas).",
+    "treatment; complements agg/distinct/join deltas); reaching the same "
+    "bound end to end needs a base stored bucketed by user_id, where the "
+    "semi-join prunes to affected buckets instead of pinning everything.",
 )
 def ivm_window_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Delta-spine pin: every branch of the scoped recompute (standing view,

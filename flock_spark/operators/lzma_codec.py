@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flock_spark.catalog import spread, tbl
+from flock_spark.operators.bitio import crc32, read_uvarint, write_uvarint
 from flock_spark.registry import register
 
 STATS: dict[str, int] = {}
@@ -666,23 +667,6 @@ def _lzma_run(
         rc.range, rc.code, rc.pos = rng, code, dpos
 
 
-class _SubProbs:
-    """List view with an offset — lets the shared SpecPos probability
-    array be addressed per distance-slot base, as the spec lays it out."""
-
-    __slots__ = ("base", "off")
-
-    def __init__(self, base: list[int], off: int) -> None:
-        self.base = base
-        self.off = off
-
-    def __getitem__(self, i: int) -> int:
-        return self.base[self.off + i]
-
-    def __setitem__(self, i: int, v: int) -> None:
-        self.base[self.off + i] = v
-
-
 # ---------------------------------------------------------------------------
 # LZMA2 chunk layer
 # ---------------------------------------------------------------------------
@@ -768,28 +752,21 @@ _CHECK_NAMES = {0: "none", 1: "crc32", 4: "crc64", 10: "sha256"}
 
 
 def _mb_varint(d: bytes, p: int) -> tuple[int, int]:
-    """xz multibyte integer: 7 bits/byte little-endian, max 9 bytes."""
-    v = 0
-    for i in range(9):
-        if p >= len(d):
-            raise ValueError("xz: truncated varint")
-        b = d[p]
-        p += 1
-        v |= (b & 0x7F) << (7 * i)
-        if not b & 0x80:
-            if b == 0 and i > 0:
-                raise ValueError("xz: non-minimal varint")
-            return v, p
-    raise ValueError("xz: varint too long")
+    """xz multibyte integer: a ULEB128 varint of at most 9 bytes whose
+    last byte is nonzero (the minimal form)."""
+    v, q = read_uvarint(d, p)
+    if q - p > 9:
+        raise ValueError("xz: varint too long")
+    if q - p > 1 and d[q - 1] == 0:
+        raise ValueError("xz: non-minimal varint")
+    return v, q
 
 
 def xz_decompress(data: bytes) -> bytes:
     """Decode a complete .xz file (multi-stream with padding allowed),
-    verifying every CRC32 (own table-driven implementation from
-    multimodal.py), block check (own CRC32/CRC64/SHA-256), index record
+    verifying every CRC32 (own table-driven implementation,
+    bitio.crc32), block check (own CRC32/CRC64/SHA-256), index record
     and footer echo. Raises ValueError on any violation."""
-    from flock_spark.operators.multimodal import _crc32_own
-
     out_all = bytearray()
     pos = 0
     n_streams = 0
@@ -816,7 +793,7 @@ def xz_decompress(data: bytes) -> bytes:
         if check_id not in _CHECK_SIZES:
             raise ValueError(f"xz: unsupported check id {check_id}")
         _hit(f"xz:check_{_CHECK_NAMES[check_id]}")
-        if int.from_bytes(data[p + 2 : p + 6], "little") != _crc32_own(flags):
+        if int.from_bytes(data[p + 2 : p + 6], "little") != crc32(flags):
             raise ValueError("xz: stream header CRC mismatch")
         p += 6
         records = []
@@ -831,7 +808,7 @@ def xz_decompress(data: bytes) -> bytes:
             bh = data[p : p + real_size]
             if len(bh) < real_size:
                 raise ValueError("xz: truncated block header")
-            if int.from_bytes(bh[-4:], "little") != _crc32_own(bh[:-4]):
+            if int.from_bytes(bh[-4:], "little") != crc32(bh[:-4]):
                 raise ValueError("xz: block header CRC mismatch")
             q = 1
             bflags = bh[q]
@@ -883,7 +860,7 @@ def xz_decompress(data: bytes) -> bytes:
             cbytes = data[p : p + clen]
             p += clen
             if check_id == 1:
-                ok = int.from_bytes(cbytes, "little") == _crc32_own(block)
+                ok = int.from_bytes(cbytes, "little") == crc32(block)
             elif check_id == 4:
                 ok = int.from_bytes(cbytes, "little") == crc64_xz(block)
             elif check_id == 10:
@@ -910,7 +887,7 @@ def xz_decompress(data: bytes) -> bytes:
             if data[p] != 0:
                 raise ValueError("xz: bad index padding")
             p += 1
-        if int.from_bytes(data[p : p + 4], "little") != _crc32_own(
+        if int.from_bytes(data[p : p + 4], "little") != crc32(
             data[idx_start:p]
         ):
             raise ValueError("xz: index CRC mismatch")
@@ -920,7 +897,7 @@ def xz_decompress(data: bytes) -> bytes:
         footer = data[p : p + 12]
         if len(footer) < 12 or footer[10:12] != b"YZ":
             raise ValueError("xz: bad stream footer")
-        if int.from_bytes(footer[:4], "little") != _crc32_own(footer[4:10]):
+        if int.from_bytes(footer[:4], "little") != crc32(footer[4:10]):
             raise ValueError("xz: footer CRC mismatch")
         backward = (int.from_bytes(footer[4:8], "little") + 1) * 4
         if backward != index_size:
@@ -1170,12 +1147,10 @@ def xz_compress(data: bytes, chunk_size: int = 1 << 15) -> bytes:
     conformant reader (certified against liblzma). Chunks stay at 32 KiB
     so the packed size always fits LZMA2's 2-byte pack-size field even
     at the literal coder's worst-case ~9/8 expansion."""
-    from flock_spark.operators.multimodal import _crc32_own
-
     out = bytearray(_XZ_MAGIC)
     flags = bytes([0, 4])  # check id 4 = CRC64
     out += flags
-    out += _crc32_own(flags).to_bytes(4, "little")
+    out += crc32(flags).to_bytes(4, "little")
     # ---- block header: one LZMA2 filter, 8 MiB dict prop (0x1A ->
     # (2|0)<<(13+11) = 2^24) ----
     bh = bytearray([0])  # size byte patched below
@@ -1185,7 +1160,7 @@ def xz_compress(data: bytes, chunk_size: int = 1 << 15) -> bytes:
         bh.append(0)
     size_byte = (len(bh) + 4) // 4 - 1
     bh[0] = size_byte
-    bh += _crc32_own(bytes(bh)).to_bytes(4, "little")
+    bh += crc32(bytes(bh)).to_bytes(4, "little")
     out += bh
     block_start = len(out)
     # ---- LZMA2 chunk sequence ----
@@ -1222,34 +1197,21 @@ def xz_compress(data: bytes, chunk_size: int = 1 << 15) -> bytes:
     # ---- index ----
     idx_start = len(out)
     idx = bytearray([0])
-    idx += _mb_enc(1)
-    idx += _mb_enc(unpadded)
-    idx += _mb_enc(len(data))
+    idx += write_uvarint(1)
+    idx += write_uvarint(unpadded)
+    idx += write_uvarint(len(data))
     while len(idx) % 4:
         idx.append(0)
     out += idx
-    out += _crc32_own(bytes(idx)).to_bytes(4, "little")
+    out += crc32(bytes(idx)).to_bytes(4, "little")
     index_size = len(out) - idx_start
     # ---- footer ----
     backward = (index_size // 4 - 1).to_bytes(4, "little")
-    out += _crc32_own(backward + flags).to_bytes(4, "little")
+    out += crc32(backward + flags).to_bytes(4, "little")
     out += backward
     out += flags
     out += b"YZ"
     return bytes(out)
-
-
-def _mb_enc(v: int) -> bytes:
-    """xz multibyte integer encode (mirror of _mb_varint)."""
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 @register(

@@ -25,6 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flock_spark.catalog import spread, tbl
+from flock_spark.operators.bitio import (
+    LsbReader,
+    LsbWriter,
+    MsbReader,
+    MsbWriter,
+    canonical_codes,
+    crc32,
+)
 from flock_spark.registry import register
 
 try:  # decode libs absent in this container — gate, don't fail at import
@@ -1204,19 +1212,8 @@ def lzw_encode(pixels: list[int]) -> bytes:
     sub-blocks behind the min-code-size byte (GIF89a image data layout).
     Table additions stop at 4096 (deferred-clear mode; the paired decoder
     stops growing at the same point)."""
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(bitbuf & 0xFF)
-            bitbuf >>= 8
-            nbits -= 8
-
+    bw = LsbWriter()
+    emit = bw.write
     width = GIF_LZW_MIN_CODE + 1
     table: dict[tuple[int, ...], int] = {(i,): i for i in range(_LZW_CLEAR)}
     next_code = _LZW_EOI + 1
@@ -1249,8 +1246,7 @@ def lzw_encode(pixels: list[int]) -> bytes:
             if next_code == (1 << width) + 1 and width < 12:
                 width += 1
     emit(_LZW_EOI, width)
-    if nbits:
-        out.append(bitbuf & 0xFF)
+    out = bw.getvalue()
     # sub-block framing: min-code-size byte, then length-prefixed blocks,
     # then the 0x00 block terminator
     framed = bytearray([GIF_LZW_MIN_CODE])
@@ -1288,23 +1284,7 @@ def lzw_decode(data: bytes) -> list[int]:
             break
         payload.extend(data[pos : pos + blen])
         pos += blen
-    bitbuf = 0
-    nbits = 0
-    bpos = 0
-
-    def read(width: int) -> int:
-        nonlocal bitbuf, nbits, bpos
-        while nbits < width:
-            if bpos >= len(payload):
-                raise ValueError("truncated LZW bit stream")
-            bitbuf |= payload[bpos] << nbits
-            bpos += 1
-            nbits += 8
-        code = bitbuf & ((1 << width) - 1)
-        bitbuf >>= width
-        nbits -= width
-        return code
-
+    read = LsbReader(payload).read
     out: list[int] = []
     width = min_code + 1
     table: list[tuple[int, ...]] = [(i,) for i in range(clear)] + [(), ()]
@@ -2010,75 +1990,6 @@ _CLEN_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1,
                15)
 
 
-class _BitReader:
-    """LSB-first bit reader over a bytes object (DEFLATE bit order)."""
-
-    __slots__ = ("data", "pos", "bitbuf", "nbits")
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
-        self.bitbuf = 0
-        self.nbits = 0
-
-    def read(self, width: int) -> int:
-        while self.nbits < width:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated deflate stream")
-            self.bitbuf |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.bitbuf & ((1 << width) - 1)
-        self.bitbuf >>= width
-        self.nbits -= width
-        return v
-
-    def align_byte(self) -> None:
-        # Return whole buffered bytes to the stream before dropping the
-        # current byte's partial bits: a huffman block that ends with >= 8
-        # bits buffered (always possible — the symbol loop refills ahead of
-        # each decode) must not swallow the following stored block's header.
-        # The old form (bitbuf = nbits = 0 with no pos rewind) mis-read
-        # huffman->stored transitions: 152/200 Z_FULL_FLUSH streams failed
-        # with LEN/NLEN mismatch before this fix (round-13 regression test).
-        self.pos -= self.nbits >> 3
-        self.bitbuf = 0
-        self.nbits = 0
-
-
-def _build_huffman(lengths: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman table per RFC 1951 §3.2.2: {(nbits, code): symbol}.
-    Codes are assigned in symbol order within each length, shortest first."""
-    max_len = max(lengths, default=0)
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for bits in range(1, max_len + 1):
-        code = (code + bl_count[bits - 1]) << 1
-        next_code[bits] = code
-    table: dict[tuple[int, int], int] = {}
-    for sym, ln in enumerate(lengths):
-        if ln:
-            table[(ln, next_code[ln])] = sym
-            next_code[ln] += 1
-    return table
-
-
-def _decode_symbol(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    """Read bits MSB-of-code-first (DEFLATE packs Huffman codes reversed
-    relative to the numeric bit stream) until a code matches."""
-    code = 0
-    for ln in range(1, 16):
-        code = (code << 1) | br.read(1)
-        sym = table.get((ln, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code")
-
-
 _FAST_ROOT_BITS = 10  # root-table width for the fast Huffman decode path
 
 # bit-reverse of every 10-bit value, built once: reverse(c, ln) for ln <= 10
@@ -2091,7 +2002,7 @@ _BITREV10: list[int] = [
 
 def _build_fast(lengths: list[int]) -> tuple[list[int], int, int, dict]:
     """Flat root-table decoder over the canonical code of RFC 1951 §3.2.2:
-    entry at index = the next R raw stream bits (LSB-first, as _BitReader
+    entry at index = the next R raw stream bits (LSB-first, as LsbReader
     delivers them) is (symbol << 4) | code_length for codes of length <= R,
     0 for root misses (longer codes or invalid prefixes — resolved by the
     bit-by-bit dict fallback, whose dict therefore only needs the LONG
@@ -2101,27 +2012,15 @@ def _build_fast(lengths: list[int]) -> tuple[list[int], int, int, dict]:
     lookup — per-member table construction dominated many-small-member
     streams even after memoization (mostly-unique tables, ~25% hit rate on
     zlib level-6 text)."""
-    max_len = max(lengths, default=0)
-    root_bits = min(max_len, _FAST_ROOT_BITS) or 1
+    root_bits = min(max(lengths, default=0), _FAST_ROOT_BITS) or 1
     size = 1 << root_bits
     root = [0] * size
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for bits in range(1, max_len + 1):
-        code = (code + bl_count[bits - 1]) << 1
-        next_code[bits] = code
     table_dict: dict[tuple[int, int], int] = {}
     rev10 = _BITREV10
     drop = _FAST_ROOT_BITS
-    for sym, ln in enumerate(lengths):
+    for sym, (c, ln) in enumerate(canonical_codes(lengths)):
         if not ln:
             continue
-        c = next_code[ln]
-        next_code[ln] = c + 1
         if ln > root_bits:
             table_dict[(ln, c)] = sym
             continue
@@ -2171,10 +2070,6 @@ def _build_fast_cached(lengths: list[int]) -> tuple[list[int], int, int, dict]:
     return hit
 
 
-_FIXED_LIT = _build_huffman(
-    [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-)
-_FIXED_DIST = _build_huffman([5] * 30)
 _FIXED_LIT_FAST = _build_fast([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
 _FIXED_DIST_FAST = _build_fast([5] * 30)
 
@@ -2187,7 +2082,7 @@ def inflate_at(data: bytes, start: int = 0) -> tuple[bytes, int]:
     block (partial trailing bits of the last byte are padding — the next
     framing field in gzip/zlib starts at that byte boundary). Raises
     ValueError on malformed input."""
-    br = _BitReader(data, start)
+    br = LsbReader(data, start)
     out = bytearray()
     while True:
         bfinal = br.read(1)
@@ -2505,57 +2400,6 @@ def mm_zlib_inflate_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trusting container metadata without validating it.
 # ---------------------------------------------------------------------------
 
-_CRC32_TABLE: list[int] = []
-_CRC32_TABLE8: list[list[int]] = []
-
-
-def _crc32_own(data: bytes, crc: int = 0) -> int:
-    """Table-driven CRC-32/ISO-HDLC (poly 0xEDB88320) from the public spec.
-
-    Deliberately NOT zlib.crc32: writers below stamp trailers with the stdlib
-    (the "other party"), and validation runs THIS implementation — a bug here
-    mismatches real-world checksums instead of silently agreeing with itself.
-    """
-    if not _CRC32_TABLE:
-        for n in range(256):
-            c = n
-            for _ in range(8):
-                c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
-            _CRC32_TABLE.append(c)
-    if not _CRC32_TABLE8:
-        # slicing-by-8 companion tables, derived from the same base table
-        # (table k advances a byte's contribution k more bytes forward) —
-        # the standard widening of the spec's table-driven form
-        tabs = [_CRC32_TABLE]
-        for _ in range(7):
-            prev = tabs[-1]
-            tabs.append(
-                [_CRC32_TABLE[v & 0xFF] ^ (v >> 8) for v in prev]
-            )
-        _CRC32_TABLE8.extend(tabs)
-    c = crc ^ 0xFFFFFFFF
-    t0, t1, t2, t3, t4, t5, t6, t7 = _CRC32_TABLE8
-    n8 = len(data) - (len(data) & 7)
-    i = 0
-    while i < n8:
-        lo = c ^ int.from_bytes(data[i : i + 4], "little")
-        hi = int.from_bytes(data[i + 4 : i + 8], "little")
-        c = (
-            t7[lo & 0xFF]
-            ^ t6[(lo >> 8) & 0xFF]
-            ^ t5[(lo >> 16) & 0xFF]
-            ^ t4[lo >> 24]
-            ^ t3[hi & 0xFF]
-            ^ t2[(hi >> 8) & 0xFF]
-            ^ t1[(hi >> 16) & 0xFF]
-            ^ t0[hi >> 24]
-        )
-        i += 8
-    for b in data[n8:]:
-        c = _CRC32_TABLE[(c ^ b) & 0xFF] ^ (c >> 8)
-    return c ^ 0xFFFFFFFF
-
-
 def gzip_member_build(name: str, mtime: int, payload: bytes) -> bytes:
     """A valid single-member gzip stream (RFC 1952): magic, CM=8, FLG with
     FNAME+FHCRC, MTIME, raw-deflate body from the stdlib compressor, CRC32 +
@@ -2579,7 +2423,7 @@ def gzip_member_parse_at(stream: bytes, start: int) -> tuple[str, int, bytes, in
     """Parse + validate one gzip member at byte offset `start`: magic/CM,
     FLG bit walk (FEXTRA, FNAME, FCOMMENT, FHCRC), header CRC16, full
     inflate of the deflate body via this repo's RFC 1951 decoder, CRC32 +
-    ISIZE trailer — every check with _crc32_own. Returns (fname, mtime,
+    ISIZE trailer — every check with bitio.crc32. Returns (fname, mtime,
     payload, end_offset) where end_offset is the first byte after the
     member's trailer (the next member of a concatenated stream starts
     there); ValueError on any violation."""
@@ -2615,7 +2459,7 @@ def gzip_member_parse_at(stream: bytes, start: int) -> tuple[str, int, bytes, in
         pos = end + 1
     if flg & 0x02:  # FHCRC: CRC16 of everything before it
         expect = int.from_bytes(stream[pos : pos + 2], "little")
-        if _crc32_own(stream[start:pos]) & 0xFFFF != expect:
+        if crc32(stream[start:pos]) & 0xFFFF != expect:
             raise ValueError("header CRC16 mismatch")
         pos += 2
     payload, data_end = inflate_at(stream, pos)
@@ -2623,7 +2467,7 @@ def gzip_member_parse_at(stream: bytes, start: int) -> tuple[str, int, bytes, in
         raise ValueError("truncated gzip trailer")
     crc = int.from_bytes(stream[data_end : data_end + 4], "little")
     isize = int.from_bytes(stream[data_end + 4 : data_end + 8], "little")
-    if _crc32_own(payload) != crc:
+    if crc32(payload) != crc:
         raise ValueError("payload CRC32 mismatch")
     if len(payload) & 0xFFFFFFFF != isize:
         raise ValueError("ISIZE mismatch")
@@ -2730,7 +2574,7 @@ def png_container_build(grid, source: str, np) -> bytes:
     """A complete, valid PNG file: 8-byte signature, IHDR (8-bit grayscale,
     no interlace), one tEXt chunk carrying the document's source tag, one
     IDAT holding the filtered grid in a stored-block zlib stream, IEND.
-    Chunk CRCs are stamped with the stdlib (adversarial to _crc32_own)."""
+    Chunk CRCs are stamped with the stdlib (adversarial to bitio.crc32)."""
     import zlib as _zlib
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
@@ -2757,7 +2601,7 @@ def png_container_build(grid, source: str, np) -> bytes:
 
 def png_container_walk(stream: bytes, np):
     """Walk a PNG file chunk by chunk: signature, per-chunk length/type/CRC
-    (validated with _crc32_own), IHDR field extraction, tEXt key/value split,
+    (validated with bitio.crc32), IHDR field extraction, tEXt key/value split,
     IDAT inflate + unfilter via the stored-block zlib path, IEND terminator.
     Returns (width, height, n_chunks, idat_len, texts, grid)."""
     if stream[:8] != b"\x89PNG\r\n\x1a\n":
@@ -2780,7 +2624,7 @@ def png_container_walk(stream: bytes, np):
         if len(data) != ln:
             raise ValueError("truncated chunk data")
         crc = int.from_bytes(stream[pos + 8 + ln : pos + 12 + ln], "big")
-        if _crc32_own(ctype + data) != crc:
+        if crc32(ctype + data) != crc:
             raise ValueError(f"CRC mismatch in {ctype!r}")
         n_chunks += 1
         if ctype == b"IHDR":
@@ -3294,7 +3138,7 @@ def zip_central_dir_walk(stream: bytes) -> list[tuple[str, int, int, bytes]]:
     directory (PK\\x01\\x02), cross-check each entry's local header
     (PK\\x03\\x04), decompress (stored as-is; deflate via this repo's
     RFC 1951 decoder), and validate the central directory's CRC-32 stamp
-    with _crc32_own. Returns [(name, method, uncomp_size, payload)];
+    with bitio.crc32. Returns [(name, method, uncomp_size, payload)];
     ValueError on any violation."""
     eocd = stream.rfind(b"PK\x05\x06")
     if eocd < 0:
@@ -3343,7 +3187,7 @@ def zip_central_dir_walk(stream: bytes) -> list[tuple[str, int, int, bytes]]:
             raise ValueError(f"unsupported compression method {method}")
         if len(payload) != uncomp_size:
             raise ValueError(f"uncompressed size mismatch for {name}")
-        if _crc32_own(payload) != crc:
+        if crc32(payload) != crc:
             raise ValueError(f"CRC-32 mismatch for {name}")
         out.append((name, method, uncomp_size, payload))
         pos += 46 + name_len + extra_len + comment_len
@@ -3887,17 +3731,10 @@ _AC_VALS = (
 
 
 def _huff_codes(bits, vals) -> dict[int, tuple[int, int]]:
-    """Canonical Huffman assignment per T.81 C.2: symbol -> (code, length)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+    """T.81 C.2: BITS (code count per length) + VALS -> symbol -> (code,
+    length), the canonical assignment taken over the VALS order."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln])]
+    return dict(zip(vals, canonical_codes(lengths)))
 
 
 def _huff_decode_map(bits, vals) -> dict[tuple[int, int], int]:
@@ -3906,39 +3743,16 @@ def _huff_decode_map(bits, vals) -> dict[tuple[int, int], int]:
     return {(ln, c): s for s, (c, ln) in _huff_codes(bits, vals).items()}
 
 
-class _JpegBitWriter:
-    """MSB-first bit writer with T.81 byte stuffing (FF -> FF 00) and a
-    1-fill flush (F.1.2.3)."""
+class _JpegBitWriter(MsbWriter):
+    """MSB-first bit writer whose flush adds T.81's 1-fill of the last byte
+    (F.1.2.3) and byte stuffing (FF -> FF 00)."""
 
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        # append the low `length` bits of code MSB-first, draining whole
-        # bytes (same stream as the bit-at-a-time form, fewer Python ops)
-        acc = (self.acc << length) | (code & ((1 << length) - 1))
-        n = self.n + length
-        out = self.out
-        while n >= 8:
-            n -= 8
-            b = (acc >> n) & 0xFF
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)
-        self.acc = acc & ((1 << n) - 1)
-        self.n = n
+    __slots__ = ()
 
     def flush(self) -> bytes:
-        if self.n:
-            self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
+        pad = -self.nbits & 7
+        self.write((1 << pad) - 1, pad)
+        return self.getvalue().replace(b"\xff", b"\xff\x00")
 
 
 class _JpegBitReader:
@@ -5270,25 +5084,6 @@ def mm_quoted_printable_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-class _BzBits:
-    """MSB-first bit reader over the whole stream (bzip2's convention)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        end_byte = (self.bit + n + 7) // 8
-        if end_byte > len(self.data):
-            raise ValueError("bzip2 bitstream overrun")
-        out = 0
-        for i in range(n):
-            b = self.data[(self.bit + i) >> 3]
-            out = (out << 1) | ((b >> (7 - ((self.bit + i) & 7))) & 1)
-        self.bit += n
-        return out
-
-
 def _bz_crc32(data: bytes, crc: int = 0xFFFFFFFF) -> int:
     """bzip2's CRC-32: polynomial 0x04C11DB7, MSB-first (NOT the reflected
     zlib variant), final complement."""
@@ -5314,9 +5109,9 @@ def bzip2_decompress(data: bytes) -> bytes:
     garbage after the final footer raises. Raises ValueError on any
     framing or checksum violation."""
     out_all = bytearray()
-    bs = _BzBits(data)
+    bs = MsbReader(data)
     while True:  # one complete stream per iteration (byte-aligned)
-        pos = bs.bit // 8
+        pos = bs.align_byte()
         if pos >= len(data):
             break
         head = data[pos : pos + 4]
@@ -5325,18 +5120,16 @@ def bzip2_decompress(data: bytes) -> bytes:
                 raise ValueError("trailing bytes after final bzip2 stream")
             raise ValueError("missing BZh header")
         block_limit = (head[3] - 0x30) * 100_000
-        bs.bit = (pos + 4) * 8
+        bs.pos = pos + 4
         combined_crc = 0
         _bz_stream_blocks(data, bs, block_limit, out_all, combined_crc)
-        # re-align to the byte boundary for a possible next stream
-        bs.bit = (bs.bit + 7) // 8 * 8
     if not out_all and len(data) == 0:
         raise ValueError("empty input")
     return bytes(out_all)
 
 
 def _bz_stream_blocks(
-    data: bytes, bs: "_BzBits", block_limit: int, out_all: bytearray,
+    data: bytes, bs: MsbReader, block_limit: int, out_all: bytearray,
     combined_crc: int,
 ) -> None:
     while True:
@@ -5395,14 +5188,8 @@ def _bz_stream_blocks(
                     if not 1 <= ln <= 20:
                         raise ValueError("huffman length out of range")
                 lens.append(ln)
-            codes = {}
-            code = 0
-            for bit_len in range(min(lens), max(lens) + 1):
-                for sym, sl in enumerate(lens):
-                    if sl == bit_len:
-                        codes[(bit_len, code)] = sym
-                        code += 1
-                code <<= 1
+            codes = {(sl, c): sym
+                     for sym, (c, sl) in enumerate(canonical_codes(lens))}
             tables.append((codes, min(lens), max(lens)))
         # symbol stream: 50 per selector group
         mtf = list(used)
@@ -5578,41 +5365,6 @@ def _denc_hit(key: str) -> None:
     DEFLATE_ENC_STATS[key] = DEFLATE_ENC_STATS.get(key, 0) + 1
 
 
-class _BitWriter:
-    """LSB-first bit writer (DEFLATE bit order). Huffman codes go through
-    put_code, which reverses them (the spec packs codes MSB-first)."""
-
-    __slots__ = ("out", "cur", "nbits")
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def put(self, value: int, width: int) -> None:
-        self.cur |= (value & ((1 << width) - 1)) << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append(self.cur & 0xFF)
-            self.cur >>= 8
-            self.nbits -= 8
-
-    def put_code(self, code: int, width: int) -> None:
-        for b in range(width - 1, -1, -1):
-            self.put((code >> b) & 1, 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.out.append(self.cur & 0xFF)
-        self.cur = 0
-        self.nbits = 0
-
-    def bytes(self) -> bytes:
-        if self.nbits:
-            return bytes(self.out + bytearray([self.cur & 0xFF]))
-        return bytes(self.out)
-
-
 def _package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
     """Optimal length-limited prefix-code lengths (package-merge). Returns
     {symbol: length} with every length in [1, limit] and the Kraft sum
@@ -5643,26 +5395,13 @@ def _package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
     return lengths
 
 
-def _canonical_codes(lengths: list[int]) -> list[tuple[int, int]]:
-    """Symbol -> (code, nbits) per RFC 1951 §3.2.2 (0 bits = unused)."""
-    max_len = max(lengths, default=0)
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for bits in range(1, max_len + 1):
-        code = (code + bl_count[bits - 1]) << 1
-        next_code[bits] = code
-    out = []
-    for ln in lengths:
-        if ln:
-            out.append((next_code[ln], ln))
-            next_code[ln] += 1
-        else:
-            out.append((0, 0))
-    return out
+def _lsb_codes(lengths: list[int]) -> list[tuple[int, int]]:
+    """Canonical codes bit-reversed for an LsbWriter: DEFLATE packs a
+    Huffman code's MSB first into its LSB-first stream."""
+    return [
+        (int(f"{c:0{ln}b}"[::-1], 2) if ln else 0, ln)
+        for c, ln in canonical_codes(lengths)
+    ]
 
 
 def _lz77_tokens(data: bytes, max_chain: int = 64):
@@ -5723,25 +5462,25 @@ def _dist_code(d: int) -> tuple[int, int, int]:
     raise ValueError(f"bad match distance {d}")
 
 
-def _emit_tokens(bw: _BitWriter, tokens, lit_codes, dist_codes) -> None:
+def _emit_tokens(bw: LsbWriter, tokens, lit_codes, dist_codes) -> None:
     for t in tokens:
         if isinstance(t, tuple):
             ln, d = t
             sym, xb, xv = _len_code(ln)
             c, w = lit_codes[sym]
-            bw.put_code(c, w)
+            bw.write(c, w)
             if xb:
-                bw.put(xv, xb)
+                bw.write(xv, xb)
             sym, xb, xv = _dist_code(d)
             c, w = dist_codes[sym]
-            bw.put_code(c, w)
+            bw.write(c, w)
             if xb:
-                bw.put(xv, xb)
+                bw.write(xv, xb)
         else:
             c, w = lit_codes[t]
-            bw.put_code(c, w)
+            bw.write(c, w)
     c, w = lit_codes[256]
-    bw.put_code(c, w)  # end-of-block
+    bw.write(c, w)  # end-of-block
 
 
 def _rle_code_lengths(lengths: list[int]):
@@ -5778,13 +5517,13 @@ def _rle_code_lengths(lengths: list[int]):
 
 
 def _emit_fixed(tokens) -> bytes:
-    bw = _BitWriter()
-    bw.put(1, 1)  # BFINAL
-    bw.put(1, 2)  # BTYPE=01 fixed
-    lit_codes = _canonical_codes([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
-    dist_codes = _canonical_codes([5] * 30)
+    bw = LsbWriter()
+    bw.write(1, 1)  # BFINAL
+    bw.write(1, 2)  # BTYPE=01 fixed
+    lit_codes = _lsb_codes([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
+    dist_codes = _lsb_codes([5] * 30)
     _emit_tokens(bw, tokens, lit_codes, dist_codes)
-    return bw.bytes()
+    return bw.getvalue()
 
 
 def _emit_dynamic(tokens) -> bytes:
@@ -5813,33 +5552,32 @@ def _emit_dynamic(tokens) -> bytes:
     hclen = len(_CLEN_ORDER)
     while hclen > 4 and cl_lengths[_CLEN_ORDER[hclen - 1]] == 0:
         hclen -= 1
-    bw = _BitWriter()
-    bw.put(1, 1)  # BFINAL
-    bw.put(2, 2)  # BTYPE=10 dynamic
-    bw.put(hlit - 257, 5)
-    bw.put(hdist - 1, 5)
-    bw.put(hclen - 4, 4)
+    bw = LsbWriter()
+    bw.write(1, 1)  # BFINAL
+    bw.write(2, 2)  # BTYPE=10 dynamic
+    bw.write(hlit - 257, 5)
+    bw.write(hdist - 1, 5)
+    bw.write(hclen - 4, 4)
     for k in range(hclen):
-        bw.put(cl_lengths[_CLEN_ORDER[k]], 3)
-    cl_codes = _canonical_codes(cl_lengths)
+        bw.write(cl_lengths[_CLEN_ORDER[k]], 3)
+    cl_codes = _lsb_codes(cl_lengths)
     for sym, xb, xv in rle:
         c, w = cl_codes[sym]
-        bw.put_code(c, w)
+        bw.write(c, w)
         if xb:
-            bw.put(xv, xb)
-    lit_codes = _canonical_codes(lit_lengths)
-    dist_codes = _canonical_codes(dist_lengths)
+            bw.write(xv, xb)
+    lit_codes = _lsb_codes(lit_lengths)
+    dist_codes = _lsb_codes(dist_lengths)
     _emit_tokens(bw, tokens, lit_codes, dist_codes)
-    return bw.bytes()
+    return bw.getvalue()
 
 
 def _emit_stored(data: bytes) -> bytes:
-    bw = _BitWriter()
-    bw.put(1, 1)  # BFINAL
-    bw.put(0, 2)  # BTYPE=00 stored
-    bw.align()
+    bw = LsbWriter()
+    bw.write(1, 1)  # BFINAL
+    bw.write(0, 2)  # BTYPE=00 stored
     n = len(data)
-    return bw.bytes() + n.to_bytes(2, "little") + (
+    return bw.getvalue() + n.to_bytes(2, "little") + (
         n ^ 0xFFFF
     ).to_bytes(2, "little") + data
 
@@ -5948,31 +5686,6 @@ def _bzenc_hit(key: str) -> None:
     BZ_ENC_STATS[key] = BZ_ENC_STATS.get(key, 0) + 1
 
 
-class _BzBitW:
-    """MSB-first bit writer (bzip2's convention, mirror of _BzBits)."""
-
-    __slots__ = ("out", "cur", "nbits")
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def put(self, value: int, width: int) -> None:
-        for i in range(width - 1, -1, -1):
-            self.cur = (self.cur << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.cur)
-                self.cur = 0
-                self.nbits = 0
-
-    def bytes_padded(self) -> bytes:
-        if self.nbits:
-            return bytes(self.out + bytearray([self.cur << (8 - self.nbits)]))
-        return bytes(self.out)
-
-
 def _bz_rle1_encode(data: bytes) -> bytes:
     """bzip2's first-stage RLE: a run of 4-259 equal bytes becomes 4 copies
     plus an extra-repeat count byte (longer runs split)."""
@@ -6057,29 +5770,14 @@ def _bwt_rotations(block: bytes) -> tuple[bytes, int]:
     return last, int(np.nonzero(order == 0)[0][0])
 
 
-def _bz_canonical(lens: list[int]) -> list[tuple[int, int]]:
-    """sym -> (code, length) with bzip2's canonical walk (increasing
-    length, symbol order within a length) — the mirror of the decoder's
-    table construction above."""
-    out = [(0, 0)] * len(lens)
-    code = 0
-    for ln in range(min(lens), max(lens) + 1):
-        for sym, sl in enumerate(lens):
-            if sl == ln:
-                out[sym] = (code, ln)
-                code += 1
-        code <<= 1
-    return out
-
-
-def _bz_encode_block(bw: "_BzBitW", rle1: bytes, crc: int) -> None:
+def _bz_encode_block(bw: MsbWriter, rle1: bytes, crc: int) -> None:
     from flock_spark.operators.multimodal import _package_merge
 
-    bw.put(0x314159265359, 48)
-    bw.put(crc, 32)
-    bw.put(0, 1)  # randomized: deprecated, always 0
+    bw.write(0x314159265359, 48)
+    bw.write(crc, 32)
+    bw.write(0, 1)  # randomized: deprecated, always 0
     bwt, orig_ptr = _bwt_rotations(rle1)
-    bw.put(orig_ptr, 24)
+    bw.write(orig_ptr, 24)
     used = sorted(set(bwt))
     alpha = len(used) + 2
     # MTF + RLE2 over the used alphabet
@@ -6109,14 +5807,14 @@ def _bz_encode_block(bw: "_BzBitW", rle1: bytes, crc: int) -> None:
     ranges = 0
     for u in used:
         ranges |= 0x8000 >> (u >> 4)
-    bw.put(ranges, 16)
+    bw.write(ranges, 16)
     for r in range(16):
         if ranges & (0x8000 >> r):
             m = 0
             for u in used:
                 if u >> 4 == r:
                     m |= 0x8000 >> (u & 15)
-            bw.put(m, 16)
+            bw.write(m, 16)
     # one global length-limited Huffman table, duplicated (the format
     # demands >= 2 groups; identical tables with all-zero selectors are
     # valid, just suboptimal vs a real group planner)
@@ -6125,28 +5823,28 @@ def _bz_encode_block(bw: "_BzBitW", rle1: bytes, crc: int) -> None:
         freqs[s] += 1
     lens_map = _package_merge(freqs, 17)
     lens = [lens_map[s] for s in range(alpha)]
-    codes = _bz_canonical(lens)
+    codes = canonical_codes(lens)
     n_sel = (len(syms) + 49) // 50
-    bw.put(2, 3)  # n_groups
-    bw.put(n_sel, 15)
+    bw.write(2, 3)  # n_groups
+    bw.write(n_sel, 15)
     for _ in range(n_sel):
-        bw.put(0, 1)  # selector MTF index 0 -> unary terminator alone
+        bw.write(0, 1)  # selector MTF index 0 -> unary terminator alone
     for _ in range(2):
         cur = lens[0]
-        bw.put(cur, 5)
+        bw.write(cur, 5)
         for target in lens:
             while cur != target:
-                bw.put(1, 1)
+                bw.write(1, 1)
                 if target > cur:
-                    bw.put(0, 1)
+                    bw.write(0, 1)
                     cur += 1
                 else:
-                    bw.put(1, 1)
+                    bw.write(1, 1)
                     cur -= 1
-            bw.put(0, 1)
+            bw.write(0, 1)
     for s in syms:
         code, ln = codes[s]
-        bw.put(code, ln)
+        bw.write(code, ln)
 
 
 def bzip2_compress(
@@ -6160,9 +5858,9 @@ def bzip2_compress(
     if not 1 <= level <= 9:
         raise ValueError("bzip2 level must be 1..9")
     cap = block_cap if block_cap is not None else level * 100_000 - 19
-    bw = _BzBitW()
-    bw.put(0x425A68, 24)  # 'BZh'
-    bw.put(0x30 + level, 8)
+    bw = MsbWriter()
+    bw.write(0x425A68, 24)  # 'BZh'
+    bw.write(0x30 + level, 8)
     combined = 0
     if data:
         segs = _bz_segments(data, cap)
@@ -6176,9 +5874,9 @@ def bzip2_compress(
             _bz_encode_block(bw, rle1, crc)
     else:
         _bzenc_hit("stream:empty")
-    bw.put(0x177245385090, 48)
-    bw.put(combined, 32)
-    return bw.bytes_padded()
+    bw.write(0x177245385090, 48)
+    bw.write(combined, 32)
+    return bw.getvalue()
 
 
 @register(

@@ -30,6 +30,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from flock_spark.operators.bitio import MsbReader, read_uvarint, unzigzag
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -47,26 +48,6 @@ def _hit(key: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _uvarint(d: bytes, p: int) -> tuple[int, int]:
-    v = 0
-    s = 0
-    while True:
-        if p >= len(d):
-            raise ValueError("varint past end of buffer")
-        b = d[p]
-        p += 1
-        v |= (b & 0x7F) << s
-        s += 7
-        if not b & 0x80:
-            return v, p
-        if s > 70:
-            raise ValueError("varint too long")
-
-
-def _unzig(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def pb_decode(data: bytes) -> dict[int, list]:
     """One protobuf message as {field_number: [values]}: varints as ints,
     length-delimited as bytes, fixed32/64 as raw bytes. Nested messages
@@ -74,14 +55,14 @@ def pb_decode(data: bytes) -> dict[int, list]:
     out: dict[int, list] = {}
     pos = 0
     while pos < len(data):
-        tag, pos = _uvarint(data, pos)
+        tag, pos = read_uvarint(data, pos)
         fnum, wt = tag >> 3, tag & 7
         if fnum == 0:
             raise ValueError("field number 0 is reserved")
         if wt == 0:
-            v, pos = _uvarint(data, pos)
+            v, pos = read_uvarint(data, pos)
         elif wt == 2:
-            ln, pos = _uvarint(data, pos)
+            ln, pos = read_uvarint(data, pos)
             if pos + ln > len(data):
                 raise ValueError("length-delimited field past end")
             v = data[pos : pos + ln]
@@ -102,7 +83,7 @@ def pb_packed_uvarints(data: bytes) -> list[int]:
     out = []
     pos = 0
     while pos < len(data):
-        v, pos = _uvarint(data, pos)
+        v, pos = read_uvarint(data, pos)
         out.append(v)
     return out
 
@@ -163,21 +144,12 @@ def byte_rle_decode(d: bytes) -> bytes:
 
 def bool_stream_decode(d: bytes, n: int) -> list[bool]:
     """PRESENT stream: Byte-RLE bytes read as bits MSB-first."""
-    raw = byte_rle_decode(d)
-    if len(raw) * 8 < n:
-        raise ValueError("present stream shorter than row count")
-    return [bool(raw[i >> 3] & (0x80 >> (i & 7))) for i in range(n)]
+    read = MsbReader(byte_rle_decode(d)).read
+    return [bool(read(1)) for _ in range(n)]
 
 
 _RLE_WIDTH = (1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18,
               19, 20, 21, 22, 23, 24, 26, 28, 30, 32, 40, 48, 56, 64)
-
-
-def _bits_msb(d: bytes, bit: int, w: int) -> int:
-    out = 0
-    for i in range(w):
-        out = (out << 1) | ((d[(bit + i) >> 3] >> (7 - ((bit + i) & 7))) & 1)
-    return out
 
 
 def rlev2_decode(d: bytes, signed: bool) -> list[int]:
@@ -198,17 +170,16 @@ def rlev2_decode(d: bytes, signed: bool) -> list[int]:
             rep = (h & 7) + 3
             v = int.from_bytes(d[p + 1 : p + 1 + w], "big")
             p += 1 + w
-            vals.extend([_unzig(v) if signed else v] * rep)
+            vals.extend([unzigzag(v) if signed else v] * rep)
         elif enc == 1:  # DIRECT
             _hit("rlev2_direct")
             w = _RLE_WIDTH[(h >> 1) & 31]
             n = (((h & 1) << 8) | d[p + 1]) + 1
-            p += 2
-            bit = p * 8
-            for i in range(n):
-                v = _bits_msb(d, bit + i * w, w)
-                vals.append(_unzig(v) if signed else v)
-            p += (n * w + 7) // 8
+            br = MsbReader(d, p + 2)
+            for _ in range(n):
+                v = br.read(w)
+                vals.append(unzigzag(v) if signed else v)
+            p = br.align_byte()
         elif enc == 2:  # PATCHED_BASE
             _hit("rlev2_patched_base")
             w = _RLE_WIDTH[(h >> 1) & 31]
@@ -222,26 +193,24 @@ def rlev2_decode(d: bytes, signed: bool) -> list[int]:
             base = int.from_bytes(d[p : p + bw], "big")
             if base & (1 << (bw * 8 - 1)):  # MSB sign bit, not two's compl.
                 base = -(base & ((1 << (bw * 8 - 1)) - 1))
-            p += bw
-            bit = p * 8
-            data_vals = [_bits_msb(d, bit + i * w, w) for i in range(n)]
-            p += (n * w + 7) // 8
+            br = MsbReader(d, p + bw)
+            data_vals = [br.read(w) for _ in range(n)]
+            br.align_byte()
             # each patch entry is stored in closestFixedBits(pgw + pw)
             # bits (the width table rounds 55 up to 56, etc.); the value
             # still lives in the LOW pgw+pw bits of the slot
             need = pgw + pw
             entry_w = next(w2 for w2 in _RLE_WIDTH if w2 >= need)
-            bit = p * 8
             gap_pos = 0
-            for i in range(pll):
-                entry = _bits_msb(d, bit + i * entry_w, entry_w)
+            for _ in range(pll):
+                entry = br.read(entry_w)
                 gap = entry >> pw
                 patch = entry & ((1 << pw) - 1)
                 gap_pos += gap
                 if gap_pos >= n:
                     raise ValueError("patch gap beyond run length")
                 data_vals[gap_pos] |= patch << w
-            p += (pll * entry_w + 7) // 8
+            p = br.align_byte()
             vals.extend(base + v for v in data_vals)
         else:  # DELTA
             _hit("rlev2_delta")
@@ -250,12 +219,12 @@ def rlev2_decode(d: bytes, signed: bool) -> list[int]:
             n = (((h & 1) << 8) | d[p + 1]) + 1
             p += 2
             if signed:
-                raw, p = _uvarint(d, p)
-                base = _unzig(raw)
+                raw, p = read_uvarint(d, p)
+                base = unzigzag(raw)
             else:
-                base, p = _uvarint(d, p)
-            raw, p = _uvarint(d, p)
-            delta0 = _unzig(raw)
+                base, p = read_uvarint(d, p)
+            raw, p = read_uvarint(d, p)
+            delta0 = unzigzag(raw)
             vals.append(base)
             if n >= 2:
                 cur = base + delta0
@@ -266,12 +235,12 @@ def rlev2_decode(d: bytes, signed: bool) -> list[int]:
                             cur += delta0
                             vals.append(cur)
                     else:
-                        bit = p * 8
+                        br = MsbReader(d, p)
                         sign = 1 if delta0 >= 0 else -1
-                        for i in range(n - 2):
-                            cur += sign * _bits_msb(d, bit + i * w, w)
+                        for _ in range(n - 2):
+                            cur += sign * br.read(w)
                             vals.append(cur)
-                        p += ((n - 2) * w + 7) // 8
+                        p = br.align_byte()
     return vals
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flock_spark.operators.bitio import MsbWriter, write_uvarint, zigzag
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -45,28 +46,16 @@ def _hit(key: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def pb_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def pb_field_varint(fid: int, v: int) -> bytes:
-    return pb_varint((fid << 3) | 0) + pb_varint(v)
+    return write_uvarint((fid << 3) | 0) + write_uvarint(v)
 
 
 def pb_field_bytes(fid: int, b: bytes) -> bytes:
-    return pb_varint((fid << 3) | 2) + pb_varint(len(b)) + b
+    return write_uvarint((fid << 3) | 2) + write_uvarint(len(b)) + b
 
 
 def pb_field_packed(fid: int, vals: list[int]) -> bytes:
-    return pb_field_bytes(fid, b"".join(pb_varint(v) for v in vals))
+    return pb_field_bytes(fid, b"".join(write_uvarint(v) for v in vals))
 
 
 # ---------------------------------------------------------------------------
@@ -77,10 +66,6 @@ _RLE_WIDTH = (1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18,
               19, 20, 21, 22, 23, 24, 26, 28, 30, 32, 40, 48, 56, 64)
 
 
-def _zig(v: int) -> int:
-    return (v << 1) ^ (v >> 63)
-
-
 def _width_code(w: int) -> int:
     for i, cw in enumerate(_RLE_WIDTH):
         if cw >= w:
@@ -89,14 +74,10 @@ def _width_code(w: int) -> int:
 
 
 def _pack_msb(vals: list[int], w: int) -> bytes:
-    out = bytearray((len(vals) * w + 7) // 8)
-    bit = 0
+    bw = MsbWriter()
     for v in vals:
-        for i in range(w - 1, -1, -1):
-            if (v >> i) & 1:
-                out[bit >> 3] |= 0x80 >> (bit & 7)
-            bit += 1
-    return bytes(out)
+        bw.write(v, w)
+    return bw.getvalue()
 
 
 def _try_patched_base(vals: list[int]) -> bytes | None:
@@ -165,7 +146,7 @@ def rlev2_encode(vals: list[int], signed: bool) -> bytes:
         while j < n and j - i < 512 and vals[j] == vals[i]:
             j += 1
         if 3 <= j - i <= 10:
-            v = _zig(vals[i]) if signed else vals[i]
+            v = zigzag(vals[i]) if signed else vals[i]
             w = max(1, (v.bit_length() + 7) // 8)
             out.append(((w - 1) & 7) << 3 | ((j - i) - 3))
             out += v.to_bytes(w, "big")
@@ -187,8 +168,8 @@ def rlev2_encode(vals: list[int], signed: bool) -> bytes:
             delta = vals[i + 1] - vals[i]
             out.append((3 << 6) | ((run - 1) >> 8))
             out.append((run - 1) & 0xFF)
-            out += pb_varint(_zig(base)) if signed else pb_varint(base)
-            out += pb_varint(_zig(delta))
+            out += write_uvarint(zigzag(base) if signed else base)
+            out += write_uvarint(zigzag(delta))
             _hit("enc_delta")
             i += run
             continue
@@ -201,7 +182,7 @@ def rlev2_encode(vals: list[int], signed: bool) -> bytes:
             continue
         # DIRECT over up to 512 values
         enc = [
-            _zig(v) if signed else v for v in vals[i : i + run]
+            zigzag(v) if signed else v for v in vals[i : i + run]
         ]
         w = _RLE_WIDTH[_width_code(max(1, max(enc).bit_length()))]
         code = _width_code(w)
@@ -247,11 +228,10 @@ def byte_rle_encode(data: bytes) -> bytes:
 
 
 def bool_stream_encode(flags: list[bool]) -> bytes:
-    raw = bytearray((len(flags) + 7) // 8)
-    for i, f in enumerate(flags):
-        if f:
-            raw[i >> 3] |= 0x80 >> (i & 7)
-    return byte_rle_encode(bytes(raw))
+    bw = MsbWriter()
+    for f in flags:
+        bw.write(f, 1)
+    return byte_rle_encode(bw.getvalue())
 
 
 def orc_chunks_compress(raw: bytes, block: int = 262144) -> bytes:

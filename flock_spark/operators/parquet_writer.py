@@ -22,7 +22,7 @@ What the writer emits, all from the spec:
   v1 layout);
 - per-column CODECS exercised with this repo's OWN encoders — GZIP
   pages wrap ``multimodal.deflate_compress`` (the from-spec DEFLATE
-  encoder) in a from-spec RFC 1952 member with ``_crc32_own`` trailer,
+  encoder) in a from-spec RFC 1952 member with ``bitio.crc32`` trailer,
   SNAPPY pages use a spec-minimal literal-run encoder, and one column
   stays UNCOMPRESSED;
 - three ROW GROUPS with per-group column chunks, correct
@@ -45,6 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flock_spark.operators.bitio import crc32, write_uvarint, zigzag
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -63,24 +64,8 @@ CT_TRUE, CT_FALSE, CT_BYTE, CT_I16, CT_I32, CT_I64 = 1, 2, 3, 4, 5, 6
 CT_DOUBLE, CT_BINARY, CT_LIST, CT_STRUCT = 7, 8, 9, 12
 
 
-def tc_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def tc_zig(v: int) -> bytes:
-    return tc_varint((v << 1) ^ (v >> 63))
-
-
 def tc_binary(b: bytes) -> bytes:
-    return tc_varint(len(b)) + b
+    return write_uvarint(len(b)) + b
 
 
 def tc_list(elem_type: int, items: list[bytes]) -> bytes:
@@ -88,7 +73,7 @@ def tc_list(elem_type: int, items: list[bytes]) -> bytes:
     if n < 15:
         head = bytes([(n << 4) | elem_type])
     else:
-        head = bytes([0xF0 | elem_type]) + tc_varint(n)
+        head = bytes([0xF0 | elem_type]) + write_uvarint(n)
         _hit("thrift:long_list")
     return head + b"".join(items)
 
@@ -104,7 +89,7 @@ def tc_struct(fields: list[tuple[int, int, bytes]]) -> bytes:
             out.append((delta << 4) | ctype)
         else:
             out.append(ctype)
-            out += tc_zig(fid)
+            out += write_uvarint(zigzag(fid))
             _hit("thrift:long_field")
         out += payload
         last = fid
@@ -128,7 +113,7 @@ def rle_hybrid_encode(values: list[int], bit_width: int) -> bytes:
         j = i
         while j < n and values[j] == v:
             j += 1
-        out += tc_varint((j - i) << 1)  # RLE run header (LSB 0)
+        out += write_uvarint((j - i) << 1)  # RLE run header (LSB 0)
         out += v.to_bytes(nbytes, "little")
         i = j
     return bytes(out)
@@ -142,7 +127,7 @@ def rle_hybrid_encode(values: list[int], bit_width: int) -> bytes:
 def snappy_literal_compress(raw: bytes) -> bytes:
     """Spec-minimal snappy: uncompressed-length preamble + literal runs
     (1- and 2-byte extended length tags for long runs)."""
-    out = bytearray(tc_varint(len(raw)))
+    out = bytearray(write_uvarint(len(raw)))
     i = 0
     while i < len(raw):
         chunk = raw[i : i + 65536]
@@ -163,11 +148,11 @@ def snappy_literal_compress(raw: bytes) -> bytes:
 def gzip_own_compress(raw: bytes) -> bytes:
     """RFC 1952 member around this repo's from-spec DEFLATE encoder, with
     the CRC32/ISIZE trailer from the repo's own CRC table."""
-    from flock_spark.operators.multimodal import _crc32_own, deflate_compress
+    from flock_spark.operators.multimodal import deflate_compress
 
     hdr = b"\x1f\x8b\x08\x00\x00\x00\x00\x00\x00\xff"
     body = deflate_compress(raw)
-    trailer = _crc32_own(raw).to_bytes(4, "little")
+    trailer = crc32(raw).to_bytes(4, "little")
     trailer += (len(raw) & 0xFFFFFFFF).to_bytes(4, "little")
     return hdr + body + trailer
 
@@ -199,9 +184,9 @@ def _page_header(
     page_type: int, unc: int, comp: int, inner_fid: int, inner: bytes
 ) -> bytes:
     return tc_struct([
-        (1, CT_I32, tc_zig(page_type)),
-        (2, CT_I32, tc_zig(unc)),
-        (3, CT_I32, tc_zig(comp)),
+        (1, CT_I32, write_uvarint(zigzag(page_type))),
+        (2, CT_I32, write_uvarint(zigzag(unc))),
+        (3, CT_I32, write_uvarint(zigzag(comp))),
         (inner_fid, CT_STRUCT, inner),
     ])
 
@@ -211,10 +196,11 @@ def _data_page(
 ) -> tuple[bytes, int]:
     comp = _CODEC_FN[codec](payload)
     inner = tc_struct([
-        (1, CT_I32, tc_zig(num_values)),
-        (2, CT_I32, tc_zig(encoding)),
-        (3, CT_I32, tc_zig(_ENC_RLE)),  # definition levels
-        (4, CT_I32, tc_zig(_ENC_RLE)),  # repetition levels (absent, flat)
+        (1, CT_I32, write_uvarint(zigzag(num_values))),
+        (2, CT_I32, write_uvarint(zigzag(encoding))),
+        (3, CT_I32, write_uvarint(zigzag(_ENC_RLE))),  # definition levels
+        # repetition levels (absent, flat)
+        (4, CT_I32, write_uvarint(zigzag(_ENC_RLE))),
     ])
     hdr = _page_header(0, len(payload), len(comp), 5, inner)
     # spec: chunk size totals count the page headers on both sides
@@ -224,8 +210,8 @@ def _data_page(
 def _dict_page(payload: bytes, num_values: int, codec: int) -> tuple[bytes, int]:
     comp = _CODEC_FN[codec](payload)
     inner = tc_struct([
-        (1, CT_I32, tc_zig(num_values)),
-        (2, CT_I32, tc_zig(_ENC_PLAIN_DICT)),
+        (1, CT_I32, write_uvarint(zigzag(num_values))),
+        (2, CT_I32, write_uvarint(zigzag(_ENC_PLAIN_DICT))),
     ])
     hdr = _page_header(2, len(payload), len(comp), 7, inner)
     return hdr + comp, len(hdr) + len(payload)
@@ -236,17 +222,18 @@ def _column_meta(
     unc_size: int, comp_size: int, data_off: int, dict_off: int | None,
 ) -> bytes:
     fields = [
-        (1, CT_I32, tc_zig(phys)),
-        (2, CT_LIST, tc_list(CT_I32, [tc_zig(e) for e in encodings])),
+        (1, CT_I32, write_uvarint(zigzag(phys))),
+        (2, CT_LIST,
+         tc_list(CT_I32, [write_uvarint(zigzag(e)) for e in encodings])),
         (3, CT_LIST, tc_list(CT_BINARY, [tc_binary(path.encode())])),
-        (4, CT_I32, tc_zig(codec)),
-        (5, CT_I64, tc_zig(num_values)),
-        (6, CT_I64, tc_zig(unc_size)),
-        (7, CT_I64, tc_zig(comp_size)),
-        (9, CT_I64, tc_zig(data_off)),
+        (4, CT_I32, write_uvarint(zigzag(codec))),
+        (5, CT_I64, write_uvarint(zigzag(num_values))),
+        (6, CT_I64, write_uvarint(zigzag(unc_size))),
+        (7, CT_I64, write_uvarint(zigzag(comp_size))),
+        (9, CT_I64, write_uvarint(zigzag(data_off))),
     ]
     if dict_off is not None:
-        fields.append((11, CT_I64, tc_zig(dict_off)))
+        fields.append((11, CT_I64, write_uvarint(zigzag(dict_off))))
     return tc_struct(fields)
 
 
@@ -317,18 +304,19 @@ def parquet_write_documents(rows: list[tuple]) -> bytes:
                 phys, encs, path, codec, nv, unc, comp, doff, dictoff
             )
             col_structs.append(tc_struct([
-                (2, CT_I64, tc_zig(dictoff if dictoff is not None else doff)),
+                (2, CT_I64, write_uvarint(
+                    zigzag(dictoff if dictoff is not None else doff))),
                 (3, CT_STRUCT, meta),
             ]))
         rg_structs.append(tc_struct([
             (1, CT_LIST, tc_list(CT_STRUCT, col_structs)),
-            (2, CT_I64, tc_zig(total)),
-            (3, CT_I64, tc_zig(num)),
+            (2, CT_I64, write_uvarint(zigzag(total))),
+            (3, CT_I64, write_uvarint(zigzag(num))),
         ]))
     # --- schema tree ---
     schema = [tc_struct([
         (4, CT_BINARY, tc_binary(b"spark_schema")),
-        (5, CT_I32, tc_zig(4)),
+        (5, CT_I32, write_uvarint(zigzag(4))),
     ])]
     for name, phys, rep, utf8 in (
         ("doc_id", _TYPE_INT64, 0, False),
@@ -337,17 +325,18 @@ def parquet_write_documents(rows: list[tuple]) -> bytes:
         ("source", _TYPE_BYTE_ARRAY, 0, True),
     ):
         fields = [
-            (1, CT_I32, tc_zig(phys)),
-            (3, CT_I32, tc_zig(rep)),
+            (1, CT_I32, write_uvarint(zigzag(phys))),
+            (3, CT_I32, write_uvarint(zigzag(rep))),
             (4, CT_BINARY, tc_binary(name.encode())),
         ]
         if utf8:
-            fields.append((6, CT_I32, tc_zig(0)))  # ConvertedType UTF8
+            # ConvertedType UTF8
+            fields.append((6, CT_I32, write_uvarint(zigzag(0))))
         schema.append(tc_struct(fields))
     footer = tc_struct([
-        (1, CT_I32, tc_zig(1)),  # version
+        (1, CT_I32, write_uvarint(zigzag(1))),  # version
         (2, CT_LIST, tc_list(CT_STRUCT, schema)),
-        (3, CT_I64, tc_zig(n)),
+        (3, CT_I64, write_uvarint(zigzag(n))),
         (4, CT_LIST, tc_list(CT_STRUCT, rg_structs)),
         (6, CT_BINARY, tc_binary(b"flock_spark from-spec writer")),
     ])
@@ -489,15 +478,15 @@ def delta_binary_packed_encode(vals: list[int]) -> bytes:
     4 miniblocks of 32, ULEB128 header, zigzag first value and min
     deltas, LSB-first bit packing, trailing miniblocks width-byte-only."""
     out = bytearray()
-    out += tc_varint(128)
-    out += tc_varint(4)
-    out += tc_varint(len(vals))
-    out += tc_zig(vals[0] if vals else 0)
+    out += write_uvarint(128)
+    out += write_uvarint(4)
+    out += write_uvarint(len(vals))
+    out += write_uvarint(zigzag(vals[0] if vals else 0))
     deltas = [b - a for a, b in zip(vals, vals[1:])]
     for bstart in range(0, len(deltas), 128):
         block = deltas[bstart : bstart + 128]
         min_d = min(block)
-        out += tc_zig(min_d)
+        out += write_uvarint(zigzag(min_d))
         adj = [d - min_d for d in block]
         widths = []
         bodies = []
@@ -553,12 +542,12 @@ def _data_page_v2(
     comp = _CODEC_FN[codec](values_payload)
     is_compressed = codec != 0
     inner = tc_struct([
-        (1, CT_I32, tc_zig(num_values)),
-        (2, CT_I32, tc_zig(num_nulls)),
-        (3, CT_I32, tc_zig(num_rows)),
-        (4, CT_I32, tc_zig(encoding)),
-        (5, CT_I32, tc_zig(len(dl))),
-        (6, CT_I32, tc_zig(0)),  # repetition levels: flat schema
+        (1, CT_I32, write_uvarint(zigzag(num_values))),
+        (2, CT_I32, write_uvarint(zigzag(num_nulls))),
+        (3, CT_I32, write_uvarint(zigzag(num_rows))),
+        (4, CT_I32, write_uvarint(zigzag(encoding))),
+        (5, CT_I32, write_uvarint(zigzag(len(dl)))),
+        (6, CT_I32, write_uvarint(zigzag(0))),  # repetition levels: flat schema
         (7, CT_TRUE if is_compressed else CT_FALSE, b""),
     ])
     unc = len(dl) + len(values_payload)
@@ -620,17 +609,17 @@ def parquet_write_documents_v2(rows: list[tuple]) -> bytes:
                 phys, encs, path, codec, nv, unc, comp, doff, dictoff
             )
             col_structs.append(tc_struct([
-                (2, CT_I64, tc_zig(doff)),
+                (2, CT_I64, write_uvarint(zigzag(doff))),
                 (3, CT_STRUCT, meta),
             ]))
         rg_structs.append(tc_struct([
             (1, CT_LIST, tc_list(CT_STRUCT, col_structs)),
-            (2, CT_I64, tc_zig(total)),
-            (3, CT_I64, tc_zig(num)),
+            (2, CT_I64, write_uvarint(zigzag(total))),
+            (3, CT_I64, write_uvarint(zigzag(num))),
         ]))
     schema = [tc_struct([
         (4, CT_BINARY, tc_binary(b"spark_schema")),
-        (5, CT_I32, tc_zig(4)),
+        (5, CT_I32, write_uvarint(zigzag(4))),
     ])]
     for name, phys, rep, utf8 in (
         ("doc_id", _TYPE_INT64, 0, False),
@@ -639,17 +628,17 @@ def parquet_write_documents_v2(rows: list[tuple]) -> bytes:
         ("source", _TYPE_BYTE_ARRAY, 0, True),
     ):
         fields = [
-            (1, CT_I32, tc_zig(phys)),
-            (3, CT_I32, tc_zig(rep)),
+            (1, CT_I32, write_uvarint(zigzag(phys))),
+            (3, CT_I32, write_uvarint(zigzag(rep))),
             (4, CT_BINARY, tc_binary(name.encode())),
         ]
         if utf8:
-            fields.append((6, CT_I32, tc_zig(0)))
+            fields.append((6, CT_I32, write_uvarint(zigzag(0))))
         schema.append(tc_struct(fields))
     footer = tc_struct([
-        (1, CT_I32, tc_zig(2)),  # version 2
+        (1, CT_I32, write_uvarint(zigzag(2))),  # version 2
         (2, CT_LIST, tc_list(CT_STRUCT, schema)),
-        (3, CT_I64, tc_zig(n)),
+        (3, CT_I64, write_uvarint(zigzag(n))),
         (4, CT_LIST, tc_list(CT_STRUCT, rg_structs)),
         (6, CT_BINARY, tc_binary(b"flock_spark from-spec writer v2")),
     ])

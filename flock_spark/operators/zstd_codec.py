@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flock_spark.catalog import spread, tbl
+from flock_spark.operators.bitio import LsbReader
 from flock_spark.registry import register
 
 ZSTD_MAGIC = 0xFD2FB528
@@ -118,10 +119,10 @@ def xxh64(data: bytes, seed: int = 0) -> int:
 
 
 # --------------------------------------------------------------------------
-# Bitstreams. Backward: read from a 1-bit sentinel at the top toward bit 0,
+# Backward bitstream: read from a 1-bit sentinel at the top toward bit 0,
 # multi-bit reads returning the top-first bits as one integer (the FSE /
-# Huffman convention). Forward: little-endian from bit 0 upward (the FSE
-# distribution-header convention).
+# Huffman convention). Forward streams (the FSE distribution header) read
+# little-endian from bit 0 upward with bitio.LsbReader.
 # --------------------------------------------------------------------------
 
 
@@ -160,28 +161,6 @@ class _BackBits:
         return (chunk << -p) & ((1 << n) - 1)
 
 
-class _FwdBits:
-    def __init__(self, data: bytes, pos_bytes: int):
-        self.data = data
-        self.bit = pos_bytes * 8
-
-    def read(self, n: int) -> int:
-        end = (self.bit + n + 7) // 8
-        if end > len(self.data):
-            raise ValueError("forward bitstream overrun")
-        chunk = int.from_bytes(self.data[self.bit // 8 : end], "little")
-        out = (chunk >> (self.bit % 8)) & ((1 << n) - 1)
-        self.bit += n
-        return out
-
-    def rewind(self, n: int) -> None:
-        self.bit -= n
-
-    def align_byte(self) -> int:
-        self.bit = (self.bit + 7) // 8 * 8
-        return self.bit // 8
-
-
 # --------------------------------------------------------------------------
 # FSE: distribution parsing and decode-table construction (RFC 8878 §4.1).
 # --------------------------------------------------------------------------
@@ -195,7 +174,7 @@ def fse_read_distribution(
     small-value encoding and 2-bit zero-repeat flags, byte-aligned at the
     end. Returns (accuracy_log, probs, next_byte_pos); probs may contain
     -1 for 'less than one' symbols."""
-    br = _FwdBits(data, pos)
+    br = LsbReader(data, pos)
     accuracy_log = br.read(4) + 5
     if accuracy_log > max_accuracy:
         raise ValueError(f"FSE accuracy {accuracy_log} > max {max_accuracy}")
@@ -205,14 +184,14 @@ def fse_read_distribution(
         if len(probs) >= max_symbols:
             raise ValueError("FSE distribution has too many symbols")
         bits = remaining.bit_length()
-        val = br.read(bits)
         lower_mask = (1 << (bits - 1)) - 1
         threshold = (1 << bits) - 1 - remaining
-        if (val & lower_mask) < threshold:
-            br.rewind(1)
-            val &= lower_mask
-        elif val > lower_mask:
-            val -= threshold
+        # small values take bits - 1 bits, the rest a full `bits`
+        val = br.read(bits - 1)
+        if val >= threshold:
+            val |= br.read(1) << (bits - 1)
+            if val > lower_mask:
+                val -= threshold
         prob = val - 1
         probs.append(prob)
         remaining -= -prob if prob < 0 else prob

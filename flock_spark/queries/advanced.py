@@ -1551,9 +1551,6 @@ def table_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_DRIFT_SQL)
 
 
-_AB_SQL_SPARK = None  # the A/B query shares SQL via the hashing primitive
-
-
 @register(
     "events_ab_test_zstat",
     oracle="""

@@ -1312,22 +1312,6 @@ TWS_ORACLE = """
     GROUP BY user_id
     """
 
-_TWS_DOC = ("Spark 4 transformWithStateInPandas — the successor API to "
-    "applyInPandasWithState (SPARK-46815, arbitrary stateful processing "
-    "v2): a StatefulProcessor holds one ValueState per user (running "
-    "count + running max in integer cents) in the RocksDB state store, "
-    "updates it per micro-batch in handleInputRows, and emits the updated "
-    "state — typed state handles (Value/List/MapState), timers, and TTL "
-    "replace the single tuple applyInPandasWithState allowed, which is "
-    "what the reference's state backends expose "
-    "(flock/src/state/mod.rs:63-121). Emissions are monotone per key, so "
-    "the final value per key equals the batch aggregate (oracle). Scale: "
-    "per-key state is two integers in RocksDB regardless of stream "
-    "length, partitioned by the grouping key across the cluster — the "
-    "v2 API additionally allows state TTL and initial-state bootstrap, "
-    "the production features long-running 100 TB streams need for "
-    "state-size control and replay-free restarts.")
-
 
 def streaming_tws_value_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd

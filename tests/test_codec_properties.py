@@ -144,3 +144,67 @@ def test_inflate_huffman_to_stored_block_transition(a: bytes, b: bytes) -> None:
         c = zlib.compressobj(6)
         s = c.compress(a) + c.flush(flush) + c.compress(b) + c.flush()
         assert inflate(s[2:-4]) == a + b
+
+
+@settings(max_examples=40, deadline=None)
+@given(payloads)
+def test_zstd_decodes_any_bytes_pyarrow_encoded(data: bytes) -> None:
+    import pyarrow as pa
+
+    from flock_spark.operators.zstd_codec import zstd_frame_decompress
+
+    assert zstd_frame_decompress(pa.compress(data, "zstd", asbytes=True)) == data
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.integers(min_value=0, max_value=3), max_size=6000))
+def test_lzw_roundtrip_any_2bit_pixels(pixels: list[int]) -> None:
+    from flock_spark.operators.multimodal import lzw_decode, lzw_encode
+
+    assert lzw_decode(lzw_encode(pixels)) == pixels
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(min_value=0, max_value=2**64 - 1),
+       st.integers(min_value=-(2**63), max_value=2**63 - 1))
+def test_varint_zigzag_roundtrip_full_64_bit_range(u: int, s: int) -> None:
+    from flock_spark.operators.bitio import (
+        read_uvarint,
+        unzigzag,
+        write_uvarint,
+        zigzag,
+    )
+
+    enc = b"\x05" + write_uvarint(u) + b"\x07"  # framed: offsets matter
+    assert read_uvarint(enc, 1) == (u, len(enc) - 1)
+    assert 0 <= zigzag(s) < 2**64 and unzigzag(zigzag(s)) == s
+
+
+bit_fields = st.lists(
+    st.integers(min_value=0, max_value=32).flatmap(
+        lambda w: st.tuples(st.integers(min_value=0, max_value=(1 << w) - 1),
+                            st.just(w))),
+    max_size=200,
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(bit_fields)
+def test_bit_writer_reader_roundtrip_both_orders(fields) -> None:
+    from flock_spark.operators.bitio import (
+        LsbReader,
+        LsbWriter,
+        MsbReader,
+        MsbWriter,
+    )
+
+    for writer, reader in ((LsbWriter, LsbReader), (MsbWriter, MsbReader)):
+        w = writer()
+        for v, width in fields:
+            w.write(v, width)
+        data = w.getvalue()
+        total = sum(width for _, width in fields)
+        assert len(data) == (total + 7) // 8
+        r = reader(data)
+        assert [r.read(width) for _, width in fields] == [v for v, _ in fields]
+        assert r.align_byte() == len(data)

@@ -147,14 +147,14 @@ def test_container_rejections():
 
 
 def test_container_snappy_crc_checked():
-    from flock_spark.operators.multimodal import _crc32_own
+    from flock_spark.operators.bitio import crc32
 
     raw = zz(11) + zz(22)
-    payload = snappy_literal(raw) + struct.pack(">I", _crc32_own(raw))
+    payload = snappy_literal(raw) + struct.pack(">I", crc32(raw))
     data = container('"long"', "snappy", [(2, payload)])
     codec, recs = A.avro_container_read(data)
     assert codec == "snappy" and recs == [11, 22]
-    bad = snappy_literal(raw) + struct.pack(">I", _crc32_own(raw) ^ 1)
+    bad = snappy_literal(raw) + struct.pack(">I", crc32(raw) ^ 1)
     with pytest.raises(ValueError, match="CRC"):
         A.avro_container_read(container('"long"', "snappy", [(2, bad)]))
 
@@ -567,18 +567,22 @@ def test_xz_corruption_rejected():
 
 def test_parquet_writer_thrift_encoder_roundtrips_own_decoder():
     from flock_spark.operators import parquet_writer as W
+    from flock_spark.operators.bitio import write_uvarint, zigzag
     from flock_spark.operators.formats import thrift_read_struct
 
+    def zig(v: int) -> bytes:
+        return write_uvarint(zigzag(v))
+
     W.STATS.clear()
-    inner = W.tc_struct([(1, W.CT_I32, W.tc_zig(-7))])
-    many = [W.tc_zig(i * 3) for i in range(20)]  # >=15 -> long list header
+    inner = W.tc_struct([(1, W.CT_I32, zig(-7))])
+    many = [zig(i * 3) for i in range(20)]  # >=15 -> long list header
     s = W.tc_struct([
-        (1, W.CT_I32, W.tc_zig(123456)),
-        (2, W.CT_I64, W.tc_zig(-(2**40))),
+        (1, W.CT_I32, zig(123456)),
+        (2, W.CT_I64, zig(-(2**40))),
         (3, W.CT_BINARY, W.tc_binary(b"hello")),
         (4, W.CT_LIST, W.tc_list(W.CT_I32, many)),
         (5, W.CT_STRUCT, inner),
-        (40, W.CT_I32, W.tc_zig(9)),  # delta > 15 -> long-form field id
+        (40, W.CT_I32, zig(9)),  # delta > 15 -> long-form field id
     ])
     d, pos = thrift_read_struct(s, 0)
     assert pos == len(s)

@@ -235,20 +235,6 @@ def test_inflate_rejects_malformed():
     # overkill; the guard is unit-visible in inflate() (dist > len(out))
 
 
-def test_inflate_canonical_huffman_tables():
-    from flock_spark.operators.multimodal import _build_huffman
-
-    # RFC 1951 §3.2.2 worked example: lengths (3,3,3,3,3,2,4,4) for A..H
-    table = _build_huffman([3, 3, 3, 3, 3, 2, 4, 4])
-    # symbol F (index 5) has the unique 2-bit code 00
-    assert table[(2, 0b00)] == 5
-    # symbol A (index 0) -> 010
-    assert table[(3, 0b010)] == 0
-    # symbol G (index 6) -> 1110, H (7) -> 1111
-    assert table[(4, 0b1110)] == 6
-    assert table[(4, 0b1111)] == 7
-
-
 def test_decoders_reject_garbage_without_hanging():
     # a 100 TB scan decodes UNTRUSTED payloads: any malformed stream must
     # raise promptly (every code path consumes input monotonically), never

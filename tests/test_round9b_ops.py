@@ -13,9 +13,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from flock_spark.operators.bitio import crc32
 from flock_spark.operators.multimodal import (
     PNG_ROW_W,
-    _crc32_own,
     gif_deinterlace,
     gif_interlace_order,
     gzip_member_build,
@@ -34,7 +34,7 @@ def test_crc32_own_matches_zlib():
     import zlib
 
     for data in [b"", b"a", b"hello world" * 100, bytes(range(256)) * 37]:
-        assert _crc32_own(data) == zlib.crc32(data) & 0xFFFFFFFF
+        assert crc32(data) == zlib.crc32(data) & 0xFFFFFFFF
 
 
 @settings(max_examples=60, deadline=None)
@@ -42,7 +42,7 @@ def test_crc32_own_matches_zlib():
 def test_crc32_own_matches_zlib_property(data):
     import zlib
 
-    assert _crc32_own(data) == zlib.crc32(data) & 0xFFFFFFFF
+    assert crc32(data) == zlib.crc32(data) & 0xFFFFFFFF
 
 
 # ---------------------------------------------------------------------------
