@@ -57,290 +57,56 @@ REGISTRY: dict[str, QuerySpec] = {}
 # ---------------------------------------------------------------------------
 DRIVER_SLATE: tuple[str, ...] = (
     "proj_arith",
+    "join_inner",
+    "agg_basic",
+    "window_running_sum",
+    "sort_limit_topk",
     "pandas_udaf_weighted_mean",
+    "hll_sketch_portable",
+    "dedup_exact",
     "zorder_layout_scan",
-    "ann_ivfpq_topk",
-    "ann_pq_adc_topk",
-    "ann_topk_bruteforce",
     "streaming_tumbling_agg",  # heavy
-    "corpus_bigram_counts",
-    "corpus_contamination_overlap",
-    "corpus_decontaminate",
-    "corpus_lang_quality_buckets",
-    "corpus_lm_score_proxy",
-    "corpus_ngram_diversity",
-    "ann_ivf_nprobe_recall_curve",  # heavy
-    "corpus_ngram_novelty",
-    "dedup_chunk_shared",
-    "dedup_embedding_cosine",
-    "dedup_line_hash_boilerplate",
-    "dedup_substring_spans",
-    "embedding_power_iteration_pc",
-    "dedup_lsh_band_tradeoff_audit",  # heavy
-    "events_session_gap_sweep",
-    "graph_bfs_layers",
-    "graph_pagerank_two_iter",
-    "ivm_window_delta",
-    "kmeans_two_iterations",
-    "mm_audio_window_energy",
-    "embedding_matryoshka_recall_audit",  # heavy
-    "mm_byte_histogram",
-    "mm_frame_sample",
-    "mm_gif_deinterlace",
-    "mm_gif_header_dims",
-    "mm_gif_lzw_decode",
-    "mm_header_dims",
-    "graph_2hop_reach_hll_audit",  # heavy
-    "mm_image_tile_stats",
-    "mm_jpeg_header_dims",
-    "mm_meta_extract",
-    "mm_phash64",
-    "mm_png_inflate_stored",
-    "mm_resize_bilinear",
-    "graph_label_prop_communities",  # heavy
-    "mm_resize_nearest",
-    "mm_scene_cut_detect",
-    "mm_wav_header_audio",
-    "mm_zlib_inflate_dynamic",
-    "privacy_t_closeness",
-    "sketch_space_saving_topk",
-    "text_bm25_doc_ranking",
-    "items_cooccurrence_jaccard",  # heavy
+    "ann_ivf_recall_audit",
+    "ann_ivf_topk",
+    "ann_lsh_buckets",
+    "ann_lsh_topk",
+    "ann_radius_search",
+    "approx_count_distinct_hll",
+    "archive_ingest_chain_end_to_end",
+    "bloom_filter_portable",
+    "bloom_membership_probe",
+    "corpus_quality_dup_calibration",  # heavy
+    "bloom_semijoin_reduction",
+    "cms_heavy_hitters_screen",
+    "cms_merge_shards",
+    "cms_point_query",
+    "corpus_cluster_sample_weights",
+    "corpus_cross_source_dup_matrix",
+    "corpus_split_leakage_safe",
+    "countmin_sketch_portable",
+    "crawl_url_resolve_rfc3986",
+    "crawl_chain_end_to_end",  # heavy
+    "csv_corrupt_tolerant_read",
+    "csv_roundtrip_scan",
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "dedup_drop_duplicates",
+    "dedup_incremental_new_batch",
+    "dedup_jaccard_threshold_curve",
+    "dedup_keep_best_quality",
+    "dedup_minhash_estimate_vs_exact",
+    "dedup_edit_distance_pairs",  # heavy
+    "dedup_minhash_lsh_pairs",
+    "dedup_minhash_signatures",
+    "dedup_multi_signal_clusters",
+    "dedup_semdedup_prune",
+    "dedup_simhash",
+    "dedup_simhash_pairs",
+    "doc_chunk_content_defined",
+    "dpp_star_join",
+    "embedding_cosine_calibration_bins",
+    "dedup_lsh_recall_audit",  # heavy
 )
-
-# Machine-readable certification history: registry name -> MOST RECENT round
-# with a green driver row (rows+schema+hash all matching in
-# CORRECTNESS_r{N}.json), never red in any later round. Re-certification
-# refreshes the round, which is what drives the stale-first rotation.
-# Reconstructed mechanically from ALL committed CORRECTNESS_r*.json artifacts
-# (tools/slate_builder.py --print-history re-derives and --verify-history
-# checks this block). This is the staleness order that the
-# post-closure rotation policy (COVERAGE.md "Post-closure rotation policy")
-# sorts by: oldest-certified entries re-certify first.
-CERTIFIED_ROUNDS: dict[str, int] = {
-    # round 2 (6 entries)
-    "window_first_last": 2, "window_frame_moving_avg": 2, "window_lag_lead": 2,
-    "window_percentiles": 2, "window_range_frame_sum": 2,
-    "window_rank_dense": 2,
-    # round 3 (36 entries)
-    "ann_ivf_topk": 3, "ann_topk_bruteforce": 3, "asof_join_window": 3,
-    "bloom_membership_probe": 3, "cdc_upsert_latest": 3,
-    "corpus_decontaminate": 3, "dedup_clusters": 3,
-    "dedup_minhash_lsh_pairs": 3, "dedup_simhash_pairs": 3,
-    "doc_chunk_fixed_tokens": 3, "graph_pagerank_two_iter": 3,
-    "json_wire_corrupt_tolerant": 3, "kmeans_two_iterations": 3,
-    "mm_audio_window_energy": 3, "mm_meta_extract": 3, "nexmark_native_q4": 3,
-    "nexmark_native_q6": 3, "nexmark_native_q9": 3, "nexmark_q2_mod_filter": 3,
-    "nexmark_q5_hot_items": 3, "scd2_validity_join": 3,
-    "side_input_csv_join": 3, "streaming_dedup_ingest": 3,
-    "streaming_hopping_agg": 3, "streaming_proctime_agg": 3,
-    "streaming_q5_foreachbatch": 3, "streaming_session_native": 3,
-    "streaming_stream_stream_join": 3, "subquery_scalar": 3,
-    "text_token_stats_bpe": 3, "tpch_q1": 3, "tpch_q18": 3, "tpch_q21": 3,
-    "tpch_q9": 3, "window_rownum_topk": 3, "ysb_campaign_counts": 3,
-    # round 4 (44 entries)
-    "agg_salted_two_stage": 4, "ann_pq_adc_topk": 4, "arrow_grouped_minmax": 4,
-    "asof_join_pandas": 4, "bloom_filter_portable": 4,
-    "bloom_semijoin_reduction": 4, "bucketed_colocated_join": 4,
-    "cms_point_query": 4, "corpus_split_leakage_safe": 4,
-    "countmin_sketch_portable": 4, "dedup_substring_spans": 4,
-    "dpp_star_join": 4, "embedding_power_iteration_pc": 4,
-    "graph_triangle_count": 4, "hdr_quantile_sketch": 4, "ivm_join_delta": 4,
-    "join_range_binned": 4, "mm_phash64": 4, "nexmark_native_q3": 4,
-    "nexmark_native_q7": 4, "nexmark_native_q8": 4,
-    "nexmark_q0_passthrough": 4, "nexmark_q10_date_format": 4,
-    "nexmark_q11_session_bids": 4, "nexmark_q12_proctime_tumble": 4,
-    "nexmark_q13_side_input": 4, "partitioned_write_prune_scan": 4,
-    "queue_sink_exactly_once": 4, "rollup_reuse_daily": 4, "set_except": 4,
-    "streaming_cdc_upsert_foreachbatch": 4, "streaming_elementwise_filter": 4,
-    "streaming_kafka_wire_decode": 4, "streaming_nexmark_native_q3": 4,
-    "streaming_nexmark_q1": 4, "streaming_scd2_enrich": 4,
-    "streaming_session_foreachbatch": 4, "text_oov_rate": 4,
-    "timeseries_gapfill_locf": 4, "tpch_q10": 4, "tpch_q22": 4, "tpch_q6": 4,
-    "tpch_q7": 4, "tpch_q8": 4,
-    # round 5 (46 entries)
-    "ann_ivf_recall_audit": 5, "approx_count_distinct_hll": 5,
-    "cdc_snapshot_asof": 5, "cms_merge_shards": 5,
-    "corpus_cross_source_dup_matrix": 5, "corpus_lang_quality_buckets": 5,
-    "corpus_lm_score_proxy": 5, "corpus_quality_resample": 5,
-    "dedup_jaccard_threshold_curve": 5, "dedup_minhash_signatures": 5,
-    "events_pattern_3step": 5, "events_transition_matrix": 5,
-    "graph_kcore_peel": 5, "hdr_quantile_merge_shards": 5,
-    "hll_merge_shards": 5, "hll_sliding_window_distinct": 5,
-    "hopping_window_agg": 5, "join_fuzzy_levenshtein": 5,
-    "json_wire_decode": 5, "mm_byte_histogram": 5, "privacy_k_anonymity": 5,
-    "session_custom_gap_pandas": 5, "session_window_agg": 5,
-    "session_window_by_key": 5, "streaming_nexmark_native_q7": 5,
-    "streaming_ohlc_daily": 5, "streaming_pattern_3step": 5,
-    "streaming_stateful_running_count": 5, "table_quality_checks": 5,
-    "text_bm25_doc_ranking": 5, "timeseries_ewma_shifts": 5,
-    "timeseries_ohlc_daily": 5, "tokenizer_bpe_merge_step": 5, "tpch_q11": 5,
-    "tpch_q12": 5, "tpch_q13": 5, "tpch_q14": 5, "tpch_q15": 5, "tpch_q16": 5,
-    "tpch_q17": 5, "tpch_q19": 5, "tpch_q20": 5, "tumbling_daily_distinct": 5,
-    "tumbling_window_agg": 5, "udtf_long_tokens": 5, "window_ntile_pct": 5,
-    # round 6 (43 entries)
-    "agg_percentiles": 6, "agg_stats_exact": 6, "agg_string_concat": 6,
-    "ann_ivfpq_topk": 6, "ann_lsh_buckets": 6, "ann_lsh_topk": 6,
-    "corpus_bigram_counts": 6, "corpus_pack_sequences": 6,
-    "corpus_repetition_stats": 6, "corpus_sample_deterministic": 6,
-    "corpus_sample_per_group": 6, "corpus_shuffle_shards": 6,
-    "corpus_split_stratified": 6, "corpus_temperature_mix": 6,
-    "corpus_vocab_topk": 6, "csv_roundtrip_scan": 6, "dedup_clusters_star": 6,
-    "dedup_drop_duplicates": 6, "dedup_embedding_cosine": 6,
-    "dedup_exact_normalized": 6, "dedup_minhash_estimate_vs_exact": 6,
-    "dedup_multi_signal_clusters": 6, "dedup_ngram_jaccard": 6,
-    "dedup_semdedup_prune": 6, "dedup_simhash": 6,
-    "embedding_nearest_centroid": 6, "events_cumulative_unique_users": 6,
-    "events_cusum_drift": 6, "events_funnel_steps": 6,
-    "events_max_active_streak": 6, "events_pattern_kleene": 6,
-    "events_retention_cohorts": 6, "events_rfm_segments": 6,
-    "events_value_histogram": 6, "join_inequality_only": 6, "join_salted": 6,
-    "text_fingerprint": 6, "text_langid": 6, "text_pii_redact": 6,
-    "text_quality_score": 6, "text_rake_keywords": 6,
-    "text_tfidf_topk_terms": 6, "text_token_stats": 6,
-    # round 7 (47 entries)
-    "agg_collect_sorted": 7, "agg_mode_deterministic": 7,
-    "agg_spearman_rank_corr": 7, "anomaly_mad_flags": 7,
-    "asof_join_nearest": 7, "asof_join_tolerance": 7,
-    "cms_heavy_hitters_screen": 7, "corpus_cluster_sample_weights": 7,
-    "corpus_contamination_overlap": 7, "corpus_filter_funnel": 7,
-    "corpus_ngram_diversity": 7, "csv_corrupt_tolerant_read": 7,
-    "dedup_chunk_shared": 7, "dedup_containment_pairs": 7,
-    "dedup_incremental_new_batch": 7, "dedup_keep_best_quality": 7,
-    "doc_chunk_content_defined": 7, "embedding_label_centroids": 7,
-    "embedding_normalize_quantize": 7, "events_ab_test_zstat": 7,
-    "events_watermark_lateness_audit": 7, "graph_modularity_audit": 7,
-    "hll_intersect_estimate": 7, "ivm_agg_delta": 7, "ivm_distinct_delta": 7,
-    "join_interval_overlap": 7, "join_null_safe_eq": 7, "mm_dedup_clusters": 7,
-    "mm_header_dims": 7, "mm_phash_near_dup": 7, "mm_scene_cut_detect": 7,
-    "pipe_syntax_funnel": 7, "pipeline_quality_dedup_stats": 7,
-    "privacy_t_closeness": 7, "recursive_cte_hierarchy": 7,
-    "stagger_window_agg": 7, "streaming_dedup_within_watermark": 7,
-    "streaming_pattern_kleene": 7, "streaming_q13_side_input": 7,
-    "streaming_stagger_window": 7, "table_snapshot_drift": 7,
-    "text_inverted_index": 7, "tokenizer_bpe_apply": 7,
-    "tokenizer_wordpiece_greedy": 7, "udtf_table_arg_sessionize": 7,
-    "variant_json_shred": 7, "window_nth_cume": 7,
-    # round 8 (48 entries)
-    "agg_approx_percentile_audit": 8, "analytics_ols_trend": 8,
-    "analytics_pareto_frontier": 8, "anomaly_zscore_flags": 8,
-    "array_hof_funcs": 8, "cms_join_cardinality_estimate": 8,
-    "corpus_weighted_bottomk_sample": 8, "dedup_line_hash_boilerplate": 8,
-    "events_attribution_touch_matrix": 8, "events_equidepth_histogram": 8,
-    "events_funnel_time_to_convert": 8, "geo_grid_density_heatmap": 8,
-    "geo_radius_cell_join": 8, "graph_bfs_layers": 8,
-    "graph_label_prop_communities": 8, "grouping_sets_agg": 8,
-    "items_cooccurrence_jaccard": 8, "join_runtime_bloom_filter": 8,
-    "json_extract_props": 8, "kmv_bottomk_distinct_merge": 8,
-    "maintenance_file_skipping_plan": 8, "mm_frame_index": 8,
-    "mm_frame_sample": 8, "mm_jpeg_header_dims": 8, "mm_resize_nearest": 8,
-    "mm_wav_header_audio": 8, "parameterized_sql_query": 8,
-    "parquet_zstd_roundtrip": 8, "privacy_dp_histogram": 8,
-    "privacy_l_diversity": 8, "pyds_custom_sink_roundtrip": 8,
-    "pyds_custom_source_agg": 8, "rollup_two_level": 8,
-    "scan_file_provenance_audit": 8, "schema_evolution_merge_read": 8,
-    "session_variable_param": 8, "sql_group_by_all": 8, "sql_script_batch": 8,
-    "sql_udf_scalar": 8, "streaming_attribution_last_touch": 8,
-    "streaming_pyds_source_agg": 8, "streaming_session_state_timeout": 8,
-    "streaming_stream_stream_left_outer": 8,
-    "table_referential_integrity_audit": 8, "table_skew_audit": 8,
-    "text_hashed_linear_quality": 8, "timeseries_seasonal_baseline": 8,
-    "unpivot_melt_wide": 8,
-    # round 9 (48 entries)
-    "agg_filter_clause": 9, "ann_ivf_nprobe_recall_curve": 9,
-    "ann_radius_search": 9, "approx_top_k_native_audit": 9,
-    "bitmap_exact_distinct_native": 9, "corpus_domain_mix_rates": 9,
-    "corpus_epoch_repeat_schedule": 9, "corpus_length_band_twopass": 9,
-    "corpus_ngram_novelty": 9, "corpus_quality_dup_calibration": 9,
-    "corpus_source_drift_chi2": 9, "datasketches_union_merge_audit": 9,
-    "dedup_lsh_band_tradeoff_audit": 9, "dedup_lsh_recall_audit": 9,
-    "embedding_cosine_calibration_bins": 9,
-    "embedding_matryoshka_recall_audit": 9, "events_gap_log2_histogram": 9,
-    "events_log2_value_histogram": 9, "events_revenue_pareto80": 9,
-    "events_session_gap_sweep": 9, "events_sessionized_bounce_rate": 9,
-    "events_velocity_range_frame": 9, "graph_2hop_reach_hll_audit": 9,
-    "ivm_window_delta": 9, "join_shuffle_hash_hint": 9,
-    "maintenance_compaction_plan": 9, "mm_gif_header_dims": 9,
-    "mm_gif_lzw_decode": 9, "mm_image_tile_stats": 9,
-    "mm_png_inflate_stored": 9, "mm_resize_bilinear": 9,
-    "mm_zlib_inflate_dynamic": 9, "orc_roundtrip_scan": 9,
-    "scan_count_star_pruned": 9, "sql_collation_ci_agg": 9,
-    "sql_lateral_topk_per_group": 9, "sql_listagg_within_group": 9,
-    "sql_luhn_check_audit": 9, "sql_try_arithmetic_audit": 9,
-    "sql_utf8_validation_audit": 9, "sql_xml_shred": 9,
-    "table_profile_stats": 9, "table_snapshot_diff_cdf": 9,
-    "text_langid_confusion_audit": 9, "text_url_canonicalize_dedup": 9,
-    "theta_sketch_native_audit": 9, "tokenizer_vocab_coverage_curve": 9,
-    "window_percentiles_twopass": 9,
-    # round 10 (37 entries)
-    "agg_count_distinct": 10, "agg_having": 10, "analytics_friedman_test": 10,
-    "analytics_ks_two_sample": 10, "analytics_mann_whitney_u": 10,
-    "analytics_wilcoxon_signed_rank": 10, "case_when": 10,
-    "corpus_quota_largest_remainder": 10, "correlated_exists": 10,
-    "date_funcs": 10, "dedup_edit_distance_pairs": 10,
-    "dedup_suffix_lcp_pairs": 10, "distinct_select": 10,
-    "events_reservoir_per_key": 10, "filter_complex": 10, "filter_mod": 10,
-    "join_anti": 10, "join_broadcast_dim": 10, "join_cross": 10,
-    "join_full_outer": 10, "join_global_max": 10, "mm_gif_deinterlace": 10,
-    "mm_gzip_member_parse": 10, "mm_gzip_multistream_walk": 10,
-    "mm_http_chunked_decode": 10, "mm_png_chunk_walk": 10,
-    "mm_tar_member_walk": 10, "mm_warc_record_walk": 10,
-    "mm_zip_central_dir_walk": 10, "scan_parquet_footer_thrift_walk": 10,
-    "scan_parquet_page_decode": 10, "shard_rendezvous_rebalance_audit": 10,
-    "sketch_space_saving_topk": 10, "sketch_tdigest_quantile_audit": 10,
-    "streaming_warc_ingest_decode": 10, "text_blocklist_multimatch": 10,
-    "text_boilerplate_linefilter": 10,
-    # round 11 (40 entries)
-    "crawl_frontier_politeness_schedule": 11, "crawl_link_extract_resolve": 11,
-    "crawl_sitemap_xml_walk": 11, "crawl_url_resolve_rfc3986": 11,
-    "cube_agg": 11, "join_left_outer": 11, "join_range_theta": 11,
-    "join_self_agg_max": 11, "join_semi": 11, "math_funcs": 11,
-    "mm_jpeg_progressive_decode": 11, "mm_lz4_block_roundtrip": 11,
-    "mm_png_filter_suite_decode": 11, "mm_quoted_printable_roundtrip": 11,
-    "mm_warc_file_ingest": 11, "nexmark_gen_bid": 11,
-    "nexmark_gen_person_auction": 11, "nexmark_q1_currency": 11,
-    "nexmark_q3_join_filter": 11, "nexmark_q4_avg_of_max": 11,
-    "nexmark_q6_double_rownum": 11, "nexmark_q7_max_per_window": 11,
-    "nexmark_q8_sellers": 11, "nexmark_q9_winning_bids": 11, "pivot_agg": 11,
-    "rollup_agg": 11, "scan_csv_rfc4180_parse": 11,
-    "scan_parquet_gzip_page_decode": 11, "scan_parquet_lz4_page_decode": 11,
-    "sketch_roaring_bitmap_ops": 11, "streaming_warc_file_ingest": 11,
-    "text_cdx_surt_dedup": 11, "text_punycode_idna_roundtrip": 11,
-    "text_robots_file_parse": 11, "text_robots_wildcard_match": 11,
-    "tokenizer_unigram_viterbi": 11, "tpch_q2": 11, "tpch_q3": 11,
-    "tpch_q4": 11, "tpch_q5": 11,
-    # round 12 (50 entries)
-    "agg_basic": 12, "archive_ingest_chain_end_to_end": 12,
-    "arena_window_completeness_audit": 12, "corpus_epoch_shuffle_audit": 12,
-    "crawl_chain_end_to_end": 12, "dedup_exact": 12, "hll_sketch_portable": 12,
-    "join_inner": 12, "mm_arrow_ipc_encode_roundtrip": 12,
-    "mm_avro_encode_roundtrip": 12, "mm_bzip2_decode": 12,
-    "mm_bzip2_encode_roundtrip": 12, "mm_deflate_encode_roundtrip": 12,
-    "mm_jpeg_baseline_decode": 12, "mm_snappy_encode_roundtrip": 12,
-    "mm_wet_conversion_roundtrip": 12, "mm_xz_encode_roundtrip": 12,
-    "mm_xz_lzma_decode": 12, "mm_zstd_encode_roundtrip": 12,
-    "mm_zstd_frame_roundtrip": 12, "pandas_udaf_weighted_mean": 12,
-    "proj_arith": 12, "scan_arrow_ipc_file_walk": 12,
-    "scan_arrow_ipc_stream_walk": 12, "scan_avro_container_decode": 12,
-    "scan_formats_consensus": 12, "scan_orc_own_writer_roundtrip": 12,
-    "scan_orc_stripe_decode": 12, "scan_own_writers_consensus": 12,
-    "scan_parquet_own_writer_roundtrip": 12,
-    "scan_parquet_own_writer_v2_roundtrip": 12,
-    "scan_parquet_page_index_prune": 12, "scan_parquet_v2_delta_decode": 12,
-    "scan_parquet_zstd_page_decode": 12, "set_intersect": 12,
-    "set_union_all": 12, "sort_global_range": 12, "sort_limit_topk": 12,
-    "sort_multi_col": 12, "streaming_arrow_ipc_ingest": 12,
-    "streaming_avro_file_ingest": 12, "streaming_orc_file_ingest": 12,
-    "streaming_tumbling_agg": 12, "streaming_xz_file_ingest": 12,
-    "string_funcs": 12, "subquery_in": 12, "text_charset_detect_transcode": 12,
-    "text_robots_longest_match": 12, "window_running_sum": 12,
-    "zorder_layout_scan": 12,
-}
-
-
-
-# Cumulative driver-certified set (derived view; kept for existing callers).
-CERTIFIED_GREEN: frozenset[str] = frozenset(CERTIFIED_ROUNDS)
 
 
 def ordered_names() -> list[str]:

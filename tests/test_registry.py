@@ -8,14 +8,22 @@ no duplicates, emitted first, and every slated entry carries an exact oracle
 (a rows-only entry would waste a graded slot on the weaker check).
 """
 
+import os
+import sys
+
 from flock_spark.registry import (
-    CERTIFIED_GREEN,
-    CERTIFIED_ROUNDS,
     DRIVER_SLATE,
     REGISTRY,
     get_oracles,
     get_queries,
 )
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+from slate_builder import certified_rounds  # noqa: E402
+
+# Cumulative driver-certified set, derived from the CORRECTNESS artifacts.
+CERTIFIED_SET = frozenset(certified_rounds())
 
 
 def test_slate_is_50_unique_registered_names():
@@ -50,9 +58,9 @@ def test_slate_is_fresh_and_certified_ledger_valid():
     r10+ regression-surveillance regime). The certified ledger must only
     contain registered names."""
     queries = get_queries()
-    unknown = [n for n in CERTIFIED_GREEN if n not in queries]
+    unknown = [n for n in CERTIFIED_SET if n not in queries]
     assert not unknown, f"certified ledger has unregistered names: {unknown}"
-    pool = [n for n in queries if n not in CERTIFIED_GREEN]
+    pool = [n for n in queries if n not in CERTIFIED_SET]
     if len(pool) <= 50:
         unslated = [n for n in pool if n not in DRIVER_SLATE]
         assert not unslated, (
@@ -60,57 +68,9 @@ def test_slate_is_fresh_and_certified_ledger_valid():
             f"hold slots: {unslated}"
         )
     else:
-        stale = [n for n in DRIVER_SLATE if n in CERTIFIED_GREEN]
+        stale = [n for n in DRIVER_SLATE if n in CERTIFIED_SET]
         assert len(stale) <= 10, (
             f"slate wastes graded slots on certified entries: {stale}"
-        )
-
-
-def test_certified_rounds_history_matches_artifacts():
-    """CERTIFIED_ROUNDS is the machine-readable certification history the
-    rotation policy sorts by. Re-derive it from the committed
-    CORRECTNESS_r*.json artifacts: MOST RECENT fully-green round per entry
-    (a re-cert refreshes the staleness clock), and no entry red in any
-    round after its certification round."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert files, "no CORRECTNESS artifacts found"
-    # The driver drops round N's artifact AFTER round close, i.e. after the
-    # ledger was last regenerated — artifacts newer than the committed
-    # ledger's horizon are the NEXT round's fold input, not evidence the
-    # committed dict is wrong. Ignore them here; the round-open fold
-    # (slate_builder --print-history) picks them up.
-    ledger_max = max(CERTIFIED_ROUNDS.values())
-    derived: dict[str, int] = {}
-    for f in files:
-        rn = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        if rn > ledger_max:
-            continue
-        for name, row in json.load(open(f)).items():
-            green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            if green:
-                derived[name] = max(rn, derived.get(name, rn))
-            else:
-                assert name not in derived or derived[name] >= rn, (
-                    f"{name} went red in round {rn} after certifying in "
-                    f"round {derived[name]} — drop it from CERTIFIED_ROUNDS"
-                )
-    # Within the ledger's horizon the committed dict must match the
-    # derivation exactly — every certified entry present, with the same
-    # latest-green round.
-    for name, rn in CERTIFIED_ROUNDS.items():
-        assert name in derived, f"{name} certified in no artifact"
-        assert derived[name] == rn, (
-            f"{name}: committed round {rn} != derived {derived[name]}"
         )
 
 
@@ -120,7 +80,7 @@ def test_slate_covers_every_family():
     driver's cumulative evidence spans rounds, so a certified family keeps
     its coverage without burning a graded slot on a canary."""
     get_queries()
-    covered = set(DRIVER_SLATE) | CERTIFIED_GREEN
+    covered = set(DRIVER_SLATE) | CERTIFIED_SET
     families = {
         "streaming": lambda n: n.startswith("streaming_") or n == "queue_sink_exactly_once",
         "tpch": lambda n: n.startswith("tpch_"),

@@ -8,13 +8,12 @@ to REGRESSION SURVEILLANCE (COVERAGE.md "Post-closure rotation policy"):
   (a) standing canaries spanning every execution family — the same cheap
       entries every round, so a Spark/engine change shows as a red diff
       immediately;
-  (b) any entry whose implementation or oracle text changed that round
-      re-certifies THAT round, jumping the staleness queue (detected by
-      fingerprinting each entry's oracle SQL + callable source against the
-      committed baseline `flock_spark/entry_fingerprints.json`);
-  (c) remaining slots filled oldest-certified-first from
-      `registry.CERTIFIED_ROUNDS` (ties broken by name), so every entry
-      re-certifies at least every ~7 rounds;
+  (b) an entry owing a re-cert (its live fingerprint differs from the one
+      it was certified against, `flock_spark/entry_fingerprints.json`)
+      jumps the staleness queue;
+  (c) remaining slots are filled oldest-certified-first (ties broken by
+      name) from `certified_rounds()`, so every entry re-certifies at least
+      every ~7 rounds;
   (d) never-certified entries (new operators) take slots ahead of ALL
       re-certs, same as during the coverage era.
 
@@ -25,14 +24,13 @@ co-slated heavies have historically blown the per-entry budget.
 Usage:
   python tools/slate_builder.py                      # print next-round slate
   python tools/slate_builder.py --slots 50           # explicit size
-  python tools/slate_builder.py --print-history      # CERTIFIED_ROUNDS block
-  python tools/slate_builder.py --verify-history     # vs committed dict
-  python tools/slate_builder.py --changed            # entries changed vs baseline
-  python tools/slate_builder.py --write-fingerprints # refresh baseline (round close)
+  python tools/slate_builder.py --changed            # entries owing a re-cert
+  python tools/slate_builder.py --write-fingerprints # round close: record newest green rows
 """
 
 from __future__ import annotations
 
+import ast
 import glob
 import hashlib
 import inspect
@@ -40,6 +38,7 @@ import json
 import os
 import re
 import sys
+import types
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -47,35 +46,18 @@ sys.path.insert(0, ROOT)
 FINGERPRINT_PATH = os.path.join(ROOT, "flock_spark", "entry_fingerprints.json")
 
 # (a) Standing canaries: one cheap certified entry per execution family.
-#
-# ROUND 13 REDUCTION: the optimization rounds (r12+r13) left 46 entries with
-# changed fingerprints owing re-certification (rule (b)) — more than fit
-# beside the full 10-canary front. Certification debt outranks canary
-# redundancy for one round (r12 VERDICT item 1: "Done = CORRECTNESS_r13
-# covers the changed set"), so the front temporarily keeps one canary per
-# family NOT already exercised by the changed set (which spans dedup, ANN,
-# graph, corpus, windows, sketches, joins, aggregates, and the mm_* decode
-# paths): relational core, streaming drain, Arrow/pandas UDF, layout/scan
-# pruning. Restore the 10-canary front in the next steady-state round.
 STANDING_CANARIES: tuple[str, ...] = (
-    "proj_arith",               # projection / scalar expressions (relational core)
-    "streaming_tumbling_agg",   # streaming micro-batch drain
+    "proj_arith",               # projection / scalar expressions
+    "join_inner",               # shuffle / broadcast join
+    "agg_basic",                # two-phase aggregate
+    "window_running_sum",       # window frames
+    "sort_limit_topk",          # sort / top-k
     "pandas_udaf_weighted_mean",  # Arrow / pandas UDF path
-    "zorder_layout_scan",       # layout / scan-pruning family
+    "hll_sketch_portable",      # sketches
+    "dedup_exact",              # dedup
+    "zorder_layout_scan",       # layout / scan pruning
+    "streaming_tumbling_agg",   # streaming micro-batch drain
 )
-
-# Rule (b) debt: entries whose fingerprint-change trigger was CONSUMED
-# without a re-cert — the committed baseline was regenerated in the same
-# round the entry changed, but the entry never entered that round's graded
-# slate, so --changed stopped flagging it while its newest green row
-# predates the change. Each name maps to the round whose change it still
-# owes evidence for; build_slate() jumps these ahead of staleness re-certs
-# until CERTIFIED_ROUNDS records a green row >= that round, after which the
-# entry drops out of this dict's effect automatically (delete it then).
-FORCED_RECERTS: dict[str, int] = {
-    # (round 11's three debts — JPEG seed, WET guard, anchored robots —
-    # certified green in round 12 and were deleted at the r13 fold.)
-}
 
 # Entries whose FIRST execution in a cold-per-entry session is known heavy
 # (memoized signatures / IVF assignment / big DuckDB CTE oracles / streaming
@@ -99,105 +81,162 @@ def _is_heavy(name: str) -> bool:
     return name in HEAVY_FIRST_EXECUTION or name.startswith("streaming_")
 
 
-def rebuild_history(max_round: int | None = None) -> dict[str, int]:
-    """MOST RECENT fully-green round per entry across CORRECTNESS_r*.json
-    (a re-certification refreshes the entry's staleness clock — with
-    first-green semantics the same oldest entries would win the stale
-    queue every round forever and the rest would never re-certify,
-    breaking the rotation policy's ~7-round cadence). Raises if any entry
-    went red after certifying (it must be dropped by hand).
+def _round(path: str) -> int:
+    return int(re.search(r"r(\d+)\.json$", path).group(1))
 
-    ``max_round`` caps the derivation horizon: the driver drops round N's
-    artifact after round close, so tests comparing against the committed
-    ledger pass ``max(CERTIFIED_ROUNDS.values())`` to ignore the not-yet-
-    folded artifact. The round-open fold uses the uncapped default."""
-    derived: dict[str, int] = {}
-    files = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
+
+def certified_rounds() -> dict[str, int]:
+    """MOST RECENT fully-green round per entry across CORRECTNESS_r*.json
+    (a re-certification refreshes the entry's staleness clock, which keeps
+    the ~7-round rotation cadence). Raises on red after green."""
+    files = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")), key=_round)
     if not files:
         raise FileNotFoundError("no CORRECTNESS_r*.json artifacts in repo root")
+    derived: dict[str, int] = {}
     for f in files:
-        rn = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        if max_round is not None and rn > max_round:
-            continue
-        for name, row in json.load(open(f)).items():
-            green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            if green:
-                derived[name] = max(rn, derived.get(name, rn))
-            elif name in derived and derived[name] < rn:
-                raise ValueError(
-                    f"{name} red in round {rn} after certifying in round "
-                    f"{derived[name]}: certification revoked, regenerate the "
-                    f"ledger without it"
-                )
+        with open(f) as fh:
+            for name, r in json.load(fh).items():
+                if r.get("rows_match") and r.get("schema_match") and r.get("hash_match"):
+                    derived[name] = _round(f)
+                elif name in derived:
+                    raise ValueError(f"{name} red in round {_round(f)} after green in {derived[name]}")
     return derived
 
 
+def _source(obj) -> str:
+    """Source text of a function, class or module ("" when it has none)."""
+    try:
+        return inspect.getsource(obj)
+    except (OSError, TypeError):
+        return ""
+
+
+def _unwrap(v):
+    """The function behind a method or a decorator/UDF (``__wrapped__``)."""
+    return inspect.unwrap(getattr(v, "__func__", v))
+
+
+def _assignments(mod: str) -> dict[str, str]:
+    """Top-level name -> source of the statements binding it (assignments,
+    and ``from ... import``, which the walk follows to the name's home)."""
+    src = _source(sys.modules[mod])
+    lines, out = src.splitlines(), {}
+    for s in ast.parse(src).body:
+        if isinstance(s, (ast.FunctionDef, ast.ClassDef)):
+            continue
+        stores = (n.id for n in ast.walk(s) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store))
+        for name in [a.asname or a.name for a in s.names] if isinstance(s, ast.ImportFrom) else stores:
+            out[name] = out.get(name, "") + "\n".join(lines[s.lineno - 1:s.end_lineno]) + "\n"
+    return out
+
+
 def entry_fingerprints() -> dict[str, str]:
-    """sha256 over each entry's oracle SQL + callable source. A changed hash
-    means the entry's observable behavior may have changed and it must
-    re-certify (rotation rule (b))."""
-    from flock_spark.registry import REGISTRY, _load_all
+    """sha256 over the sorted (key, source) pairs of everything an entry
+    reaches: its oracle SQL and every flock_spark function, class and
+    module-level constant its callable refers to, transitively. Constants
+    hash their top-level assignments' source, so runtime state (memo tables,
+    counters) never moves a fingerprint. A changed hash means re-certify."""
+    from flock_spark.registry import REGISTRY, QuerySpec, _load_all
 
     _load_all()
+    memo: dict = {}  # this call only: node(x) per object, _assignments() per module
+
+    def refs(code, ns: dict) -> list:
+        """What the names in ``code`` and its nested code resolve to in the
+        module ``ns`` and in every flock_spark module they name (function-
+        local imports, module aliases); REGISTRY["x"] reaches entry x."""
+        names, consts, codes = set(), set(), [code]
+        while codes:
+            c = codes.pop()
+            names.update(c.co_names)
+            consts.update(c.co_consts)
+            codes += [k for k in c.co_consts if isinstance(k, types.CodeType)]
+        spaces, out = [ns, sys.modules], []  # sys.modules resolves import names
+        for space in spaces:  # grows as module aliases turn up
+            for n in names & space.keys():
+                v = space[n]
+                if isinstance(v, types.ModuleType):
+                    if v.__name__.startswith("flock_spark") and all(vars(v) is not s for s in spaces):
+                        spaces.append(vars(v))
+                elif v is REGISTRY:
+                    out += [REGISTRY[k] for k in consts if k in REGISTRY]
+                elif isinstance(v := _unwrap(v), (types.FunctionType, type)):
+                    out.append(v)
+                elif space.get("__name__", "").startswith("flock_spark"):
+                    out.append((space["__name__"], n))
+        return out
+
+    def node(x) -> tuple:
+        """(key, source) of one reachable object, and what it refers to."""
+        if isinstance(x, tuple):  # (module, name) of a module-level constant
+            defs = memo[x[0]] = memo.get(x[0]) or _assignments(x[0])
+            if x[1] not in defs:
+                return None, []
+            text = defs[x[1]]
+            return (".".join(x), text), refs(compile(text, x[0], "exec"), vars(sys.modules[x[0]]))
+        if isinstance(x, QuerySpec):
+            return (f"REGISTRY[{x.name!r}].oracle", x.oracle or ""), [x.fn]
+        if not (isinstance(x, (types.FunctionType, type)) and str(x.__module__).startswith("flock_spark")):
+            return None, []
+        if isinstance(x, type):
+            vals, more = [*x.__bases__, *vars(x).values()], []
+        else:
+            try:
+                vals = [c.cell_contents for c in x.__closure__ or ()] + [*(x.__defaults__ or ())]
+            except ValueError:  # a cell not yet bound
+                vals = []
+            more = refs(x.__code__, x.__globals__)
+        fns = [v for v in map(_unwrap, vals) if isinstance(v, (types.FunctionType, type))]
+        return (f"{x.__module__}.{x.__qualname__}", _source(x)), fns + more
+
     fps: dict[str, str] = {}
     for name, spec in REGISTRY.items():
-        try:
-            src = inspect.getsource(spec.fn)
-        except (OSError, TypeError):
-            src = ""
-        payload = (spec.oracle or "") + "\n---\n" + src
-        fps[name] = hashlib.sha256(payload.encode()).hexdigest()
+        seen, todo = {}, [spec]
+        while todo:
+            x = todo.pop()
+            k = x if isinstance(x, tuple) else id(x)
+            if k not in seen:
+                seen[k] = memo[k] = memo[k] if k in memo else node(x)
+                todo += seen[k][1]
+        pairs = repr(sorted(pair for pair, _ in seen.values() if pair))
+        fps[name] = hashlib.sha256(pairs.encode()).hexdigest()
     return fps
 
 
 def changed_entries() -> list[str]:
-    """Registry entries whose live fingerprint differs from the committed
-    baseline (or are absent from it)."""
-    if not os.path.exists(FINGERPRINT_PATH):
-        return []
-    baseline = json.load(open(FINGERPRINT_PATH))
+    """Registry entries whose live fingerprint differs from the one they
+    were certified against (or that have none): the re-cert debt."""
+    with open(FINGERPRINT_PATH) as fh:
+        baseline = json.load(fh)
+    return sorted(n for n, fp in entry_fingerprints().items() if baseline.get(n) != fp)
+
+
+def write_fingerprints() -> list[str]:
+    """Round close: record the live fingerprint of every entry green in the
+    newest CORRECTNESS artifact. Every other entry keeps the fingerprint it
+    was last certified against, so the fold never clears unpaid debt."""
+    newest = max(map(_round, glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))))
     live = entry_fingerprints()
-    return sorted(n for n, fp in live.items() if baseline.get(n) != fp)
-
-
-def forced_recerts() -> list[str]:
-    """FORCED_RECERTS entries still owing a post-change green row (their
-    latest certified round predates the round whose change they owe)."""
-    from flock_spark.registry import CERTIFIED_ROUNDS, REGISTRY, _load_all
-
-    _load_all()
-    return [
-        n for n, owed in sorted(FORCED_RECERTS.items())
-        if n in REGISTRY and CERTIFIED_ROUNDS.get(n, 0) < owed
-        and n not in STANDING_CANARIES
-    ]
+    folded = sorted(n for n, rn in certified_rounds().items() if rn == newest and n in live)
+    with open(FINGERPRINT_PATH) as fh:
+        baseline = json.load(fh)
+    baseline.update({n: live[n] for n in folded})
+    with open(FINGERPRINT_PATH, "w") as fh:
+        json.dump(baseline, fh, indent=0, sort_keys=True)
+    return folded
 
 
 def build_slate(slots: int = 50) -> list[str]:
     """Next-round slate per rules (a)-(d), heavies spread non-adjacent."""
-    from flock_spark.registry import CERTIFIED_ROUNDS, REGISTRY, _load_all
+    from flock_spark.registry import REGISTRY, _load_all
 
     _load_all()
-    never = [n for n in REGISTRY if n not in CERTIFIED_ROUNDS]
-    changed = [
-        n for n in changed_entries() if n in CERTIFIED_ROUNDS and n not in STANDING_CANARIES
-    ]
-    changed = changed + [n for n in forced_recerts() if n not in changed]
-    taken = set(STANDING_CANARIES) | set(never) | set(changed)
-    stale = sorted(
-        (n for n in CERTIFIED_ROUNDS if n not in taken),
-        key=lambda n: (CERTIFIED_ROUNDS[n], n),
-    )
-    ordered = list(STANDING_CANARIES) + never + changed
-    for n in stale:
-        if len(ordered) >= slots:
-            break
-        ordered.append(n)
-    ordered = ordered[:slots]
+    rounds = certified_rounds()
+    never = [n for n in REGISTRY if n not in rounds]
+    owed = [n for n in changed_entries() if n in rounds]
+    stale = sorted((n for n in rounds if n in REGISTRY), key=lambda n: (rounds[n], n))
+    # first occurrence wins: a canary or owed entry is not slated twice
+    ordered = list(dict.fromkeys([*STANDING_CANARIES, *never, *owed, *stale]))[:slots]
     return _spread_heavies(ordered)
 
 
@@ -224,50 +263,11 @@ def _spread_heavies(names: list[str]) -> list[str]:
     return out
 
 
-def _print_history_block(h: dict[str, int]) -> None:
-    by_round: dict[int, list[str]] = {}
-    for k, v in h.items():
-        by_round.setdefault(v, []).append(k)
-    for rn in sorted(by_round):
-        names = sorted(by_round[rn])
-        print(f"    # round {rn} ({len(names)} entries)")
-        cur = "   "
-        for n in names:
-            item = f' "{n}": {rn},'
-            if len(cur) + len(item) > 79:
-                print(cur)
-                cur = "   "
-            cur += item
-        if cur.strip():
-            print(cur)
-
-
 def main() -> None:
     args = sys.argv[1:]
-    if "--print-history" in args:
-        _print_history_block(rebuild_history())
-        return
-    if "--verify-history" in args:
-        from flock_spark.registry import CERTIFIED_ROUNDS
-
-        derived = rebuild_history()
-        bad = {
-            n: (rn, derived.get(n))
-            for n, rn in CERTIFIED_ROUNDS.items()
-            if derived.get(n) != rn
-        }
-        missing = sorted(n for n in derived if n not in CERTIFIED_ROUNDS)
-        if bad:
-            print(f"MISMATCH: {bad}")
-            sys.exit(1)
-        print(f"history ok: {len(CERTIFIED_ROUNDS)} committed, "
-              f"{len(derived)} derivable"
-              + (f", {len(missing)} not yet folded in: {missing}" if missing else ""))
-        return
     if "--write-fingerprints" in args:
-        fps = entry_fingerprints()
-        json.dump(fps, open(FINGERPRINT_PATH, "w"), indent=0, sort_keys=True)
-        print(f"wrote {len(fps)} fingerprints to {FINGERPRINT_PATH}")
+        folded = write_fingerprints()
+        print(f"folded {len(folded)} certified fingerprints into {FINGERPRINT_PATH}")
         return
     if "--changed" in args:
         ch = changed_entries()
