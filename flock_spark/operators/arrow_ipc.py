@@ -26,6 +26,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from flock_spark.operators.digests import _AUDIT_ORACLE, column_audit
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -337,34 +338,7 @@ def _stage_arrows(sf_dir: str) -> str:
 
 @register(
     "scan_arrow_ipc_stream_walk",
-    oracle="""
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars_gap', CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE n_chars END)
-                AS BIGINT),
-           md5(string_agg(
-             CASE WHEN doc_id % 7 = 0 THEN 'null'
-                  ELSE CAST(n_chars AS VARCHAR) END, ',' ORDER BY doc_id))
-    FROM documents
-    UNION ALL
-    SELECT 'text', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(sum(octet_length(encode(text))) AS BIGINT),
-           md5(string_agg(md5(text), ',' ORDER BY doc_id))
-    FROM documents
-    UNION ALL
-    SELECT 'source', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(sum(octet_length(encode(source))) AS BIGINT),
-           md5(string_agg(md5(source), ',' ORDER BY doc_id))
-    FROM documents
-    """,
+    oracle=_AUDIT_ORACLE,
     tags=("scan", "formats", "wire", "pandas_udf", "staged"),
     doc="From-spec Arrow IPC STREAM walk — the reference's actual "
     "function-to-function wire format (payload.rs:119-128 ships record "
@@ -395,58 +369,17 @@ def scan_arrow_ipc_stream_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [],
-                "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                fields, cols = arrow_ipc_stream_read(bytes(content))
-                # certify the fixture shape: the dictionary column must
-                # really be dictionary-encoded, the gap column nullable
-                by_name = {f["name"]: f for f in fields}
-                if by_name["source"]["dict_id"] is None:
-                    raise ValueError("source column lost its dictionary")
-                for col in ("doc_id", "n_chars_gap", "text", "source"):
-                    vals = cols[col]
-                    nulls = sum(1 for v in vals if v is None)
-                    if col in ("text", "source"):
-                        sv = sum(
-                            len(v.encode()) for v in vals if v is not None
-                        )
-                        joined = ",".join(
-                            "null" if v is None
-                            else hashlib.md5(v.encode()).hexdigest()
-                            for v in vals
-                        )
-                    else:
-                        sv = sum(v for v in vals if v is not None)
-                        joined = ",".join(
-                            "null" if v is None else str(v) for v in vals
-                        )
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(nulls)
-                    rows["sum_v"].append(sv)
-                    rows["values_md5"].append(
-                        hashlib.md5(joined.encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
+    def walk(content: bytes) -> Iterator[tuple[str, list, bool]]:
+        fields, cols = arrow_ipc_stream_read(content)
+        # certify the fixture shape: the dictionary column must
+        # really be dictionary-encoded, the gap column nullable
+        by_name = {f["name"]: f for f in fields}
+        if by_name["source"]["dict_id"] is None:
+            raise ValueError("source column lost its dictionary")
+        for col in ("doc_id", "n_chars_gap", "text", "source"):
+            yield col, cols[col], col in ("text", "source")
 
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, "
-        "sum_v long, values_md5 string",
-    )
+    return column_audit(bf, walk)
 
 
 # ---------------------------------------------------------------------------
@@ -630,65 +563,22 @@ def scan_arrow_ipc_file_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [],
-                "sum_v": [], "values_md5": [],
-            }
+    def walk(data: bytes) -> Iterator[tuple[str, list, bool]]:
+        fields, cols, rb_blocks = arrow_ipc_file_read(data)
+        yield "doc_id", cols["doc_id"], False
+        yield "n_chars_gap", cols["n_chars_gap"], False
+        yield "source", cols["source"], True
+        # random access: decode ONLY the footer's last block
+        off, _m, _b = rb_blocks[-1]
+        msg, body = _read_envelope(data, off)
+        types = [
+            f["index_type"] if f["dict_id"] is not None else f["type"]
+            for f in fields
+        ]
+        last = _decode_record_batch(msg.table(2), body, types)
+        yield "doc_id_last_block", last[0], False
 
-            def emit(name: str, vals: list, stringish: bool) -> None:
-                nulls = sum(1 for v in vals if v is None)
-                if stringish:
-                    sv = sum(len(v.encode()) for v in vals if v is not None)
-                    joined = ",".join(
-                        "null" if v is None
-                        else hashlib.md5(v.encode()).hexdigest()
-                        for v in vals
-                    )
-                else:
-                    sv = sum(v for v in vals if v is not None)
-                    joined = ",".join(
-                        "null" if v is None else str(v) for v in vals
-                    )
-                rows["col_name"].append(name)
-                rows["n_values"].append(len(vals))
-                rows["n_nulls"].append(nulls)
-                rows["sum_v"].append(sv)
-                rows["values_md5"].append(
-                    hashlib.md5(joined.encode()).hexdigest()
-                )
-
-            for content in pdf["content"]:
-                data = bytes(content)
-                fields, cols, rb_blocks = arrow_ipc_file_read(data)
-                emit("doc_id", cols["doc_id"], False)
-                emit("n_chars_gap", cols["n_chars_gap"], False)
-                emit("source", cols["source"], True)
-                # random access: decode ONLY the footer's last block
-                off, _m, _b = rb_blocks[-1]
-                msg, body = _read_envelope(data, off)
-                types = [
-                    f["index_type"] if f["dict_id"] is not None else f["type"]
-                    for f in fields
-                ]
-                last = _decode_record_batch(msg.table(2), body, types)
-                emit("doc_id_last_block", last[0], False)
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
-
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, "
-        "sum_v long, values_md5 string",
-    )
+    return column_audit(bf, walk)
 
 
 # ---------------------------------------------------------------------------

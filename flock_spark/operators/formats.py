@@ -21,7 +21,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flock_spark.catalog import tbl
 from flock_spark.operators.bitio import read_uvarint, unzigzag, write_uvarint
+# constants apart from helpers: an entry's fingerprint takes in the whole
+# import statement of each constant it reads (tools/slate_builder.py)
+from flock_spark.operators.digests import _PAGE_ORACLE, _PAYLOAD_CASE, _ZSTD_ORACLE
+from flock_spark.operators.digests import byte_roundtrip, page_decode
 from flock_spark.registry import register
 
 # Thrift compact protocol type nibbles (public spec).
@@ -615,23 +620,7 @@ def parquet_column_read(content: bytes, col_index: int) -> list:
 
 @register(
     "scan_parquet_page_decode",
-    oracle="""
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(min(doc_id) AS BIGINT) AS min_v,
-           CAST(max(doc_id) AS BIGINT) AS max_v,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(min(n_chars) AS BIGINT), CAST(max(n_chars) AS BIGINT),
-           CAST(sum(n_chars) AS BIGINT),
-           md5(string_agg(CAST(n_chars AS VARCHAR), ',' ORDER BY doc_id))
-    FROM documents
-    """,
+    oracle=_PAGE_ORACLE,
     tags=("scan", "formats", "codec", "pandas_udf"),
     doc="Complete from-scratch parquet COLUMN read of the real testdata "
     "bytes — the layer below scan_parquet_footer_thrift_walk: footer -> "
@@ -655,48 +644,7 @@ def scan_parquet_page_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{sf_dir}/documents.parquet")
         .select("content")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [], "min_v": [],
-                "max_v": [], "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                content = bytes(content)
-                info = parquet_footer_parse(content)
-                names = [n for n, _ in info["schema"]]
-                for col in ("doc_id", "n_chars"):
-                    vals = parquet_column_read(content, names.index(col))
-                    present = [v for v in vals if v is not None]
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["min_v"].append(min(present))
-                    rows["max_v"].append(max(present))
-                    rows["sum_v"].append(sum(present))
-                    rows["values_md5"].append(
-                        hashlib.md5(
-                            ",".join(str(v) for v in present).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "min_v": pd.Series(rows["min_v"], dtype="int64"),
-                    "max_v": pd.Series(rows["max_v"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
-
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, min_v long, "
-        "max_v long, sum_v long, values_md5 string",
-    )
+    return page_decode(bf, "SNAPPY")
 
 
 # ---------------------------------------------------------------------------
@@ -740,23 +688,7 @@ def _stage_parquet_gzip(sf_dir: str) -> str:
 
 @register(
     "scan_parquet_gzip_page_decode",
-    oracle="""
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(min(doc_id) AS BIGINT) AS min_v,
-           CAST(max(doc_id) AS BIGINT) AS max_v,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(min(n_chars) AS BIGINT), CAST(max(n_chars) AS BIGINT),
-           CAST(sum(n_chars) AS BIGINT),
-           md5(string_agg(CAST(n_chars AS VARCHAR), ',' ORDER BY doc_id))
-    FROM documents
-    """,
+    oracle=_PAGE_ORACLE,
     tags=("scan", "formats", "codec", "pandas_udf", "staged"),
     doc="From-scratch parquet COLUMN read over GZIP-COMPRESSED pages — the "
     "wild-corpus variant of scan_parquet_page_decode (real archival "
@@ -782,78 +714,12 @@ def scan_parquet_gzip_page_decode(spark: SparkSession, sf_dir: str) -> DataFrame
         .load(f"{path}/documents_gzip.parquet")
         .select("content")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [], "min_v": [],
-                "max_v": [], "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                content = bytes(content)
-                info = parquet_footer_parse(content)
-                names = [n for n, _ in info["schema"]]
-                # certify the fixture really is gzip-paged, not silently
-                # uncompressed: every chunk must declare codec 2
-                codecs = {
-                    c["codec"]
-                    for rg in info["row_groups"]
-                    for c in rg["columns"]
-                }
-                if codecs != {"GZIP"}:
-                    raise ValueError(f"fixture not gzip-paged: {codecs}")
-                for col in ("doc_id", "n_chars"):
-                    vals = parquet_column_read(content, names.index(col))
-                    present = [v for v in vals if v is not None]
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["min_v"].append(min(present))
-                    rows["max_v"].append(max(present))
-                    rows["sum_v"].append(sum(present))
-                    rows["values_md5"].append(
-                        hashlib.md5(
-                            ",".join(str(v) for v in present).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "min_v": pd.Series(rows["min_v"], dtype="int64"),
-                    "max_v": pd.Series(rows["max_v"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
-
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, min_v long, "
-        "max_v long, sum_v long, values_md5 string",
-    )
+    return page_decode(bf, "GZIP")
 
 
 @register(
     "scan_parquet_lz4_page_decode",
-    oracle="""
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(min(doc_id) AS BIGINT) AS min_v,
-           CAST(max(doc_id) AS BIGINT) AS max_v,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(min(n_chars) AS BIGINT), CAST(max(n_chars) AS BIGINT),
-           CAST(sum(n_chars) AS BIGINT),
-           md5(string_agg(CAST(n_chars AS VARCHAR), ',' ORDER BY doc_id))
-    FROM documents
-    """,
+    oracle=_PAGE_ORACLE,
     tags=("scan", "formats", "codec", "pandas_udf", "staged"),
     doc="From-scratch parquet COLUMN read over LZ4_RAW pages — the third "
     "page codec after SNAPPY and GZIP, and the cross-implementation "
@@ -875,55 +741,7 @@ def scan_parquet_lz4_page_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{path}/documents_lz4.parquet")
         .select("content")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [], "min_v": [],
-                "max_v": [], "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                content = bytes(content)
-                info = parquet_footer_parse(content)
-                names = [n for n, _ in info["schema"]]
-                codecs = {
-                    c["codec"]
-                    for rg in info["row_groups"]
-                    for c in rg["columns"]
-                }
-                if codecs != {"LZ4_RAW"}:
-                    raise ValueError(f"fixture not lz4-paged: {codecs}")
-                for col in ("doc_id", "n_chars"):
-                    vals = parquet_column_read(content, names.index(col))
-                    present = [v for v in vals if v is not None]
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["min_v"].append(min(present))
-                    rows["max_v"].append(max(present))
-                    rows["sum_v"].append(sum(present))
-                    rows["values_md5"].append(
-                        hashlib.md5(
-                            ",".join(str(v) for v in present).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "min_v": pd.Series(rows["min_v"], dtype="int64"),
-                    "max_v": pd.Series(rows["max_v"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
-
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, min_v long, "
-        "max_v long, sum_v long, values_md5 string",
-    )
+    return page_decode(bf, "LZ4_RAW")
 
 
 # ---------------------------------------------------------------------------
@@ -1135,23 +953,7 @@ def scan_csv_rfc4180_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scan_parquet_zstd_page_decode",
-    oracle="""
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(min(doc_id) AS BIGINT) AS min_v,
-           CAST(max(doc_id) AS BIGINT) AS max_v,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(min(n_chars) AS BIGINT), CAST(max(n_chars) AS BIGINT),
-           CAST(sum(n_chars) AS BIGINT),
-           md5(string_agg(CAST(n_chars AS VARCHAR), ',' ORDER BY doc_id))
-    FROM documents
-    """,
+    oracle=_PAGE_ORACLE,
     tags=("scan", "formats", "codec", "pandas_udf", "staged"),
     doc="From-scratch parquet COLUMN read over ZSTD pages — the modern "
     "archival default page codec and the FOURTH page codec after SNAPPY, "
@@ -1175,55 +977,7 @@ def scan_parquet_zstd_page_decode(spark: SparkSession, sf_dir: str) -> DataFrame
         .load(f"{path}/documents_zstd.parquet")
         .select("content")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [], "min_v": [],
-                "max_v": [], "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                content = bytes(content)
-                info = parquet_footer_parse(content)
-                names = [n for n, _ in info["schema"]]
-                codecs = {
-                    c["codec"]
-                    for rg in info["row_groups"]
-                    for c in rg["columns"]
-                }
-                if codecs != {"ZSTD"}:
-                    raise ValueError(f"fixture not zstd-paged: {codecs}")
-                for col in ("doc_id", "n_chars"):
-                    vals = parquet_column_read(content, names.index(col))
-                    present = [v for v in vals if v is not None]
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["min_v"].append(min(present))
-                    rows["max_v"].append(max(present))
-                    rows["sum_v"].append(sum(present))
-                    rows["values_md5"].append(
-                        hashlib.md5(
-                            ",".join(str(v) for v in present).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "min_v": pd.Series(rows["min_v"], dtype="int64"),
-                    "max_v": pd.Series(rows["max_v"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
-
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, min_v long, "
-        "max_v long, sum_v long, values_md5 string",
-    )
+    return page_decode(bf, "ZSTD")
 
 
 # ---------------------------------------------------------------------------
@@ -1774,78 +1528,43 @@ def snappy_compress(data: bytes, max_chain: int = 16) -> bytes:
     return bytes(out)
 
 
-def _register_snappy_encode() -> None:
-    from flock_spark.operators.zstd_codec import _PAYLOAD_CASE, _ZSTD_ORACLE
-
-    @register(
-        "mm_snappy_encode_roundtrip",
-        oracle=_ZSTD_ORACLE,
-        tags=("multimodal", "pandas_udf", "codec"),
-        doc="Snappy ENCODE with real copy elements — completing the "
-        "snappy pair (the decoder landed in round 9; fixture writers "
-        "so far used the literal-only minimal form): greedy hash-4 "
-        "matching, 1-byte-offset copies (len 4-11, offset < 2048), "
-        "2-byte-offset copies with long-match splitting that never "
-        "strands a sub-4-byte tail, literal runs with extended length "
-        "tags. Every stream is decompressed by the REAL snappy "
-        "library (pyarrow) AND re-read by this module's own from-spec "
-        "decoder. Oracle identical to the other codec entries (repeat "
-        "algebra over the same five payload shapes). Scale: "
-        "per-object mapInPandas, single scan, no shuffle.",
+@register(
+    "mm_snappy_encode_roundtrip",
+    oracle=_ZSTD_ORACLE,
+    tags=("multimodal", "pandas_udf", "codec"),
+    doc="Snappy ENCODE with real copy elements — completing the "
+    "snappy pair (the decoder landed in round 9; fixture writers "
+    "so far used the literal-only minimal form): greedy hash-4 "
+    "matching, 1-byte-offset copies (len 4-11, offset < 2048), "
+    "2-byte-offset copies with long-match splitting that never "
+    "strands a sub-4-byte tail, literal runs with extended length "
+    "tags. Every stream is decompressed by the REAL snappy "
+    "library (pyarrow) AND re-read by this module's own from-spec "
+    "decoder. Oracle identical to the other codec entries (repeat "
+    "algebra over the same five payload shapes). Scale: "
+    "per-object mapInPandas, single scan, no shuffle.",
+)
+def mm_snappy_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = (
+        tbl(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
-    def mm_snappy_encode_roundtrip(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        from flock_spark.catalog import spread, tbl
 
-        d = (
-            tbl(spark, sf_dir, "documents")
-            .filter(F.col("text").isNotNull())
-            .selectExpr(
-                "doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload"
-            )
-        )
+    def make_check():
+        import pyarrow as pa
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import pyarrow as pa
+        codec = pa.Codec("snappy")
 
-            codec = pa.Codec("snappy")
-            for pdf in batches:
-                out_doc, out_n, out_sum, out_md5 = [], [], [], []
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    b = bytes(payload)
-                    stream = snappy_compress(b)
-                    if bytes(codec.decompress(stream, len(b))) != b:
-                        raise ValueError(
-                            f"real snappy read our stream differently "
-                            f"for doc {doc_id}"
-                        )
-                    if snappy_decompress(stream) != b:
-                        raise ValueError(
-                            f"self-decode mismatch for doc {doc_id}"
-                        )
-                    out_doc.append(int(doc_id))
-                    out_n.append(len(b))
-                    out_sum.append(sum(b))
-                    out_md5.append(
-                        hashlib.md5(b.hex().upper().encode()).hexdigest()
-                    )
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(out_doc, dtype="int64"),
-                        "n_bytes": pd.Series(out_n, dtype="int64"),
-                        "byte_sum": pd.Series(out_sum, dtype="int64"),
-                        "decoded_md5": pd.Series(
-                            out_md5, dtype="object"
-                        ),
-                    }
+        def check(doc_id: int, b: bytes) -> None:
+            stream = snappy_compress(b)
+            if bytes(codec.decompress(stream, len(b))) != b:
+                raise ValueError(
+                    f"real snappy read our stream differently for doc {doc_id}"
                 )
+            if snappy_decompress(stream) != b:
+                raise ValueError(f"self-decode mismatch for doc {doc_id}")
 
-        return spread(d).mapInPandas(
-            run,
-            schema="doc_id long, n_bytes long, byte_sum long, "
-            "decoded_md5 string",
-        )
+        return check
 
-
-_register_snappy_encode()
+    return byte_roundtrip(d, make_check)

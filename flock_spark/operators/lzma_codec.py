@@ -41,15 +41,12 @@ embarrassingly parallel like every codec entry in this repo.
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flock_spark.catalog import spread, tbl
+from flock_spark.catalog import tbl
 from flock_spark.operators.bitio import crc32, read_uvarint, write_uvarint
+from flock_spark.operators.digests import _PAYLOAD_CASE, _ZSTD_ORACLE, byte_roundtrip
 from flock_spark.registry import register
 
 STATS: dict[str, int] = {}
@@ -944,15 +941,10 @@ def lzma_alone_decompress(data: bytes) -> bytes:
 # Certified entry: REAL liblzma compresses, this module decodes
 # ---------------------------------------------------------------------------
 
-from flock_spark.operators.zstd_codec import (  # noqa: E402
-    _PAYLOAD_CASE as _XZ_PAYLOAD_CASE,
-    _ZSTD_ORACLE as _XZ_ORACLE,
-)
-
 
 @register(
     "mm_xz_lzma_decode",
-    oracle=_XZ_ORACLE,
+    oracle=_ZSTD_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="XZ / LZMA2 / LZMA decode from the published specs — the SEVENTH "
     "compression family (after DEFLATE, LZW, snappy, zstd, LZ4, bzip2): "
@@ -974,12 +966,10 @@ def mm_xz_lzma_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_XZ_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_check():
         import lzma
 
         def make(doc_id: int, b: bytes) -> bytes:
@@ -1018,42 +1008,24 @@ def mm_xz_lzma_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             return lzma.compress(b, format=lzma.FORMAT_XZ,
                                  check=lzma.CHECK_CRC64, preset=6) * 2
 
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                v = int(doc_id) % 7
-                frame = make(int(doc_id), b)
-                if v == 5:
-                    dec = lzma_alone_decompress(frame)
-                    want = b
-                elif v == 6:  # two concatenated streams
-                    dec = xz_decompress(frame)
-                    want = b + b
-                else:
-                    dec = xz_decompress(frame)
-                    want = b
-                if dec != want:
-                    raise ValueError(f"xz decode mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_n.append(len(b))
-                out_sum.append(sum(b))
-                out_md5.append(
-                    hashlib.md5(b.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+        def check(doc_id: int, b: bytes) -> None:
+            v = doc_id % 7
+            frame = make(doc_id, b)
+            if v == 5:
+                dec = lzma_alone_decompress(frame)
+                want = b
+            elif v == 6:  # two concatenated streams
+                dec = xz_decompress(frame)
+                want = b + b
+            else:
+                dec = xz_decompress(frame)
+                want = b
+            if dec != want:
+                raise ValueError(f"xz decode mismatch for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        return check
+
+    return byte_roundtrip(d, make_check)
 
 
 # ---------------------------------------------------------------------------
@@ -1216,7 +1188,7 @@ def xz_compress(data: bytes, chunk_size: int = 1 << 15) -> bytes:
 
 @register(
     "mm_xz_encode_roundtrip",
-    oracle=_XZ_ORACLE,
+    oracle=_ZSTD_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="XZ ENCODE from the specs — completing the LAST codec pair: a "
     "from-spec binary RANGE ENCODER (11-bit adaptive probabilities, "
@@ -1239,41 +1211,21 @@ def mm_xz_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_XZ_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_check():
         import lzma
 
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                frame = xz_compress(b)
-                if lzma.decompress(frame, format=lzma.FORMAT_XZ) != b:
-                    raise ValueError(
-                        f"liblzma read our file differently for doc {doc_id}"
-                    )
-                if xz_decompress(frame) != b:
-                    raise ValueError(f"self-decode mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_n.append(len(b))
-                out_sum.append(sum(b))
-                out_md5.append(
-                    hashlib.md5(b.hex().upper().encode()).hexdigest()
+        def check(doc_id: int, b: bytes) -> None:
+            frame = xz_compress(b)
+            if lzma.decompress(frame, format=lzma.FORMAT_XZ) != b:
+                raise ValueError(
+                    f"liblzma read our file differently for doc {doc_id}"
                 )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+            if xz_decompress(frame) != b:
+                raise ValueError(f"self-decode mismatch for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        return check
+
+    return byte_roundtrip(d, make_check)

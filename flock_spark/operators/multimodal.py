@@ -33,6 +33,12 @@ from flock_spark.operators.bitio import (
     canonical_codes,
     crc32,
 )
+from flock_spark.operators.digests import (
+    _PAYLOAD_CASE,
+    _PLAIN_ORACLE,
+    _ZSTD_ORACLE,
+    byte_roundtrip,
+)
 from flock_spark.registry import register
 
 try:  # decode libs absent in this container — gate, don't fail at import
@@ -1899,24 +1905,7 @@ def lz4_block_compress(data: bytes) -> bytes:
 
 @register(
     "mm_lz4_block_roundtrip",
-    oracle="""
-    WITH img AS (
-      SELECT doc_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) AS n
-      FROM documents
-      WHERE octet_length(encode(text)) > 0),
-    samples AS (
-      SELECT doc_id, unnest(generate_series(1, n)) AS i FROM img),
-    sums AS (
-      SELECT s.doc_id,
-             CAST(count(*) AS BIGINT) AS n_bytes,
-             CAST(sum(('0x' || substring(i2.hx, s.i * 2 - 1, 2))::BIGINT)
-                  AS BIGINT) AS byte_sum
-      FROM samples s JOIN img i2 USING (doc_id) GROUP BY s.doc_id)
-    SELECT sums.doc_id, sums.n_bytes, sums.byte_sum,
-           md5(img.hx) AS decoded_md5
-    FROM sums JOIN img ON sums.doc_id = img.doc_id
-    """,
+    oracle=_PLAIN_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="LZ4 block codec from the public block-format spec — the third "
     "real compression family (after DEFLATE and SNAPPY) and the raw "
@@ -1940,34 +1929,11 @@ def mm_lz4_block_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                comp = lz4_block_compress(b)
-                dec = lz4_block_decompress(comp)
-                if dec != b:
-                    raise ValueError(f"LZ4 roundtrip mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_n.append(len(dec))
-                out_sum.append(sum(dec))
-                out_md5.append(
-                    hashlib.md5(dec.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+    def check(doc_id: int, b: bytes) -> None:
+        if lz4_block_decompress(lz4_block_compress(b)) != b:
+            raise ValueError(f"LZ4 roundtrip mismatch for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+    return byte_roundtrip(d, lambda: check)
 
 
 # ---------------------------------------------------------------------------
@@ -2317,24 +2283,7 @@ def zlib_inflate(stream: bytes) -> bytes:
 
 @register(
     "mm_zlib_inflate_dynamic",
-    oracle="""
-    WITH img AS (
-      SELECT doc_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) AS n
-      FROM documents
-      WHERE octet_length(encode(text)) > 0),
-    samples AS (
-      SELECT doc_id, unnest(generate_series(1, n)) AS i FROM img),
-    sums AS (
-      SELECT s.doc_id,
-             CAST(count(*) AS BIGINT) AS n_bytes,
-             CAST(sum(('0x' || substring(i2.hx, s.i * 2 - 1, 2))::BIGINT)
-                  AS BIGINT) AS byte_sum
-      FROM samples s JOIN img i2 USING (doc_id) GROUP BY s.doc_id)
-    SELECT sums.doc_id, sums.n_bytes, sums.byte_sum,
-           md5(img.hx) AS decoded_md5
-    FROM sums JOIN img ON sums.doc_id = img.doc_id
-    """,
+    oracle=_PLAIN_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="Complete RFC 1951 DEFLATE decoder run against REAL compressor "
     "output: each document's bytes are compressed with the stdlib zlib "
@@ -2352,41 +2301,22 @@ def zlib_inflate(stream: bytes) -> bytes:
     "memory per task (the 32 KiB LZ77 window bounds state).",
 )
 def mm_zlib_inflate_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import zlib as _zlib
-
     d = (
         tbl(spark, sf_dir, "documents")
         .select("doc_id", F.col("text").cast("binary").alias("payload"))
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                original = bytes(payload)
-                compressed = _zlib.compress(original, 6)
-                decoded = zlib_inflate(compressed)
-                if decoded != original:
-                    raise ValueError(f"inflate mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_n.append(len(decoded))
-                out_sum.append(int(sum(decoded)))
-                out_md5.append(
-                    hashlib.md5(decoded.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+    def make_check():
+        import zlib
 
-    return spread(d).mapInPandas(
-        run, schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string"
-    )
+        def check(doc_id: int, b: bytes) -> None:
+            if zlib_inflate(zlib.compress(b, 6)) != b:
+                raise ValueError(f"inflate mismatch for doc {doc_id}")
+
+        return check
+
+    return byte_roundtrip(d, make_check)
 
 
 # ---------------------------------------------------------------------------
@@ -4989,24 +4919,7 @@ def qp_decode(data: bytes) -> bytes:
 
 @register(
     "mm_quoted_printable_roundtrip",
-    oracle="""
-    WITH img AS (
-      SELECT doc_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) AS n
-      FROM documents
-      WHERE octet_length(encode(text)) > 0),
-    samples AS (
-      SELECT doc_id, unnest(generate_series(1, n)) AS i FROM img),
-    sums AS (
-      SELECT s.doc_id,
-             CAST(count(*) AS BIGINT) AS n_bytes,
-             CAST(sum(('0x' || substring(i2.hx, s.i * 2 - 1, 2))::BIGINT)
-                  AS BIGINT) AS byte_sum
-      FROM samples s JOIN img i2 USING (doc_id) GROUP BY s.doc_id)
-    SELECT sums.doc_id, sums.n_bytes, sums.byte_sum,
-           md5(img.hx) AS decoded_md5
-    FROM sums JOIN img ON sums.doc_id = img.doc_id
-    """,
+    oracle=_PLAIN_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="Quoted-printable (RFC 2045 §6.7) encode + decode from the spec — "
     "the MIME transfer coding mail/news/mbox corpora arrive in, and the "
@@ -5030,49 +4943,24 @@ def mm_quoted_printable_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import quopri as _quopri
+    def make_check():
+        import quopri
 
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                enc = qp_encode(b)
-                for ln in enc.split(b"\r\n"):
-                    if len(ln) > QP_MAX_LINE:
-                        raise ValueError(
-                            f"encoded line exceeds {QP_MAX_LINE} octets"
-                        )
-                dec = qp_decode(enc)
-                if dec != b:
-                    raise ValueError(f"QP roundtrip mismatch for doc {doc_id}")
-                if qp_decode(_quopri.encodestring(b)) != b:
-                    raise ValueError(
-                        f"our decoder rejects stdlib QP for doc {doc_id}"
-                    )
-                if _quopri.decodestring(enc) != b:
-                    raise ValueError(
-                        f"stdlib rejects our QP encoding for doc {doc_id}"
-                    )
-                out_doc.append(int(doc_id))
-                out_n.append(len(dec))
-                out_sum.append(sum(dec))
-                out_md5.append(
-                    hashlib.md5(dec.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+        def check(doc_id: int, b: bytes) -> None:
+            enc = qp_encode(b)
+            for ln in enc.split(b"\r\n"):
+                if len(ln) > QP_MAX_LINE:
+                    raise ValueError(f"encoded line exceeds {QP_MAX_LINE} octets")
+            if qp_decode(enc) != b:
+                raise ValueError(f"QP roundtrip mismatch for doc {doc_id}")
+            if qp_decode(quopri.encodestring(b)) != b:
+                raise ValueError(f"our decoder rejects stdlib QP for doc {doc_id}")
+            if quopri.decodestring(enc) != b:
+                raise ValueError(f"stdlib rejects our QP encoding for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        return check
+
+    return byte_roundtrip(d, make_check)
 
 
 # ---------------------------------------------------------------------------
@@ -5279,15 +5167,13 @@ def _bz_stream_blocks(
         out_all += out
 
 
-from flock_spark.operators.zstd_codec import (  # noqa: E402
-    _PAYLOAD_CASE as _BZ_PAYLOAD_CASE,
-    _ZSTD_ORACLE as _BZ_ORACLE,
-)
+# registers the two zstd entries here, ahead of mm_bzip2_decode, as before
+import flock_spark.operators.zstd_codec  # noqa: E402,F401
 
 
 @register(
     "mm_bzip2_decode",
-    oracle=_BZ_ORACLE,
+    oracle=_ZSTD_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="From-spec bzip2 decode — the FIFTH compression family (after "
     "DEFLATE, Snappy, LZ4 and Zstd) and the codec of Wikipedia dumps "
@@ -5309,43 +5195,19 @@ def mm_bzip2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_BZ_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import bz2 as _bz2
+    def make_check():
+        import bz2
 
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                lvl = (1, 5, 9)[int(doc_id) % 3]
-                dec = bzip2_decompress(_bz2.compress(b, lvl))
-                if dec != b:
-                    raise ValueError(
-                        f"bzip2 roundtrip mismatch for doc {doc_id}"
-                    )
-                out_doc.append(int(doc_id))
-                out_n.append(len(dec))
-                out_sum.append(sum(dec))
-                out_md5.append(
-                    hashlib.md5(dec.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+        def check(doc_id: int, b: bytes) -> None:
+            if bzip2_decompress(bz2.compress(b, (1, 5, 9)[doc_id % 3])) != b:
+                raise ValueError(f"bzip2 roundtrip mismatch for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        return check
+
+    return byte_roundtrip(d, make_check)
 
 
 # ---------------------------------------------------------------------------
@@ -5601,7 +5463,7 @@ def deflate_compress(data: bytes) -> bytes:
 
 @register(
     "mm_deflate_encode_roundtrip",
-    oracle=_BZ_ORACLE,
+    oracle=_ZSTD_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="DEFLATE ENCODE from RFC 1951 — the reverse certification "
     "direction from the from-spec inflate above, completing the codec "
@@ -5619,53 +5481,29 @@ def deflate_compress(data: bytes) -> bytes:
     "per-object mapInPandas, single scan, no shuffle.",
 )
 def mm_deflate_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flock_spark.operators.zstd_codec import _PAYLOAD_CASE
-
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_check():
         import zlib
 
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                stream = deflate_compress(b)
-                dec = zlib.decompressobj(-15)
-                real = dec.decompress(stream)
-                if real != b or not dec.eof or dec.unused_data not in (
-                    b"", None
-                ):
-                    raise ValueError(
-                        f"zlib read our stream differently for doc {doc_id}"
-                    )
-                if inflate(stream) != b:
-                    raise ValueError(f"self-decode mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_n.append(len(b))
-                out_sum.append(sum(b))
-                out_md5.append(
-                    hashlib.md5(b.hex().upper().encode()).hexdigest()
+        def check(doc_id: int, b: bytes) -> None:
+            stream = deflate_compress(b)
+            dec = zlib.decompressobj(-15)
+            real = dec.decompress(stream)
+            if real != b or not dec.eof or dec.unused_data not in (b"", None):
+                raise ValueError(
+                    f"zlib read our stream differently for doc {doc_id}"
                 )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+            if inflate(stream) != b:
+                raise ValueError(f"self-decode mismatch for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        return check
+
+    return byte_roundtrip(d, make_check)
 
 
 # ---------------------------------------------------------------------------
@@ -5881,7 +5719,7 @@ def bzip2_compress(
 
 @register(
     "mm_bzip2_encode_roundtrip",
-    oracle=_BZ_ORACLE,
+    oracle=_ZSTD_ORACLE,
     tags=("multimodal", "pandas_udf", "codec"),
     doc="bzip2 ENCODE from the public format description — the reverse "
     "certification direction from mm_bzip2_decode, completing the codec "
@@ -5906,41 +5744,21 @@ def mm_bzip2_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_BZ_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_check():
         import bz2
 
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                stream = bzip2_compress(b, level=1, block_cap=1500)
-                if bz2.decompress(stream) != b:
-                    raise ValueError(
-                        f"libbz2 read our stream differently for doc {doc_id}"
-                    )
-                if bzip2_decompress(stream) != b:
-                    raise ValueError(f"self-decode mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_n.append(len(b))
-                out_sum.append(sum(b))
-                out_md5.append(
-                    hashlib.md5(b.hex().upper().encode()).hexdigest()
+        def check(doc_id: int, b: bytes) -> None:
+            stream = bzip2_compress(b, level=1, block_cap=1500)
+            if bz2.decompress(stream) != b:
+                raise ValueError(
+                    f"libbz2 read our stream differently for doc {doc_id}"
                 )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+            if bzip2_decompress(stream) != b:
+                raise ValueError(f"self-decode mismatch for doc {doc_id}")
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        return check
+
+    return byte_roundtrip(d, make_check)

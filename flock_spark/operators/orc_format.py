@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from flock_spark.operators.bitio import MsbReader, read_uvarint, unzigzag
+from flock_spark.operators.digests import _AUDIT_ORACLE, column_audit
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -410,34 +411,7 @@ def _stage_orc(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "scan_orc_stripe_decode",
-    oracle="""
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars_gap', CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE n_chars END)
-                AS BIGINT),
-           md5(string_agg(
-             CASE WHEN doc_id % 7 = 0 THEN 'null'
-                  ELSE CAST(n_chars AS VARCHAR) END, ',' ORDER BY doc_id))
-    FROM documents
-    UNION ALL
-    SELECT 'text', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(sum(octet_length(encode(text))) AS BIGINT),
-           md5(string_agg(md5(text), ',' ORDER BY doc_id))
-    FROM documents
-    UNION ALL
-    SELECT 'source', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(sum(octet_length(encode(source))) AS BIGINT),
-           md5(string_agg(md5(source), ',' ORDER BY doc_id))
-    FROM documents
-    """,
+    oracle=_AUDIT_ORACLE,
     tags=("scan", "formats", "codec", "wire", "pandas_udf", "staged"),
     doc="From-spec Apache ORC stripe read over a file written by Spark's "
     "OWN ORC writer — three public specs composed with zero library "
@@ -465,53 +439,12 @@ def scan_orc_stripe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [],
-                "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                names, cols = orc_read_columns(bytes(content))
-                for col in ("doc_id", "n_chars_gap", "text", "source"):
-                    vals = cols[col]
-                    nulls = sum(1 for v in vals if v is None)
-                    if col in ("text", "source"):
-                        sv = sum(
-                            len(v.encode()) for v in vals if v is not None
-                        )
-                        joined = ",".join(
-                            "null" if v is None
-                            else hashlib.md5(v.encode()).hexdigest()
-                            for v in vals
-                        )
-                    else:
-                        sv = sum(v for v in vals if v is not None)
-                        joined = ",".join(
-                            "null" if v is None else str(v) for v in vals
-                        )
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(nulls)
-                    rows["sum_v"].append(sv)
-                    rows["values_md5"].append(
-                        hashlib.md5(joined.encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
+    def walk(content: bytes) -> Iterator[tuple[str, list, bool]]:
+        _names, cols = orc_read_columns(content)
+        for col in ("doc_id", "n_chars_gap", "text", "source"):
+            yield col, cols[col], col in ("text", "source")
 
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, "
-        "sum_v long, values_md5 string",
-    )
+    return column_audit(bf, walk)
 
 
 # ---------------------------------------------------------------------------

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from flock_spark.operators.bitio import crc32, write_uvarint, zigzag
+from flock_spark.operators.digests import _AUDIT_ORACLE
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -374,34 +375,46 @@ def _stage_own_parquet(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-_AUDIT_ORACLE = """
-    SELECT 'doc_id' AS col_name,
-           CAST(count(*) AS BIGINT) AS n_values,
-           CAST(0 AS BIGINT) AS n_nulls,
-           CAST(sum(doc_id) AS BIGINT) AS sum_v,
-           md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-             AS values_md5
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars_gap', CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE n_chars END)
-                AS BIGINT),
-           md5(string_agg(
-             CASE WHEN doc_id % 7 = 0 THEN 'null'
-                  ELSE CAST(n_chars AS VARCHAR) END, ',' ORDER BY doc_id))
-    FROM documents
-    UNION ALL
-    SELECT 'text', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(sum(octet_length(encode(text))) AS BIGINT),
-           md5(string_agg(md5(text), ',' ORDER BY doc_id))
-    FROM documents
-    UNION ALL
-    SELECT 'source', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(sum(octet_length(encode(source))) AS BIGINT),
-           md5(string_agg(md5(source), ',' ORDER BY doc_id))
-    FROM documents
-"""
+def _audit_sql(view: str) -> str:
+    """Spark SQL twin of ``digests._AUDIT_ORACLE`` over ``view``: the
+    md5 chains sort (doc_id, value) structs to restore doc_id order."""
+    return f"""
+        SELECT 'doc_id' AS col_name,
+               count(*) AS n_values,
+               CAST(0 AS BIGINT) AS n_nulls,
+               sum(doc_id) AS sum_v,
+               md5(CAST(concat_ws(',', transform(
+                 array_sort(collect_list(named_struct(
+                   'k', doc_id, 'v', CAST(doc_id AS STRING)))),
+                 x -> x.v)) AS BINARY)) AS values_md5
+        FROM {view}
+        UNION ALL
+        SELECT 'n_chars_gap', count(*),
+               sum(CASE WHEN n_chars_gap IS NULL THEN 1 ELSE 0 END),
+               sum(coalesce(n_chars_gap, 0)),
+               md5(CAST(concat_ws(',', transform(
+                 array_sort(collect_list(named_struct(
+                   'k', doc_id,
+                   'v', coalesce(CAST(n_chars_gap AS STRING), 'null')))),
+                 x -> x.v)) AS BINARY))
+        FROM {view}
+        UNION ALL
+        SELECT 'text', count(*), CAST(0 AS BIGINT),
+               sum(octet_length(text)),
+               md5(CAST(concat_ws(',', transform(
+                 array_sort(collect_list(named_struct(
+                   'k', doc_id, 'v', md5(CAST(text AS BINARY))))),
+                 x -> x.v)) AS BINARY))
+        FROM {view}
+        UNION ALL
+        SELECT 'source', count(*), CAST(0 AS BIGINT),
+               sum(octet_length(source)),
+               md5(CAST(concat_ws(',', transform(
+                 array_sort(collect_list(named_struct(
+                   'k', doc_id, 'v', md5(CAST(source AS BINARY))))),
+                 x -> x.v)) AS BINARY))
+        FROM {view}
+    """
 
 
 @register(
@@ -428,43 +441,7 @@ def scan_parquet_own_writer_roundtrip(
     path = _stage_own_parquet(spark, sf_dir)
     df = spark.read.parquet(f"{path}/own_writer.parquet")
     df.createOrReplaceTempView("own_writer_docs")
-    return spark.sql("""
-        SELECT 'doc_id' AS col_name,
-               count(*) AS n_values,
-               CAST(0 AS BIGINT) AS n_nulls,
-               sum(doc_id) AS sum_v,
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id, 'v', CAST(doc_id AS STRING)))),
-                 x -> x.v)) AS BINARY)) AS values_md5
-        FROM own_writer_docs
-        UNION ALL
-        SELECT 'n_chars_gap', count(*),
-               sum(CASE WHEN n_chars_gap IS NULL THEN 1 ELSE 0 END),
-               sum(coalesce(n_chars_gap, 0)),
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id,
-                   'v', coalesce(CAST(n_chars_gap AS STRING), 'null')))),
-                 x -> x.v)) AS BINARY))
-        FROM own_writer_docs
-        UNION ALL
-        SELECT 'text', count(*), CAST(0 AS BIGINT),
-               sum(octet_length(text)),
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id, 'v', md5(CAST(text AS BINARY))))),
-                 x -> x.v)) AS BINARY))
-        FROM own_writer_docs
-        UNION ALL
-        SELECT 'source', count(*), CAST(0 AS BIGINT),
-               sum(octet_length(source)),
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id, 'v', md5(CAST(source AS BINARY))))),
-                 x -> x.v)) AS BINARY))
-        FROM own_writer_docs
-    """)
+    return spark.sql(_audit_sql("own_writer_docs"))
 
 
 # ---------------------------------------------------------------------------
@@ -711,40 +688,4 @@ def scan_parquet_own_writer_v2_roundtrip(
     path = _stage_own_parquet_v2(spark, sf_dir)
     df = spark.read.parquet(f"{path}/own_writer_v2.parquet")
     df.createOrReplaceTempView("own_writer_v2_docs")
-    return spark.sql("""
-        SELECT 'doc_id' AS col_name,
-               count(*) AS n_values,
-               CAST(0 AS BIGINT) AS n_nulls,
-               sum(doc_id) AS sum_v,
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id, 'v', CAST(doc_id AS STRING)))),
-                 x -> x.v)) AS BINARY)) AS values_md5
-        FROM own_writer_v2_docs
-        UNION ALL
-        SELECT 'n_chars_gap', count(*),
-               sum(CASE WHEN n_chars_gap IS NULL THEN 1 ELSE 0 END),
-               sum(coalesce(n_chars_gap, 0)),
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id,
-                   'v', coalesce(CAST(n_chars_gap AS STRING), 'null')))),
-                 x -> x.v)) AS BINARY))
-        FROM own_writer_v2_docs
-        UNION ALL
-        SELECT 'text', count(*), CAST(0 AS BIGINT),
-               sum(octet_length(text)),
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id, 'v', md5(CAST(text AS BINARY))))),
-                 x -> x.v)) AS BINARY))
-        FROM own_writer_v2_docs
-        UNION ALL
-        SELECT 'source', count(*), CAST(0 AS BIGINT),
-               sum(octet_length(source)),
-               md5(CAST(concat_ws(',', transform(
-                 array_sort(collect_list(named_struct(
-                   'k', doc_id, 'v', md5(CAST(source AS BINARY))))),
-                 x -> x.v)) AS BINARY))
-        FROM own_writer_v2_docs
-    """)
+    return spark.sql(_audit_sql("own_writer_v2_docs"))

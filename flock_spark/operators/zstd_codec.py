@@ -21,15 +21,12 @@ bitstreams are read backward from a 1-bit sentinel exactly as specified.
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flock_spark.catalog import spread, tbl
+from flock_spark.catalog import tbl
 from flock_spark.operators.bitio import LsbReader
+from flock_spark.operators.digests import _PAYLOAD_CASE, _ZSTD_ORACLE, byte_roundtrip
 from flock_spark.registry import register
 
 ZSTD_MAGIC = 0xFD2FB528
@@ -741,71 +738,6 @@ def _decode_block(
 # the REAL libzstd encoder output at five payload shapes x three levels.
 # --------------------------------------------------------------------------
 
-# Payload derivation shared by both engines (dialect-neutral SQL): five
-# shapes spanning the encoder's format choices — plain text (~300 B,
-# single-stream Huffman), 12x repeat (~3.6 KB, 4-stream + FSE sequence
-# tables), a 200x repeated 9-char stem (repeat-offset chains), a 6-char
-# stub (raw-literals block), and a 7x repeat (mid-size).
-_PAYLOAD_CASE = """
-      CASE doc_id % 5
-        WHEN 0 THEN text
-        WHEN 1 THEN repeat(text, 12)
-        WHEN 2 THEN repeat(substring(text, 1, 9), 200)
-        WHEN 3 THEN substring(text, 1, 6)
-        ELSE repeat(text, 7)
-      END
-"""
-
-# The oracle never materializes the repeated payloads byte-by-byte: byte
-# sums distribute over repetition (byte_sum(repeat(x, k)) = k*byte_sum(x))
-# and hex distributes over byte concatenation (hex(repeat(x, k)) =
-# repeat(hex(x), k)), so the per-byte unnest runs over the BASE strings
-# only (text, its 9-char stem, its 6-char stub) and each variant's
-# n_bytes/byte_sum/md5 are derived arithmetically.
-_ZSTD_ORACLE = """
-    WITH base AS (
-      SELECT doc_id, text,
-             hex(encode(text)) AS hxf,
-             hex(encode(substring(text, 1, 9))) AS hx9,
-             hex(encode(substring(text, 1, 6))) AS hx6,
-             octet_length(encode(text)) AS nf,
-             octet_length(encode(substring(text, 1, 9))) AS n9,
-             octet_length(encode(substring(text, 1, 6))) AS n6
-      FROM documents
-      WHERE text IS NOT NULL),
-    sf AS (
-      SELECT b.doc_id,
-             CAST(sum(('0x' || substring(b.hxf, s.i * 2 - 1, 2))::BIGINT)
-                  AS BIGINT) AS s
-      FROM (SELECT doc_id, unnest(generate_series(1, nf)) AS i FROM base) s
-      JOIN base b USING (doc_id) GROUP BY b.doc_id),
-    s9 AS (
-      SELECT b.doc_id,
-             CAST(sum(('0x' || substring(b.hx9, s.i * 2 - 1, 2))::BIGINT)
-                  AS BIGINT) AS s
-      FROM (SELECT doc_id, unnest(generate_series(1, n9)) AS i FROM base) s
-      JOIN base b USING (doc_id) GROUP BY b.doc_id),
-    s6 AS (
-      SELECT b.doc_id,
-             CAST(sum(('0x' || substring(b.hx6, s.i * 2 - 1, 2))::BIGINT)
-                  AS BIGINT) AS s
-      FROM (SELECT doc_id, unnest(generate_series(1, n6)) AS i FROM base) s
-      JOIN base b USING (doc_id) GROUP BY b.doc_id)
-    SELECT b.doc_id,
-           CAST(CASE b.doc_id % 5
-             WHEN 0 THEN b.nf WHEN 1 THEN 12 * b.nf WHEN 2 THEN 200 * b.n9
-             WHEN 3 THEN b.n6 ELSE 7 * b.nf END AS BIGINT) AS n_bytes,
-           CAST(CASE b.doc_id % 5
-             WHEN 0 THEN sf.s WHEN 1 THEN 12 * sf.s WHEN 2 THEN 200 * s9.s
-             WHEN 3 THEN s6.s ELSE 7 * sf.s END AS BIGINT) AS byte_sum,
-           md5(CASE b.doc_id % 5
-             WHEN 0 THEN b.hxf WHEN 1 THEN repeat(b.hxf, 12)
-             WHEN 2 THEN repeat(b.hx9, 200) WHEN 3 THEN b.hx6
-             ELSE repeat(b.hxf, 7) END) AS decoded_md5
-    FROM base b
-    JOIN sf USING (doc_id) JOIN s9 USING (doc_id) JOIN s6 USING (doc_id)
-"""
-
 
 @register(
     "mm_zstd_frame_roundtrip",
@@ -833,46 +765,25 @@ def mm_zstd_frame_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_check():
         import pyarrow as pa
 
         codecs = {lvl: pa.Codec("zstd", compression_level=lvl)
                   for lvl in (1, 3, 12)}
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                lvl = (1, 3, 12)[int(doc_id) % 3]
-                comp = bytes(codecs[lvl].compress(b))
-                dec = zstd_frame_decompress(comp)
-                if dec != b:
-                    raise ValueError(
-                        f"zstd roundtrip mismatch for doc {doc_id} lvl {lvl}"
-                    )
-                out_doc.append(int(doc_id))
-                out_n.append(len(dec))
-                out_sum.append(sum(dec))
-                out_md5.append(
-                    hashlib.md5(dec.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        def check(doc_id: int, b: bytes) -> None:
+            lvl = (1, 3, 12)[doc_id % 3]
+            if zstd_frame_decompress(bytes(codecs[lvl].compress(b))) != b:
+                raise ValueError(
+                    f"zstd roundtrip mismatch for doc {doc_id} lvl {lvl}"
+                )
+
+        return check
+
+    return byte_roundtrip(d, make_check)
 
 
 # --------------------------------------------------------------------------
@@ -1110,45 +1021,23 @@ def mm_zstd_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .selectExpr(
-            "doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload"
-        )
+        .selectExpr("doc_id", f"cast(({_PAYLOAD_CASE}) as binary) AS payload")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_check():
         import pyarrow as pa
 
         codec = pa.Codec("zstd")
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                frame = zstd_frame_compress(b)
-                real = bytes(codec.decompress(frame, len(b)))
-                if real != b:
-                    raise ValueError(
-                        f"libzstd read our frame differently for doc {doc_id}"
-                    )
-                if zstd_frame_decompress(frame) != b:
-                    raise ValueError(
-                        f"self-decode mismatch for doc {doc_id}"
-                    )
-                out_doc.append(int(doc_id))
-                out_n.append(len(b))
-                out_sum.append(sum(b))
-                out_md5.append(
-                    hashlib.md5(b.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_bytes": pd.Series(out_n, dtype="int64"),
-                    "byte_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, byte_sum long, decoded_md5 string",
-    )
+        def check(doc_id: int, b: bytes) -> None:
+            frame = zstd_frame_compress(b)
+            if bytes(codec.decompress(frame, len(b))) != b:
+                raise ValueError(
+                    f"libzstd read our frame differently for doc {doc_id}"
+                )
+            if zstd_frame_decompress(frame) != b:
+                raise ValueError(f"self-decode mismatch for doc {doc_id}")
+
+        return check
+
+    return byte_roundtrip(d, make_check)

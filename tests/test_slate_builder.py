@@ -35,6 +35,26 @@ MINHASH_CONSUMERS = {
     "graph_modularity_audit",
 }
 
+# The three certification contracts of operators/digests.py: each helper is
+# reached by exactly the entries of its family. The parquet-writer audits are
+# pure Spark SQL and share parquet_writer._audit_sql instead.
+BYTE_ROUNDTRIP_CONSUMERS = {
+    "mm_bzip2_decode", "mm_bzip2_encode_roundtrip", "mm_deflate_encode_roundtrip",
+    "mm_lz4_block_roundtrip", "mm_quoted_printable_roundtrip", "mm_snappy_encode_roundtrip",
+    "mm_xz_encode_roundtrip", "mm_xz_lzma_decode", "mm_zlib_inflate_dynamic",
+    "mm_zstd_encode_roundtrip", "mm_zstd_frame_roundtrip",
+}
+PAGE_DECODE_CONSUMERS = {
+    "scan_parquet_page_decode", "scan_parquet_gzip_page_decode",
+    "scan_parquet_lz4_page_decode", "scan_parquet_zstd_page_decode",
+}
+COLUMN_AUDIT_CONSUMERS = {
+    "scan_arrow_ipc_stream_walk", "scan_arrow_ipc_file_walk", "scan_orc_stripe_decode",
+}
+SPARK_AUDIT_CONSUMERS = {
+    "scan_parquet_own_writer_roundtrip", "scan_parquet_own_writer_v2_roundtrip",
+}
+
 
 @pytest.fixture(scope="module")
 def rounds():
@@ -146,11 +166,17 @@ def _flagged(monkeypatch, live, target, edit) -> set[str]:
     return {n for n in live if edited[n] != live[n]}
 
 
-def test_helper_edit_flags_exactly_its_consumers(monkeypatch, live):
-    from flock_spark.operators import dedup
-
-    flagged = _flagged(monkeypatch, live, dedup._spark_minhash_sig, lambda s: s + "# edit\n")
-    assert flagged == MINHASH_CONSUMERS
+@pytest.mark.parametrize("module, helper, consumers", [
+    ("flock_spark.operators.dedup", "_spark_minhash_sig", MINHASH_CONSUMERS),
+    ("flock_spark.operators.digests", "byte_roundtrip", BYTE_ROUNDTRIP_CONSUMERS),
+    ("flock_spark.operators.digests", "page_decode", PAGE_DECODE_CONSUMERS),
+    ("flock_spark.operators.digests", "column_digest", COLUMN_AUDIT_CONSUMERS),
+    ("flock_spark.operators.parquet_writer", "_audit_sql", SPARK_AUDIT_CONSUMERS),
+], ids=["minhash", "byte_roundtrip", "page_decode", "column_digest", "audit_sql"])
+def test_helper_edit_flags_exactly_its_consumers(monkeypatch, live, module, helper, consumers):
+    target = getattr(sys.modules[module], helper)
+    flagged = _flagged(monkeypatch, live, target, lambda s: s + "# edit\n")
+    assert flagged == consumers
 
 
 def test_function_local_import_is_reached(monkeypatch, live):
