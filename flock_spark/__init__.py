@@ -24,13 +24,11 @@ package keeps only the *observable semantics*:
 - ``flock_spark.sinks``       — batch/streaming writers + foreachBatch KV sinks
 - ``flock_spark.engine``      — flock-like declarative Query API
                                 (reference: flock/src/query.rs:82-103)
+- ``flock_spark.worker_daemon`` — Python worker daemon on the installed pyspark
 
 Every operator is expressed declaratively (DataFrame/SQL) so Catalyst applies
 predicate pushdown, column pruning, partial aggregation, and AQE; Python UDFs
 appear only where semantics genuinely require them (multimodal decode stubs).
 """
-
-from flock_spark.registry import REGISTRY, get_queries, get_oracles  # noqa: F401
-from flock_spark.session import get_spark  # noqa: F401
 
 __version__ = "0.1.0"
