@@ -4,11 +4,20 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "sf": <sf>,
+   "cold": {name: first-run sec, ...},
+   "spreads": {name: warm worst/best, ...}, "worst_spread": ...,
+   "spread_outliers": [...],
+   "host_foreign_cpu_share": ..., "host_steal_share": ...,
+   "contended": bool, "suspect": bool}
 
 Each query is forced with a noop-format write (full pipeline execution, no
 driver-side collect). Timings are per-query wall clock after a warm-up query
-that pays one-time session/JIT costs.
+that pays one-time session/JIT costs; `queries` is the best of 3 runs and
+`cold` the first. The two host shares cover the suite window: busy CPU of
+processes outside this one's tree, and hypervisor steal, as fractions of
+the machine's ticks. `contended` is their sum above CONTENDED_SHARE;
+`suspect` is `contended` or any warm spread above 3x.
 """
 
 from __future__ import annotations
@@ -28,6 +37,7 @@ os.environ.setdefault("FLOCK_SPARK_NEXMARK_EVENTS", "50000")
 
 from flock_spark.registry import REGISTRY, get_queries  # noqa: E402
 from flock_spark.session import get_spark  # noqa: E402
+from perfbench.measure import CLK_TCK, tree_cpu_s  # noqa: E402
 
 HEADLINE = [
     "tpch_q1",
@@ -156,96 +166,82 @@ HEADLINE = [
 ]
 
 
-# ---------------------------------------------------------------------------
-# Contention sentinel. The warm-spread guard below catches BURSTY load (one
-# warm run slow, the other fast) but is blind to STEADY background load,
-# which inflates both warm runs uniformly — the round-7 failure mode, where
-# a "clean" run totaled 79 s vs 46 s on an idle box with every per-query
-# spread under 3x. A fixed single-thread busy loop timed before and after
-# the suite exposes that mode: steady load deschedules the loop and its
-# wall time drifts versus the committed idle-box reference.
-# ---------------------------------------------------------------------------
-CALIBRATION_N = 20_000_000  # fixed work; ~1.73 s single-thread on this box
-# Idle-box reference, measured with nothing else running (4 idle runs r8:
-# 1.724/1.721/1.767/1.734 — see COVERAGE.md "Bench calibration reference").
-# Override for a different box via env.
-CALIB_REF_SEC = float(os.environ.get("SPARK_GRAFT_CALIB_REF", "1.73"))
-CALIB_DRIFT_LIMIT = 1.3
+# Contention: the warm-spread guard below catches BURSTY load (one warm run
+# slow, the other fast) but is blind to STEADY background load, which
+# inflates both warm runs uniformly (round 7: a "clean" run totaled 79 s vs
+# 46 s on an idle box with every per-query spread under 3x). So the bench
+# reads the machine over the suite window instead: the busy ticks of
+# /proc/stat that this process tree (driver, JVM, Python workers) did not
+# spend, plus hypervisor steal, as shares of all the machine's ticks.
+# A quiet 4-core box reads 0.05-0.09 together (foreign 0.012, steal
+# 0.04-0.07); two busy loops beside the suite read 0.5.
+CONTENDED_SHARE = 0.15
 
 
-def _calibrate() -> float:
-    acc = 0
-    t0 = time.perf_counter()
-    for i in range(CALIBRATION_N):
-        acc = (acc + i * i) % 1000000007
-    return time.perf_counter() - t0
+def cpu_ticks(stat_line: str) -> list[int]:
+    """The eight tick counters of /proc/stat's aggregate "cpu" line (guest
+    time is already inside user and nice)."""
+    return [int(x) for x in stat_line.split()[1:9]]
 
 
-# Multi-process calibration: the single-thread probe under-detects PARTIAL
-# core contention (observed: probe at 1.26x while the 32-thread suite ran
-# 1.30x slow — a neighbor using a third of the cores barely deschedules one
-# busy loop but starves a wide Spark stage). N parallel busy loops measure
-# the machine's usable parallel capacity, which is what the suite consumes.
-#
-# Implemented with plain subprocess children, NOT multiprocessing: the
-# after-suite probe runs while this driver process hosts py4j/JVM-gateway
-# threads, and fork()ing a multithreaded process can intermittently deadlock
-# the children (only the forking thread survives; any lock held by another
-# thread at fork time stays held forever). Fresh `python -c` interpreters
-# share no state with the parent; their ~30 ms boot is inside the timed
-# window consistently for both the committed reference and live runs.
-CALIB_MT_PROCS = 16
-CALIB_MT_N = 10_000_000  # per-process work (~1.1 s idle wall for the batch)
-# Idle reference measured r9 over repeated quiet windows with the subprocess
-# implementation (boot included): see COVERAGE.md "Bench calibration
-# reference". Override for a different box via env.
-CALIB_MT_REF_SEC = float(os.environ.get("SPARK_GRAFT_CALIB_MT_REF", "1.10"))
-
-_MT_CHILD_CODE = (
-    "acc = 0\n"
-    f"for i in range({CALIB_MT_N}):\n"
-    "    acc = (acc + i * i) % 1000000007\n"
-)
+def host_sample() -> tuple[list[int], float]:
+    """The machine's cumulative CPU ticks and this process tree's CPU
+    seconds, read together."""
+    with open("/proc/stat") as f:
+        ticks = cpu_ticks(f.readline())
+    return ticks, tree_cpu_s(os.getpid())
 
 
-def _calibrate_mt() -> float:
-    import subprocess
+def host_shares(
+    before: tuple[list[int], float], after: tuple[list[int], float]
+) -> tuple[float, float]:
+    """(foreign CPU share, steal share) of the machine's ticks between two
+    host_sample()s. Ticks are user nice system idle iowait irq softirq
+    steal; foreign is busy time (all but idle, iowait and steal) minus this
+    process tree's CPU."""
+    d = [a - b for a, b in zip(after[0], before[0])]
+    total = sum(d)
+    if total <= 0:
+        return 0.0, 0.0
+    steal = d[7]
+    busy = total - d[3] - d[4] - steal
+    own = (after[1] - before[1]) * CLK_TCK
+    foreign = max(busy - own, 0.0)
+    return round(foreign / total, 4), round(steal / total, 4)
 
-    t0 = time.perf_counter()
-    procs = [
-        subprocess.Popen([sys.executable, "-c", _MT_CHILD_CODE])
-        for _ in range(CALIB_MT_PROCS)
-    ]
-    for p in procs:
-        p.wait()
-    return time.perf_counter() - t0
+
+def time_entry(spark, name: str, sf_dir: str, runs: int = 3) -> list[float]:
+    """Wall seconds of each of `runs` executions of one registry entry,
+    forced with a noop-format write (full pipeline, no driver collect)."""
+    ts = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        ts.append(time.perf_counter() - t0)
+    return ts
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    calib_before = round(_calibrate(), 3)
-    calib_mt_before = round(_calibrate_mt(), 3)
     get_queries()
     spark = get_spark("flock_spark_bench")
 
     # warm-up: JVM/codegen/parquet-footer costs paid once
-    REGISTRY["tpch_q6"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    time_entry(spark, "tpch_q6", sf_dir, runs=1)
 
     # best of 3: first run pays per-query JIT/compile; the min of the rest
     # measures repeatable throughput (JVM GC/JIT run-to-run variance at
     # sub-second query times is ±2× — observed q9 0.77 s vs 2.24 s across
     # otherwise-identical runs)
     timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    host_before = host_sample()
     for name in HEADLINE:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        best = min(runs)
-        timings[name] = round(best, 3)
+        runs = time_entry(spark, name, sf_dir)
+        timings[name] = round(min(runs), 3)
+        cold[name] = round(runs[0], 3)
         # spread = worst/best over the WARM runs only (runs 2..3). Run 1
         # legitimately pays 5-25x compile/codegen cost on sub-second
         # queries, so including it would flag every healthy run; two warm
@@ -256,29 +252,18 @@ def main() -> None:
         # machine-detectable.
         warm = runs[1:]
         spreads[name] = round(max(warm) / min(warm), 2) if min(warm) > 0 else 1.0
+    foreign, steal = host_shares(host_before, host_sample())
 
     total = round(sum(timings.values()), 3)
     worst_spread = max(spreads.values()) if spreads else 1.0
-    calib_after = round(_calibrate(), 3)
-    # Steady contention: either calibration run drifting >1.3x from the
-    # committed idle-box reference means the box was loaded even if every
-    # per-query warm spread looked clean. With no reference committed for
-    # this box (env override unset, constant 0), contended stays None —
-    # the before/after numbers are still emitted for manual comparison.
-    calib_mt_after = round(_calibrate_mt(), 3)
-    contended: bool | None = None
-    if CALIB_REF_SEC > 0:
-        contended = max(calib_before, calib_after) > CALIB_DRIFT_LIMIT * CALIB_REF_SEC
-    if CALIB_MT_REF_SEC > 0:
-        mt_drift = max(calib_mt_before, calib_mt_after) > CALIB_DRIFT_LIMIT * CALIB_MT_REF_SEC
-        contended = bool(contended) or mt_drift
+    contended = foreign + steal > CONTENDED_SHARE
     # >3x between two warm runs of any single query means something else
     # was using the box mid-measurement; flag the whole run as suspect.
     # (Every flagged run so far proved genuinely contaminated on absolute
     # deltas — multi-second stalls, not GC blips — so the strict
     # single-violation rule stands; spread_outliers names the culprits.)
     spread_outliers = sorted(k for k, v in spreads.items() if v > 3.0)
-    suspect = worst_spread > 3.0 or bool(contended)
+    suspect = worst_spread > 3.0 or contended
     line = json.dumps(
             {
                 "metric": "headline_suite_total_sec",
@@ -286,15 +271,12 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "cold": cold,
                 "spreads": spreads,
                 "worst_spread": round(worst_spread, 2),
                 "spread_outliers": spread_outliers,
-                "calibration_before_sec": calib_before,
-                "calibration_after_sec": calib_after,
-                "calibration_ref_sec": CALIB_REF_SEC or None,
-                "calibration_mt_before_sec": calib_mt_before,
-                "calibration_mt_after_sec": calib_mt_after,
-                "calibration_mt_ref_sec": CALIB_MT_REF_SEC or None,
+                "host_foreign_cpu_share": foreign,
+                "host_steal_share": steal,
                 "contended": contended,
                 "suspect": suspect,
             }

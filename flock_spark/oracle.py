@@ -93,23 +93,30 @@ def _canon(v):
 
 
 def compare(spark: SparkSession, fn, oracle_sql: str, sf_dir: str) -> None:
-    """Assert the Spark query and oracle agree (sorted-by-name columns,
-    order-insensitive row multiset). Raises AssertionError with a diff."""
+    """Assert the Spark query and oracle agree (see check_result)."""
+    sdf = fn(spark, sf_dir)
+    check_result(sdf.schema, sdf.collect(), *run_oracle(oracle_sql, sf_dir))
+
+
+def check_result(schema, rows: list, o_cols_raw: list[str], o_rows_raw: list) -> None:
+    """Assert a collected Spark result (its schema and Rows) agrees with the
+    oracle's columns and rows: portable output types, sorted-by-name
+    columns, row count, order-insensitive value multiset. Raises
+    AssertionError with a diff."""
     from pyspark.sql import types as T
 
-    sdf = fn(spark, sf_dir)
     # Hard rule (round-1 driver finding): no query may OUTPUT a decimal
     # column. Engines serialize decimals differently even when values match,
     # so external hash gates fail; _canon() below would mask it locally.
     # Decimal is for internal exact accumulation only — cast to DOUBLE at the
     # output boundary (relational.dsumd / fsum).
-    decimal_cols = [f.name for f in sdf.schema.fields if isinstance(f.dataType, T.DecimalType)]
+    decimal_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.DecimalType)]
     assert not decimal_cols, f"DECIMAL-typed output columns (cast to DOUBLE): {decimal_cols}"
     # float32 is the remaining width class whose serialization could diverge
     # from DuckDB's DOUBLE the way DECIMAL (r1) and HUGEINT (r3) did; int32
     # vs int64 pairings are empirically driver-safe (tpch_q9 and
     # ann_topk_bruteforce were green in r3 with opposite-width int pairings)
-    float_cols = [f.name for f in sdf.schema.fields if isinstance(f.dataType, T.FloatType)]
+    float_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.FloatType)]
     assert not float_cols, f"FLOAT-typed output columns (cast to DOUBLE): {float_cols}"
     # Round-6 driver finding: nested output columns (array/struct/map) break
     # the driver's hash gate (unhashable list cells in its pandas sort).
@@ -117,7 +124,7 @@ def compare(spark: SparkSession, fn, oracle_sql: str, sf_dir: str) -> None:
     # locally — ban them at the source instead.
     nested_cols = [
         f.name
-        for f in sdf.schema.fields
+        for f in schema.fields
         if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType))
     ]
     assert not nested_cols, (
@@ -125,10 +132,9 @@ def compare(spark: SparkSession, fn, oracle_sql: str, sf_dir: str) -> None:
         f"gate — serialize to string (array_join) at the output boundary: "
         f"{nested_cols}"
     )
-    s_cols = sorted(sdf.columns)
-    s_rows = [tuple(row[c] for c in s_cols) for row in sdf.collect()]
+    s_cols = sorted(schema.names)
+    s_rows = [tuple(row[c] for c in s_cols) for row in rows]
 
-    o_cols_raw, o_rows_raw = run_oracle(oracle_sql, sf_dir)
     order = sorted(range(len(o_cols_raw)), key=lambda i: o_cols_raw[i])
     o_cols = [o_cols_raw[i] for i in order]
     o_rows = [tuple(r[i] for i in order) for r in o_rows_raw]

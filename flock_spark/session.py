@@ -65,14 +65,8 @@ def get_spark(
         # sweep, a long-lived service) accumulate dead checkpoint blocks
         # and pay block-manager eviction churn on unrelated queries.
         # 30 s keeps the reaper ahead of the churn for the bench/sweep
-        # sessions this builder serves; env-tunable (like
-        # SPARK_GRAFT_DRIVER_MEM) so a checkpoint-free long-lived service
-        # can relax it (e.g. 5m) instead of paying a driver System.gc()
-        # every 30 s.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("FLOCK_SPARK_PERIODIC_GC", "30s"),
-        )
+        # sessions this builder serves.
+        .config("spark.cleaner.periodicGC.interval", "30s")
         # No spark.sql.files.minPartitionNum floor: the test tables are
         # SINGLE-row-group parquet, so byte-range splits can never spread
         # the data — the floor only scheduled empty tasks (measured: zero

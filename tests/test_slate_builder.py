@@ -192,6 +192,9 @@ def test_function_local_import_is_reached(monkeypatch, live):
     # dedup binds HASH_COEFFS by `from ...hashing import`: the walk follows it home
     ("flock_spark.operators.hashing", "HASH_COEFFS: list[tuple[int, int]] = [",
      "HASH_COEFFS: list[tuple[int, int]] = [(1, 2), ", "dedup_minhash_lsh_pairs"),
+    # run_to_memory reads DRAIN_PARTITION_CAP only as a default argument
+    ("flock_spark.streaming.runner", "DRAIN_PARTITION_CAP = int(", "DRAIN_PARTITION_CAP = 1 + int(",
+     "streaming_tumbling_agg"),
 ])
 def test_module_table_edit_flags_its_readers(monkeypatch, live, module, old, new, consumer):
     assert old in sb._source(sys.modules[module])

@@ -38,6 +38,7 @@ import json
 import os
 import re
 import sys
+import textwrap
 import types
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -116,6 +117,21 @@ def _unwrap(v):
     return inspect.unwrap(getattr(v, "__func__", v))
 
 
+def _defaults_code(fn) -> types.CodeType:
+    """Code of a function's default-argument expressions. Defaults are
+    evaluated in the enclosing scope, so a constant used only as a default
+    (``cap: int = CAP``) is not among the function's own ``co_names``."""
+    try:  # a lambda's source line is not always a statement
+        tree = ast.parse(textwrap.dedent(_source(fn)))
+    except SyntaxError:
+        tree = ast.Module([], [])
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+    f = next((n for n in ast.walk(tree) if isinstance(n, defs)), None)
+    exprs = [*f.args.defaults, *filter(None, f.args.kw_defaults)] if f else []
+    tree = ast.fix_missing_locations(ast.Expression(ast.Tuple(exprs, ast.Load())))
+    return compile(tree, "<defaults>", "eval")
+
+
 def _assignments(mod: str) -> dict[str, str]:
     """Top-level name -> source of the statements binding it (assignments,
     and ``from ... import``, which the walk follows to the name's home)."""
@@ -186,6 +202,8 @@ def entry_fingerprints() -> dict[str, str]:
             except ValueError:  # a cell not yet bound
                 vals = []
             more = refs(x.__code__, x.__globals__)
+            if x.__defaults__ or x.__kwdefaults__:
+                more += refs(_defaults_code(x), x.__globals__)
         fns = [v for v in map(_unwrap, vals) if isinstance(v, (types.FunctionType, type))]
         return (f"{x.__module__}.{x.__qualname__}", _source(x)), fns + more
 

@@ -1,9 +1,10 @@
 """Simulate the driver's CORRECTNESS sweep locally, with per-entry timing.
 
 Runs every registry entry at the given sf dir (default sf0.01): executes the
-Spark query, collects, runs the DuckDB oracle, and compares the same
-(rows, schema-width, order-insensitive value multiset) contract as
-flock_spark.oracle.compare. Prints a per-entry line `name  spark_s  duck_s  ok`
+Spark query, collects, runs the DuckDB oracle, and checks the result with
+flock_spark.oracle.check_result, the same checks flock_spark.oracle.compare
+makes (output-type bans, column names, row count, order-insensitive value
+multiset). Prints a per-entry line `name  spark_s  duck_s  ok`
 and a sorted summary of the slowest entries, so the full-sweep wall cost the
 external driver pays is visible and optimizable.
 
@@ -99,30 +100,17 @@ def main() -> None:
         spark_s = duck_s = 0.0
         try:
             sdf = fn(s, sf_dir)
-            s_cols = sorted(sdf.columns)
-            s_rows = [tuple(r[c] for c in s_cols) for r in sdf.collect()]
+            s_rows = sdf.collect()
             spark_s = time.time() - t0
             if name in oracles:
                 t1 = time.time()
-                o_cols_raw, o_rows_raw = orc.run_oracle(oracles[name], sf_dir)
-                order = sorted(range(len(o_cols_raw)), key=lambda i: o_cols_raw[i])
-                o_rows = [tuple(r[i] for i in order) for r in o_rows_raw]
+                o_cols, o_rows = orc.run_oracle(oracles[name], sf_dir)
                 duck_s = time.time() - t1
-                from collections import Counter
-
-                sc = Counter(tuple(orc._canon(v) for v in r) for r in s_rows)
-                oc = Counter(tuple(orc._canon(v) for v in r) for r in o_rows)
-                o_cols = sorted(o_cols_raw)
-                if s_cols != o_cols:
-                    # same column-name contract as flock_spark.oracle.compare:
-                    # a renamed output column must fail, not silently pass
-                    status = f"COLS {s_cols} vs {o_cols}"
-                elif len(s_rows) != len(o_rows):
-                    status = f"ROWS {len(s_rows)} vs {len(o_rows)}"
-                elif sc != oc:
-                    status = "HASH"
+                orc.check_result(sdf.schema, s_rows, o_cols, o_rows)
             else:
                 status = "ok(rows-only)"
+        except AssertionError as e:
+            status = f"FAIL {str(e).splitlines()[0]}"
         except Exception as e:  # noqa: BLE001
             status = f"ERR {type(e).__name__}: {e}"
             traceback.print_exc()

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Time individual registry entries with the bench methodology (noop sink,
-warm-up query, N runs each, first run reported separately).
+"""Time individual registry entries with the bench methodology: bench.py's
+session, warm-up query and per-entry timing loop, N runs each, first run
+reported separately.
 
-Usage: python tools/time_query.py name [name ...] [--runs N] [--sf DIR] [--plain]
+Usage: python tools/time_query.py name [name ...] [--runs N] [--sf DIR]
 Prints one line per query: name first=<s> warm=[s,s,...] best=<s>
 """
 
@@ -10,19 +11,16 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("FLOCK_SPARK_NEXMARK_EVENTS", "50000")
 
-from flock_spark.registry import REGISTRY, get_queries  # noqa: E402
+import bench  # noqa: E402
 
 
 def main() -> None:
     names = []
     runs = 4
     sf_dir = "/root/testdata/sf0.1"
-    plain = False
     args = sys.argv[1:]
     while args:
         a = args.pop(0)
@@ -30,40 +28,18 @@ def main() -> None:
             runs = int(args.pop(0))
         elif a == "--sf":
             sf_dir = args.pop(0)
-        elif a == "--plain":
-            plain = True
         else:
             names.append(a)
+    if runs < 2:
+        sys.exit("--runs must be at least 2: the first run is reported apart")
 
-    get_queries()
-    if plain:
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-            )
-            .appName("time_query_plain")
-            .config("spark.driver.memory", "16g")
-            .getOrCreate()
-        )
-    else:
-        from flock_spark.session import get_spark
-
-        spark = get_spark("time_query")
-
-    # warm-up: session/JIT/parquet-footer costs paid once
-    REGISTRY["tpch_q6"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    bench.get_queries()
+    spark = bench.get_spark("time_query")
+    bench.time_entry(spark, "tpch_q6", sf_dir, runs=1)  # warm-up
 
     for name in names:
-        ts = []
-        for _ in range(runs):
-            spark.sparkContext.setJobDescription(f"time:{name}")
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts.append(time.perf_counter() - t0)
+        spark.sparkContext.setJobDescription(f"time:{name}")
+        ts = bench.time_entry(spark, name, sf_dir, runs)
         warm = ts[1:]
         print(
             f"{name} first={ts[0]:.3f} warm={[round(t, 3) for t in warm]} "
