@@ -172,7 +172,9 @@ def _staged_gen_table(
         spark.sql(sql).repartition(4).write.mode("overwrite").parquet(tmp)
 
     path = stage_once(f"gen_{kind}_{table}", version, write)
-    return spark.read.parquet(path)
+    # analysing the SQL launches no job, unlike parquet schema inference;
+    # the path is versioned by the SQL, so the schema matches the files
+    return spark.read.schema(spark.sql(sql).schema).parquet(path)
 
 
 def nexmark_table(spark: SparkSession, table: str) -> DataFrame:

@@ -48,7 +48,6 @@ from pyspark.sql.datasource import (
 )
 
 from flock_spark.registry import register
-from flock_spark.session import clamped_shuffle_partitions
 
 N_ROWS = 20_000
 N_PARTS = 8
@@ -213,6 +212,10 @@ def pyds_custom_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-matches the batch oracle regardless of micro-batch boundaries.",
 )
 def streaming_pyds_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # local: importing the streaming package here would register its
+    # entries ahead of this module's and reorder the registry
+    from flock_spark.streaming.runner import _bounded_drain
+
     _ensure_registered(spark)
     stream = (
         spark.readStream.format("flock_pyds")
@@ -226,9 +229,7 @@ def streaming_pyds_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("id").alias("max_id"),
     )
     name = "pyds_stream_agg"
-    # 7 output groups -> 8 state-store partitions is plenty; the default
-    # drain cap (32) would quadruple state tasks per micro-batch for nothing.
-    with clamped_shuffle_partitions(spark, 8):
+    with _bounded_drain(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)

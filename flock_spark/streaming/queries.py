@@ -505,10 +505,10 @@ def queue_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import shutil
 
-    from flock_spark.streaming.runner import _drain_parallelism
+    from flock_spark.streaming.runner import _bounded_drain
 
     ckpt = tempfile.mkdtemp(prefix="flock_spark_ckpt_")
-    with _drain_parallelism(spark):
+    with _bounded_drain(spark):
         q = foreach_batch_sink(s, enqueue, checkpoint=ckpt, available_now=True)
         try:
             if not q.awaitTermination(300):

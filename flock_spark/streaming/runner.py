@@ -10,6 +10,15 @@ run_foreach_batch — the reference's execution model verbatim: re-run a full
                     foreachBatch is the Spark-sanctioned escape hatch for
                     exactly this (aggregated-stream joins, ranking — the
                     shapes Spark can't run as single incremental queries).
+stage_batches     — run_foreach_batch into per-epoch parquet, read back with
+                    the stream's own schema (no schema-inference job).
+
+Every bounded drain runs inside `_bounded_drain`: it is never restarted and
+its checkpoint is deleted when it ends, so it takes the plain FileSystem
+checkpoint manager without per-file checksums, the way Flock picks an
+in-memory state backend for queries that need no recovery
+(flock/src/state/mod.rs:63-121). Restartable streams (`sinks.write_stream`,
+`sinks.foreach_batch_sink` outside a drain) keep Spark's defaults.
 """
 
 from __future__ import annotations
@@ -18,6 +27,7 @@ import os
 import tempfile
 import uuid
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,17 +42,44 @@ from flock_spark.session import clamped_shuffle_partitions
 # measurable extra per-trigger state-store setup (kafka wire drain:
 # 3.5-4.4 s at 32 -> 3.2-3.4 s at 8, two triggers). Streaming plans get
 # no AQE coalescing, so this clamp is the only partition sizing bounded
-# drains have. Production streams size this deliberately per state
-# volume; the env override keeps the knob external.
-DRAIN_PARTITION_CAP = int(os.environ.get("FLOCK_SPARK_DRAIN_PARTITIONS", "8"))
+# drains have. Production streams size this deliberately per state volume.
+DRAIN_PARTITION_CAP = 8
+
+# Checkpoint confs for one-shot drains. Without Hadoop native code (the
+# usual local install), Spark's default FileContext manager resolves each
+# rename with a `readlink` child process and sets each permission with a
+# `chmod` one, 3.2-3.9 ms apiece: a warm tumbling-window drain started 152
+# of them (40 chmod, 112 readlink), and 32 (chmod only) with the FileSystem
+# manager. The Spark 4.1 file checksums write a second file per state file.
+# Both buy recovery a drain never performs. Runtime confs: a streaming
+# query snapshots its session at start, so setting them around start()
+# reaches only that query.
+_DRAIN_CHECKPOINT_CONF = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+}
 
 
-def _drain_parallelism(spark: SparkSession, cap: int = DRAIN_PARTITION_CAP):
-    """Clamp shuffle partitions for the duration of a bounded drain
-    (micro-batches plan while the drain runs). The partition count is fixed
-    per streaming query at start, so this never leaks into queries planned
-    after the drain."""
-    return clamped_shuffle_partitions(spark, cap)
+@contextmanager
+def _bounded_drain(spark: SparkSession, cap: int = DRAIN_PARTITION_CAP):
+    """Run a one-shot drain on the FileSystem checkpoint manager without
+    checksums and with at most `cap` shuffle partitions, then restore the
+    session's values (a checkpoint conf that was unset is unset again)."""
+    saved = {k: spark.conf.get(k, None) for k in _DRAIN_CHECKPOINT_CONF}
+    try:
+        for k, v in _DRAIN_CHECKPOINT_CONF.items():
+            spark.conf.set(k, v)
+        with clamped_shuffle_partitions(spark, cap):
+            yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def run_to_memory(
@@ -65,7 +102,7 @@ def run_to_memory(
     spark = stream_df.sparkSession
     name = query_name or f"mem_{uuid.uuid4().hex[:8]}"
     writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    with _drain_parallelism(spark, cap):
+    with _bounded_drain(spark, cap):
         if run_for_sec is None:
             q = writer.trigger(availableNow=True).start()
             try:
@@ -96,7 +133,7 @@ def run_foreach_batch(
     import shutil
 
     checkpoint = tempfile.mkdtemp(prefix="flock_spark_ckpt_")
-    with _drain_parallelism(stream_df.sparkSession):
+    with _bounded_drain(stream_df.sparkSession):
         q = (
             stream_df.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", checkpoint)
@@ -144,4 +181,11 @@ def stage_batches(stream_df: DataFrame, timeout_sec: int = 300) -> DataFrame:
     staged = [d for d in os.listdir(stage_dir) if d.startswith("epoch=")]
     if not staged:
         return spark.createDataFrame([], stream_df.schema)
-    return spark.read.option("basePath", stage_dir).parquet(stage_dir).select(*cols)
+    # the stream's schema, not inference: a parquet read without one runs a
+    # footer-reading job; the `epoch` partition column is still discovered
+    return (
+        spark.read.schema(stream_df.schema)
+        .option("basePath", stage_dir)
+        .parquet(stage_dir)
+        .select(*cols)
+    )

@@ -193,7 +193,7 @@ def test_function_local_import_is_reached(monkeypatch, live):
     ("flock_spark.operators.hashing", "HASH_COEFFS: list[tuple[int, int]] = [",
      "HASH_COEFFS: list[tuple[int, int]] = [(1, 2), ", "dedup_minhash_lsh_pairs"),
     # run_to_memory reads DRAIN_PARTITION_CAP only as a default argument
-    ("flock_spark.streaming.runner", "DRAIN_PARTITION_CAP = int(", "DRAIN_PARTITION_CAP = 1 + int(",
+    ("flock_spark.streaming.runner", "DRAIN_PARTITION_CAP = 8", "DRAIN_PARTITION_CAP = 9",
      "streaming_tumbling_agg"),
 ])
 def test_module_table_edit_flags_its_readers(monkeypatch, live, module, old, new, consumer):

@@ -4,6 +4,7 @@ generator's determinism and the runner plumbing."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -180,30 +181,121 @@ def test_queue_sink_idempotent_redelivery(spark, tmp_path):
     assert spark.read.parquet(qdir).count() == 200
 
 
-def test_stage_batches_multi_epoch(spark, tmp_path):
-    """stage_batches must accumulate every micro-batch across epochs
-    (executor-side parquet staging, no driver residency)."""
-    import os
-
+def _three_epoch_stream(spark, root):
+    """A file stream of three one-file micro-batches, k = 0..29."""
     from pyspark.sql import Row
 
-    from flock_spark.streaming.runner import stage_batches
-
-    src = str(tmp_path / "src")
+    src = str(root / "src")
     os.makedirs(src, exist_ok=True)
     for i in range(3):
         spark.createDataFrame(
             [Row(k=i * 10 + j) for j in range(10)]
         ).coalesce(1).write.parquet(f"{src}/f{i}")
-
-    s = (
+    return (
         spark.readStream.schema("k long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/f*")
     )
-    staged = stage_batches(s)
+
+
+def test_stage_batches_multi_epoch(spark, tmp_path):
+    """stage_batches must accumulate every micro-batch across epochs
+    (executor-side parquet staging, no driver residency)."""
+    from flock_spark.streaming.runner import stage_batches
+
+    staged = stage_batches(_three_epoch_stream(spark, tmp_path))
     got = sorted(r["k"] for r in staged.collect())
     assert got == list(range(30))
+
+
+def _jobs_launched(spark, fn):
+    """Run fn() under a fresh job group: its result and the ids of the jobs
+    it launched."""
+    sc = spark.sparkContext
+    group = f"known_schema_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "known-schema read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_staged_generator_read_launches_no_job(spark):
+    """A staged generator table is read with the schema of its SQL: parquet
+    schema inference would run a footer-reading job per call."""
+    from flock_spark.sources import nexmark_gen
+
+    nexmark_gen.ysb_table(spark, "ad_event")  # stages the fixture if absent
+    df, jobs = _jobs_launched(spark, lambda: nexmark_gen.ysb_table(spark, "ad_event"))
+    assert jobs == []
+    assert df.count() == nexmark_gen.N_EVENTS
+
+
+def test_stage_batches_read_launches_no_job(spark, tmp_path):
+    """stage_batches reads its staged epochs back with the stream's schema;
+    the drain's own jobs run in the stream's job group, not the caller's."""
+    from flock_spark.streaming.runner import stage_batches
+
+    stream = _three_epoch_stream(spark, tmp_path)
+    staged, jobs = _jobs_launched(spark, lambda: stage_batches(stream))
+    assert jobs == []
+    assert staged.columns == ["k"]
+    assert sorted(r["k"] for r in staged.collect()) == list(range(30))
+
+
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKSUM = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_bounded_drain_checkpoints_without_helpers(spark, tmp_path):
+    """A one-shot drain runs on the FileSystem checkpoint manager with file
+    checksums off, and leaves the outer session as it found it: a key that
+    was set keeps its value, a key that was unset is unset again."""
+    from flock_spark.streaming.runner import run_foreach_batch
+
+    keys = (_MANAGER, _CHECKSUM, _PARTITIONS)
+    spark.conf.set(_CHECKSUM, "true")  # set; _MANAGER stays unset
+    try:
+        before = {k: spark.conf.get(k, None) for k in keys}
+        assert before[_MANAGER] is None
+        seen = []
+
+        def record(df, epoch):
+            conf = df.sparkSession.conf
+            seen.append((conf.get(_MANAGER, None), conf.get(_CHECKSUM)))
+
+        run_foreach_batch(_three_epoch_stream(spark, tmp_path), record)
+        assert seen and set(seen) == {(_FS_MANAGER, "false")}
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+    finally:
+        spark.conf.unset(_CHECKSUM)
+
+
+def test_write_stream_keeps_default_checkpoint_manager(spark, tmp_path):
+    """Restartable streams keep Spark's recovery-grade checkpoints, also
+    when started right after a bounded drain."""
+    from flock_spark import sinks
+
+    run_to_memory(_three_epoch_stream(spark, tmp_path / "drain"), output_mode="append")
+    q = sinks.write_stream(
+        _three_epoch_stream(spark, tmp_path / "restartable"), "noop", None,
+        checkpoint=str(tmp_path / "ck"),
+    )
+    try:
+        q.processAllAvailable()
+        stream = q._jsq.streamingQuery()
+        manager = stream.offsetLog().fileManager().getClass().getName()
+        assert manager.endswith(".FileContextBasedCheckpointFileManager")
+        assert stream.sparkSessionForStream().conf().get(_MANAGER, None) is None
+    finally:
+        q.stop()
 
 
 def test_cdc_upsert_stream_runs_multiple_batches(spark, sf_dir):

@@ -9,6 +9,9 @@ and a sorted summary of the slowest entries, so the full-sweep wall cost the
 external driver pays is visible and optimizable.
 
 Usage: python tools/sweep_sim.py [sf_dir] [--only substr] [--limit N] [--offset N]
+                                 [--plain] [--restart-every N] [--out PATH]
+
+The per-entry results go to PATH as JSON (default /tmp/sweep_sim.json).
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ def main() -> None:
     offset = 0
     plain = False
     restart_every = 0  # 0 = never; N>0 restarts the JVM every N entries
+    out = "/tmp/sweep_sim.json"
     args = sys.argv[1:]
     while args:
         a = args.pop(0)
@@ -44,6 +48,8 @@ def main() -> None:
             offset = int(args.pop(0))
         elif a == "--plain":
             plain = True
+        elif a == "--out":
+            out = args.pop(0)
         elif a == "--restart-every":
             # long single-session sf0.1 audits accumulate cached/memoized
             # relations until the JVM dies (round-8 finding: crash after 92
@@ -151,7 +157,7 @@ def main() -> None:
     print("\nSLOWEST 15:")
     for r in sorted(rows, key=lambda r: -r[3])[:15]:
         print(f"  {r[0]:42s} {r[3]:7.2f}  (spark {r[1]:.2f} duck {r[2]:.2f})")
-    with open("/tmp/sweep_sim.json", "w") as f:
+    with open(out, "w") as f:
         json.dump(
             {r[0]: {"spark_s": r[1], "duck_s": r[2], "total_s": r[3], "status": r[4]} for r in rows},
             f,
