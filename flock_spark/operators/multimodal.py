@@ -19,14 +19,15 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
+from itertools import accumulate
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flock_spark.catalog import spread, tbl
 from flock_spark.operators.bitio import (
-    LsbReader,
     LsbWriter,
     MsbReader,
     MsbWriter,
@@ -1212,36 +1213,52 @@ _LZW_EOI = _LZW_CLEAR + 1  # 5
 _LZW_MAX_CODE = 4096  # GIF caps code width at 12 bits
 
 
-def lzw_encode(pixels: list[int]) -> bytes:
+def lzw_encode(pixels: bytes | list[int]) -> bytes:
     """GIF-style LZW encode: variable code width (min+1..12 bits), LSB-first
     bit packing, leading CLEAR + trailing EOI, wrapped in <=255-byte data
     sub-blocks behind the min-code-size byte (GIF89a image data layout).
     Table additions stop at 4096 (deferred-clear mode; the paired decoder
-    stops growing at the same point)."""
-    bw = LsbWriter()
-    emit = bw.write
-    width = GIF_LZW_MIN_CODE + 1
-    table: dict[tuple[int, ...], int] = {(i,): i for i in range(_LZW_CLEAR)}
+    stops growing at the same point). ``pixels`` is a bytes object or a list
+    of ints, each below 2^GIF_LZW_MIN_CODE.
+
+    The string table maps ``(prefix_code << 8) | pixel`` to a code: one int
+    key per extension instead of a growing tuple, and a single-pixel string's
+    code is the pixel itself. Codes collect in a local int and leave it
+    8 bytes at a time."""
+    if pixels and (min(pixels) < 0 or max(pixels) >= _LZW_CLEAR):
+        raise ValueError("pixel value outside the LZW alphabet")
+    table: dict[int, int] = {}
+    get = table.get
     next_code = _LZW_EOI + 1
-    emit(_LZW_CLEAR, width)
-    w: tuple[int, ...] = ()
-    for px in pixels:
-        wk = w + (int(px),)
-        if wk in table:
-            w = wk
+    width = GIF_LZW_MIN_CODE + 1
+    acc, nacc = _LZW_CLEAR, width  # the leading CLEAR
+    out = bytearray()
+    it = iter(pixels)
+    w = next(it, -1)  # code of the string matched so far; -1: no pixels
+    for px in it:
+        key = (w << 8) | px
+        code = get(key)
+        if code is not None:
+            w = code
             continue
-        emit(table[w], width)
+        acc |= w << nacc
+        nacc += width
+        if nacc >= 64:
+            out += (acc & 0xFFFF_FFFF_FFFF_FFFF).to_bytes(8, "little")
+            acc >>= 64
+            nacc -= 64
         if next_code < _LZW_MAX_CODE:
-            table[wk] = next_code
+            table[key] = next_code
             next_code += 1
             # late change (GIF, not TIFF): the decoder sits one table entry
             # behind the encoder, so its width bump at next_d == 2^cs lands
             # exactly when next_e == 2^w + 1 here
             if next_code == (1 << width) + 1 and width < 12:
                 width += 1
-        w = (int(px),)
-    if w:
-        emit(table[w], width)
+        w = px
+    if w >= 0:
+        acc |= w << nacc
+        nacc += width
         # account a code slot for the final emit too: the decoder adds a
         # table entry while processing every data code INCLUDING the last,
         # so if that entry lands exactly on 2^width the decoder widens
@@ -1251,8 +1268,9 @@ def lzw_encode(pixels: list[int]) -> bytes:
             next_code += 1
             if next_code == (1 << width) + 1 and width < 12:
                 width += 1
-    emit(_LZW_EOI, width)
-    out = bw.getvalue()
+    acc |= _LZW_EOI << nacc
+    nacc += width
+    out += acc.to_bytes((nacc + 7) >> 3, "little")
     # sub-block framing: min-code-size byte, then length-prefixed blocks,
     # then the 0x00 block terminator
     framed = bytearray([GIF_LZW_MIN_CODE])
@@ -1264,11 +1282,16 @@ def lzw_encode(pixels: list[int]) -> bytes:
     return bytes(framed)
 
 
-def lzw_decode(data: bytes) -> list[int]:
-    """Decode a GIF89a image data stream (min-code-size byte + sub-blocks):
-    rebuilds the code table on the fly, handles the KwKwK self-reference
-    case, CLEAR resets, deferred clear (table frozen at 4096), and the
-    late-change width schedule. Raises ValueError on malformed framing."""
+def lzw_decode_bytes(data: bytes) -> bytes:
+    """Decode a GIF89a image data stream (min-code-size byte + sub-blocks)
+    to its pixel bytes: rebuilds the code table on the fly, handles the
+    KwKwK self-reference case, CLEAR resets, deferred clear (table frozen at
+    4096), and the late-change width schedule. Raises ValueError on
+    malformed framing or codes.
+
+    The table holds each code's bytes and the loop keeps the previous
+    entry's bytes, so a new entry is one concatenation. Codes come from a
+    local bit buffer refilled 8 bytes at a time."""
     if not data:
         raise ValueError("empty LZW stream")
     min_code = data[0]
@@ -1288,43 +1311,65 @@ def lzw_decode(data: bytes) -> list[int]:
         pos += 1
         if blen == 0:
             break
-        payload.extend(data[pos : pos + blen])
+        payload += data[pos : pos + blen]
         pos += blen
-    read = LsbReader(payload).read
-    out: list[int] = []
+    base = [bytes((i,)) for i in range(clear)] + [b"", b""]
+    table = base[:]
+    out = bytearray()
     width = min_code + 1
-    table: list[tuple[int, ...]] = [(i,) for i in range(clear)] + [(), ()]
+    limit = 1 << width  # the table size that widens the codes
+    mask = limit - 1
     next_code = eoi + 1
-    prev: int | None = None
+    prev: bytes | None = None  # the previous code's bytes; None after CLEAR
+    from_bytes = int.from_bytes
+    pos = bitbuf = nbits = 0
     while True:
-        code = read(width)
-        if code == clear:
+        if nbits < width:
+            chunk = payload[pos : pos + 8]
+            bitbuf |= from_bytes(chunk, "little") << nbits
+            pos += len(chunk)
+            nbits += len(chunk) << 3
+            if nbits < width:
+                raise ValueError("truncated bit stream")
+        code = bitbuf & mask
+        bitbuf >>= width
+        nbits -= width
+        if code > eoi or code < clear:  # a data code
+            if prev is not None:
+                if code < next_code:
+                    entry = table[code]
+                elif code == next_code:
+                    entry = prev + prev[:1]  # KwKwK
+                else:
+                    raise ValueError(f"code {code} beyond table {next_code}")
+                out += entry
+                if next_code < _LZW_MAX_CODE:
+                    table.append(prev + entry[:1])
+                    next_code += 1
+                    if next_code == limit and width < 12:
+                        width += 1
+                        limit <<= 1
+                        mask = limit - 1
+                prev = entry
+            elif code < clear:
+                prev = table[code]
+                out += prev
+            else:
+                raise ValueError(f"first code {code} out of table")
+        elif code == clear:
             width = min_code + 1
-            table = table[: eoi + 1]
+            limit = 1 << width
+            mask = limit - 1
+            table = base[:]
             next_code = eoi + 1
             prev = None
-            continue
-        if code == eoi:
-            return out
-        if prev is None:
-            if code >= len(table):
-                raise ValueError(f"first code {code} out of table")
-            out.extend(table[code])
-            prev = code
-            continue
-        if code < next_code:
-            entry = table[code]
-        elif code == next_code:
-            entry = table[prev] + table[prev][:1]  # KwKwK
-        else:
-            raise ValueError(f"code {code} beyond table {next_code}")
-        out.extend(entry)
-        if next_code < _LZW_MAX_CODE:
-            table.append(table[prev] + entry[:1])
-            next_code += 1
-            if next_code == (1 << width) and width < 12:
-                width += 1
-        prev = code
+        else:  # EOI
+            return bytes(out)
+
+
+def lzw_decode(data: bytes) -> list[int]:
+    """lzw_decode_bytes as a list of pixel values."""
+    return list(lzw_decode_bytes(data))
 
 
 @register(
@@ -1375,16 +1420,19 @@ def mm_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 pixels = (
                     np.frombuffer(bytes(payload), dtype=np.uint8) % 4
-                ).tolist()
-                compressed = lzw_encode(pixels)
-                decoded = lzw_decode(compressed)
+                ).tobytes()
+                decoded = lzw_decode_bytes(lzw_encode(pixels))
                 if decoded != pixels:  # hard fail beats silent corruption
                     raise ValueError(f"LZW roundtrip mismatch for doc {doc_id}")
-                key = ",".join(str(p) for p in decoded)
+                px = np.frombuffer(decoded, dtype=np.uint8)
+                # the oracle's key, the pixels joined by commas: every pixel
+                # is one digit, so pixel k is byte 2k and commas fill the rest
+                key = np.full(2 * len(px) - 1, ord(","), dtype=np.uint8)
+                key[::2] = px + ord("0")
                 out_doc.append(int(doc_id))
-                out_n.append(len(decoded))
-                out_sum.append(int(sum(decoded)))
-                out_md5.append(hashlib.md5(key.encode()).hexdigest())
+                out_n.append(len(px))
+                out_sum.append(int(px.sum()))
+                out_md5.append(hashlib.md5(key.tobytes()).hexdigest())
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(out_doc, dtype="int64"),
@@ -1401,13 +1449,18 @@ def mm_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PNG_ROW_W = 32  # scanline width in bytes, same raw-grid layout as the resizes
 _ADLER_MOD = 65521
+_ADLER_NMAX = 5552  # zlib's NMAX: the longest block its 32-bit sums survive
 
 
 def _adler32(data: bytes) -> int:
+    """Adler-32 (RFC 1950 §8.2), a block at a time: over a block x_1..x_n,
+    A grows by sum(x) and B by n*A + the sum of x's running sums (each byte's
+    A). Both reduce mod 65521 once per block of at most NMAX bytes."""
     a, b = 1, 0
-    for byte in data:
-        a = (a + byte) % _ADLER_MOD
-        b = (b + a) % _ADLER_MOD
+    for i in range(0, len(data), _ADLER_NMAX):
+        block = data[i : i + _ADLER_NMAX]
+        b = (b + len(block) * a + sum(accumulate(block))) % _ADLER_MOD
+        a = (a + sum(block)) % _ADLER_MOD
     return (b << 16) | a
 
 
@@ -1973,28 +2026,45 @@ def _build_fast(lengths: list[int]) -> tuple[list[int], int, int, dict]:
     0 for root misses (longer codes or invalid prefixes — resolved by the
     bit-by-bit dict fallback, whose dict therefore only needs the LONG
     codes). DEFLATE packs a code's MSB in the earliest raw bit, so a code c
-    of length L lands at every index whose low L bits are bit-reverse(c, L);
-    the fill is a C-speed list slice assignment, and the reversal one table
-    lookup — per-member table construction dominated many-small-member
-    streams even after memoization (mostly-unique tables, ~25% hit rate on
-    zlib level-6 text)."""
-    root_bits = min(max(lengths, default=0), _FAST_ROOT_BITS) or 1
-    size = 1 << root_bits
-    root = [0] * size
+    of length L sits at index bit-reverse(c, L) of a 2^L-entry table. The
+    table grows one length at a time by doubling (a C-speed list repeat),
+    which copies each shorter code's entry to every index whose low bits
+    match it, and then takes the codes of the new length, one store each.
+
+    One pass over the symbols with a nonzero length, in (length, symbol)
+    order (a bytes.find scan per length), assigns the canonical codes
+    inline: each is the previous code plus one, shifted left once per length
+    step. A code that reaches 2^L means the lengths are over-subscribed
+    (their Kraft sum exceeds 1) and raises ValueError; incomplete sets stay
+    legal (RFC 1951 allows a lone distance code). Per-member table
+    construction dominated many-small-member streams even after memoization
+    (mostly-unique tables, ~25% hit rate on zlib level-6 text)."""
+    lens = bytes(lengths)
+    max_len = max(lens, default=0)
+    root_bits = min(max_len, _FAST_ROOT_BITS) or 1
+    root = [0]
     table_dict: dict[tuple[int, int], int] = {}
     rev10 = _BITREV10
-    drop = _FAST_ROOT_BITS
-    for sym, (c, ln) in enumerate(canonical_codes(lengths)):
-        if not ln:
-            continue
-        if ln > root_bits:
-            table_dict[(ln, c)] = sym
-            continue
-        rev = rev10[c] >> (drop - ln)
-        step = 1 << ln
-        n_fill = ((size - rev - 1) >> ln) + 1
-        root[rev::step] = [(sym << 4) | ln] * n_fill
-    return root, root_bits, size - 1, table_dict
+    find = lens.find
+    code = 0
+    for ln in range(1, max(max_len, 1) + 1):
+        if ln <= root_bits:
+            root *= 2
+        sym = find(ln)
+        if sym >= 0:
+            limit = 1 << ln
+            drop = _FAST_ROOT_BITS - ln
+            while sym >= 0:
+                if code >= limit:
+                    raise ValueError("over-subscribed Huffman code lengths")
+                if ln <= root_bits:
+                    root[rev10[code] >> drop] = (sym << 4) | ln
+                else:
+                    table_dict[(ln, code)] = sym
+                code += 1
+                sym = find(ln, sym + 1)
+        code <<= 1
+    return root, root_bits, (1 << root_bits) - 1, table_dict
 
 
 _BUILD_FAST_CACHE: dict[bytes, tuple[list[int], int, int, dict]] = {}
@@ -2019,8 +2089,6 @@ def _build_fast_cached(lengths: list[int]) -> tuple[list[int], int, int, dict]:
     builders) see no TaskContext and share the process-lifetime cache, which
     times nothing. Bounded at 4096 entries either way."""
     global _BUILD_FAST_TASK
-    from pyspark import TaskContext
-
     tc = TaskContext.get()
     if tc is not None:
         tid = (tc.stageId(), tc.taskAttemptId())
@@ -2032,12 +2100,26 @@ def _build_fast_cached(lengths: list[int]) -> tuple[list[int], int, int, dict]:
     if hit is None:
         if len(_BUILD_FAST_CACHE) >= 4096:
             _BUILD_FAST_CACHE.clear()
-        hit = _BUILD_FAST_CACHE[key] = _build_fast(lengths)
+        hit = _BUILD_FAST_CACHE[key] = _build_fast(key)
     return hit
 
 
 _FIXED_LIT_FAST = _build_fast([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
 _FIXED_DIST_FAST = _build_fast([5] * 30)
+
+
+def _long_code(bitbuf: int, table_dict: dict) -> int:
+    """A code longer than the root table (rare): walk the next stream bits,
+    the code's MSB first, through the (length, code) -> symbol dict.
+    Returns (symbol << 4) | length, like a root-table entry."""
+    code = 0
+    for ln in range(1, 16):
+        code = (code << 1) | (bitbuf & 1)
+        bitbuf >>= 1
+        sym = table_dict.get((ln, code))
+        if sym is not None:
+            return (sym << 4) | ln
+    raise ValueError("invalid Huffman code")
 
 
 def inflate_at(data: bytes, start: int = 0) -> tuple[bytes, int]:
@@ -2047,215 +2129,155 @@ def inflate_at(data: bytes, start: int = 0) -> tuple[bytes, int]:
     (decoded, end_offset) where end_offset is the first byte past the final
     block (partial trailing bits of the last byte are padding — the next
     framing field in gzip/zlib starts at that byte boundary). Raises
-    ValueError on malformed input."""
-    br = LsbReader(data, start)
+    ValueError on malformed input.
+
+    The bits live in a local LSB-first buffer. Whenever it holds fewer than
+    48 bits it takes 6 more bytes in one int.from_bytes, so a whole block
+    header field or length/distance pair (at most 48 bits with its extra
+    bits) decodes without another check. Past the end of the data the
+    buffer reads as zero bits and the bit count goes negative; the next
+    refill or block end sees that and raises."""
     out = bytearray()
+    out_append = out.append
+    from_bytes = int.from_bytes
+    n = len(data)
+    pos, bitbuf, nbits = start, 0, 0
     while True:
-        bfinal = br.read(1)
-        btype = br.read(2)
+        if nbits < 48:
+            chunk = data[pos : pos + 6]
+            bitbuf |= from_bytes(chunk, "little") << nbits
+            pos += len(chunk)
+            nbits += len(chunk) << 3
+        bfinal = bitbuf & 1
+        btype = (bitbuf >> 1) & 3
+        bitbuf >>= 3
+        nbits -= 3
+        if nbits < 0:
+            raise ValueError("truncated deflate stream")
         if btype == 0:
-            br.align_byte()
-            if br.pos + 4 > len(data):
+            # skip to the byte boundary: whole buffered bytes go back
+            pos -= nbits >> 3
+            bitbuf = nbits = 0
+            if pos + 4 > n:
                 raise ValueError("truncated stored block header")
-            ln = int.from_bytes(data[br.pos : br.pos + 2], "little")
-            nlen = int.from_bytes(data[br.pos + 2 : br.pos + 4], "little")
+            ln = int.from_bytes(data[pos : pos + 2], "little")
+            nlen = int.from_bytes(data[pos + 2 : pos + 4], "little")
             if ln ^ nlen != 0xFFFF:
                 raise ValueError("stored block LEN/NLEN mismatch")
-            br.pos += 4
-            if br.pos + ln > len(data):
+            pos += 4
+            if pos + ln > n:
                 raise ValueError("truncated stored block data")
-            out.extend(data[br.pos : br.pos + ln])
-            br.pos += ln
-        elif btype in (1, 2):
-            if btype == 1:
-                lit_root, _lr_bits, lit_mask, lit_dict = _FIXED_LIT_FAST
-                dist_root, _dr_bits, dist_mask, dist_dict = _FIXED_DIST_FAST
-            else:
-                hlit = br.read(5) + 257
-                hdist = br.read(5) + 1
-                hclen = br.read(4) + 4
-                clen_lengths = [0] * 19
-                for i in range(hclen):
-                    clen_lengths[_CLEN_ORDER[i]] = br.read(3)
-                # code-length codes are <= 7 bits, so the root table is
-                # complete: decode them with local bit state instead of
-                # the bit-at-a-time dict walk (the header dominated
-                # many-small-member streams)
-                clen_root, _cr_bits, clen_mask, _clen_dict = (
-                    _build_fast_cached(clen_lengths)
-                )
-                data_h = br.data
-                n_h = len(data_h)
-                pos, bitbuf, nbits = br.pos, br.bitbuf, br.nbits
-                lengths: list[int] = []
-                need = hlit + hdist
-                while len(lengths) < need:
-                    while nbits < 10 and pos < n_h:
-                        bitbuf |= data_h[pos] << nbits
-                        pos += 1
-                        nbits += 8
-                    ent = clen_root[bitbuf & clen_mask]
-                    if not ent:
-                        raise ValueError("invalid Huffman code")
-                    L = ent & 15
-                    if L > nbits:
+            out += data[pos : pos + ln]
+            pos += ln
+        elif btype == 1:
+            lit_root, _lr_bits, lit_mask, lit_dict = _FIXED_LIT_FAST
+            dist_root, _dr_bits, dist_mask, dist_dict = _FIXED_DIST_FAST
+        elif btype == 2:
+            # counts (14 bits), then up to 19 3-bit code-length code lengths
+            chunk = data[pos : pos + 9]
+            bitbuf |= from_bytes(chunk, "little") << nbits
+            pos += len(chunk)
+            nbits += len(chunk) << 3
+            hlit = (bitbuf & 31) + 257
+            hdist = ((bitbuf >> 5) & 31) + 1
+            hclen = ((bitbuf >> 10) & 15) + 4
+            bitbuf >>= 14
+            clen_lengths = [0] * 19
+            for i in range(hclen):
+                clen_lengths[_CLEN_ORDER[i]] = bitbuf & 7
+                bitbuf >>= 3
+            nbits -= 14 + 3 * hclen
+            # code-length codes are <= 7 bits, so the root table is
+            # complete and no code needs the dict fallback
+            clen_root, _cr_bits, clen_mask, _clen_dict = _build_fast_cached(
+                clen_lengths)
+            lengths = bytearray()
+            need = hlit + hdist
+            while len(lengths) < need:
+                if nbits < 48:
+                    if nbits < 0:
                         raise ValueError("truncated deflate stream")
-                    sym = ent >> 4
-                    bitbuf >>= L
-                    nbits -= L
-                    if sym < 16:
-                        lengths.append(sym)
-                        continue
-                    if sym == 16:
-                        if not lengths:
-                            raise ValueError("repeat with no previous length")
-                        w, base, val = 2, 3, lengths[-1]
-                    elif sym == 17:
-                        w, base, val = 3, 3, 0
-                    else:  # 18
-                        w, base, val = 7, 11, 0
-                    while nbits < w:
-                        if pos >= n_h:
-                            raise ValueError("truncated deflate stream")
-                        bitbuf |= data_h[pos] << nbits
-                        pos += 1
-                        nbits += 8
-                    lengths.extend([val] * (base + (bitbuf & ((1 << w) - 1))))
-                    bitbuf >>= w
-                    nbits -= w
-                br.pos, br.bitbuf, br.nbits = pos, bitbuf, nbits
-                if len(lengths) != hlit + hdist:
-                    raise ValueError("code length overrun")
-                lit_root, _lr_bits, lit_mask, lit_dict = _build_fast_cached(
-                    lengths[:hlit])
-                dist_root, _dr_bits, dist_mask, dist_dict = _build_fast_cached(
-                    lengths[hlit:])
-            # Hot symbol loop with the flat root table and local bit state
-            # (reader state is written back at end-of-block so stored
-            # blocks and the end-offset computation see the same position
-            # the call-per-bit path produced).
-            data_l = br.data
-            n_l = len(data_l)
-            pos, bitbuf, nbits = br.pos, br.bitbuf, br.nbits
-            out_append = out.append
-            from_bytes = int.from_bytes
-            while True:
-                # batched refill: top up ~6 bytes in one int.from_bytes
-                # instead of a byte-at-a-time loop — several symbols then
-                # decode per refill (align_byte rewinds whole buffered
-                # bytes, so over-buffering across a block edge is safe)
-                if nbits < 15:
-                    chunk = data_l[pos : pos + 6]
+                    chunk = data[pos : pos + 6]
                     bitbuf |= from_bytes(chunk, "little") << nbits
                     pos += len(chunk)
                     nbits += len(chunk) << 3
-                ent = lit_root[bitbuf & lit_mask]
-                if ent:
-                    L = ent & 15
-                    if L > nbits:
-                        raise ValueError("truncated deflate stream")
-                    sym = ent >> 4
-                    bitbuf >>= L
-                    nbits -= L
-                else:  # code longer than the root table (rare): dict walk
-                    code = 0
-                    ln_c = 0
-                    sym = -1
-                    while ln_c < 15:
-                        if not nbits:
-                            if pos >= n_l:
-                                raise ValueError("truncated deflate stream")
-                            bitbuf = data_l[pos]
-                            pos += 1
-                            nbits = 8
-                        code = (code << 1) | (bitbuf & 1)
-                        bitbuf >>= 1
-                        nbits -= 1
-                        ln_c += 1
-                        s = lit_dict.get((ln_c, code))
-                        if s is not None:
-                            sym = s
-                            break
-                    if sym < 0:
-                        raise ValueError("invalid Huffman code")
-                if sym < 256:
-                    out_append(sym)
-                elif sym == 256:
-                    br.pos, br.bitbuf, br.nbits = pos, bitbuf, nbits
-                    break
-                elif sym <= 285:
-                    li = sym - 257
-                    w = _LEN_EXTRA[li]
-                    while nbits < w:
-                        if pos >= n_l:
-                            raise ValueError("truncated deflate stream")
-                        bitbuf |= data_l[pos] << nbits
-                        pos += 1
-                        nbits += 8
-                    length = _LEN_BASE[li] + (bitbuf & ((1 << w) - 1))
-                    bitbuf >>= w
-                    nbits -= w
-                    if nbits < 15:
-                        chunk = data_l[pos : pos + 6]
-                        bitbuf |= from_bytes(chunk, "little") << nbits
-                        pos += len(chunk)
-                        nbits += len(chunk) << 3
-                    ent = dist_root[bitbuf & dist_mask]
-                    if ent:
-                        L = ent & 15
-                        if L > nbits:
-                            raise ValueError("truncated deflate stream")
-                        dsym = ent >> 4
-                        bitbuf >>= L
-                        nbits -= L
-                    else:
-                        code = 0
-                        ln_c = 0
-                        dsym = -1
-                        while ln_c < 15:
-                            if not nbits:
-                                if pos >= n_l:
-                                    raise ValueError(
-                                        "truncated deflate stream")
-                                bitbuf = data_l[pos]
-                                pos += 1
-                                nbits = 8
-                            code = (code << 1) | (bitbuf & 1)
-                            bitbuf >>= 1
-                            nbits -= 1
-                            ln_c += 1
-                            s = dist_dict.get((ln_c, code))
-                            if s is not None:
-                                dsym = s
-                                break
-                        if dsym < 0:
-                            raise ValueError("invalid Huffman code")
-                    if dsym > 29:
-                        raise ValueError(f"invalid distance symbol {dsym}")
-                    w = _DIST_EXTRA[dsym]
-                    while nbits < w:
-                        if pos >= n_l:
-                            raise ValueError("truncated deflate stream")
-                        bitbuf |= data_l[pos] << nbits
-                        pos += 1
-                        nbits += 8
-                    dist = _DIST_BASE[dsym] + (bitbuf & ((1 << w) - 1))
-                    bitbuf >>= w
-                    nbits -= w
-                    if dist > len(out):
-                        raise ValueError("distance beyond output window")
-                    copy_from = len(out) - dist
-                    if dist >= length:  # non-overlapping: one slice copy
-                        out += out[copy_from : copy_from + length]
-                    else:
-                        for k in range(length):  # overlap-safe byte copy
-                            out_append(out[copy_from + k])
-                else:
-                    raise ValueError(f"invalid literal/length symbol {sym}")
+                ent = clen_root[bitbuf & clen_mask]
+                if not ent:
+                    raise ValueError("invalid Huffman code")
+                L = ent & 15
+                bitbuf >>= L
+                nbits -= L
+                sym = ent >> 4
+                if sym < 16:
+                    lengths.append(sym)
+                elif sym == 16:
+                    if not lengths:
+                        raise ValueError("repeat with no previous length")
+                    lengths += lengths[-1:] * (3 + (bitbuf & 3))
+                    bitbuf >>= 2
+                    nbits -= 2
+                elif sym == 17:
+                    lengths += bytes(3 + (bitbuf & 7))
+                    bitbuf >>= 3
+                    nbits -= 3
+                else:  # 18
+                    lengths += bytes(11 + (bitbuf & 127))
+                    bitbuf >>= 7
+                    nbits -= 7
+            if nbits < 0:
+                raise ValueError("truncated deflate stream")
+            if len(lengths) != need:
+                raise ValueError("code length overrun")
+            lit_root, _lr_bits, lit_mask, lit_dict = _build_fast_cached(
+                lengths[:hlit])
+            dist_root, _dr_bits, dist_mask, dist_dict = _build_fast_cached(
+                lengths[hlit:])
         else:
             raise ValueError("reserved BTYPE=11")
+        while btype:  # the Huffman symbol loop, until end of block
+            if nbits < 48:
+                if nbits < 0:
+                    raise ValueError("truncated deflate stream")
+                chunk = data[pos : pos + 6]
+                bitbuf |= from_bytes(chunk, "little") << nbits
+                pos += len(chunk)
+                nbits += len(chunk) << 3
+            ent = lit_root[bitbuf & lit_mask] or _long_code(bitbuf, lit_dict)
+            L = ent & 15
+            bitbuf >>= L
+            nbits -= L
+            if ent < 4096:  # a literal (symbol < 256)
+                out_append(ent >> 4)
+                continue
+            li = (ent >> 4) - 257
+            if li < 0:  # symbol 256: end of block
+                if nbits < 0:
+                    raise ValueError("truncated deflate stream")
+                break
+            if li > 28:
+                raise ValueError(f"invalid literal/length symbol {li + 257}")
+            w = _LEN_EXTRA[li]
+            length = _LEN_BASE[li] + (bitbuf & ((1 << w) - 1))
+            bitbuf >>= w
+            ent = dist_root[bitbuf & dist_mask] or _long_code(bitbuf, dist_dict)
+            L = ent & 15
+            bitbuf >>= L
+            dsym = ent >> 4
+            if dsym > 29:
+                raise ValueError(f"invalid distance symbol {dsym}")
+            w2 = _DIST_EXTRA[dsym]
+            dist = _DIST_BASE[dsym] + (bitbuf & ((1 << w2) - 1))
+            bitbuf >>= w2
+            nbits -= w + L + w2
+            copy_from = len(out) - dist
+            if copy_from < 0:
+                raise ValueError("distance beyond output window")
+            if dist >= length:  # non-overlapping: one slice copy
+                out += out[copy_from : copy_from + length]
+            else:  # overlapping: the last dist bytes repeat
+                out += (out[copy_from:] * (length // dist + 1))[:length]
         if bfinal:
-            return bytes(out), br.pos - (br.nbits >> 3)
+            return bytes(out), pos - (nbits >> 3)
 
 
 def inflate(data: bytes) -> bytes:

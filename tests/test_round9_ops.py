@@ -40,7 +40,12 @@ def test_lzw_roundtrip_long_crosses_width_boundaries():
     # (deferred clear) regime
     rng = np.random.default_rng(11)
     pixels = rng.integers(0, 4, size=60_000).tolist()
-    assert lzw_decode(lzw_encode(pixels)) == pixels
+    compressed = lzw_encode(pixels)
+    assert lzw_decode(compressed) == pixels
+    # the stream's bytes, pinned: an encoder that changed but stayed in
+    # step with its decoder would still roundtrip
+    assert hashlib.md5(compressed).hexdigest() == "ed5c9241b7765427a978316fa38067b9"
+    assert lzw_encode(bytes(pixels)) == compressed
 
 
 def test_lzw_kwkwk_case():
@@ -74,6 +79,20 @@ def test_lzw_rejects_malformed():
         lzw_decode(b"")
     with pytest.raises(ValueError):
         lzw_decode(bytes([2, 5, 1, 2, 3]))  # block runs past end, no terminator
+    # min code size 2 below: CLEAR=4, EOI=5, first free code 6, 3-bit codes
+    # packed LSB-first. Each case must raise ValueError, never IndexError.
+    for stream, match in [
+        (bytes([0, 1, 0x04, 0]), "min code size 0"),
+        (bytes([12, 1, 0x04, 0]), "min code size 12"),
+        (bytes([2, 1, 0x04, 0]), "truncated"),  # CLEAR, 0, then no EOI
+        (bytes([2, 1, 4 | 6 << 3, 0]), "first code 6"),  # CLEAR, 6
+        (bytes([2, 1, 6, 0]), "first code 6"),  # 6 with no CLEAR first
+        (bytes([2, 2, 0xC4, 0x01, 0]), "code 7 beyond"),  # CLEAR, 0, 7: 4 | 7 << 6
+    ]:
+        with pytest.raises(ValueError, match=match):
+            lzw_decode(stream)
+    with pytest.raises(ValueError, match="alphabet"):
+        lzw_encode([0, 4])
 
 
 # ---------------------------------------------------------------------------
@@ -132,7 +151,13 @@ def test_png_rejects_corruption():
 def test_adler32_matches_zlib():
     import zlib
 
-    for data in [b"", b"a", b"hello world" * 100, bytes(range(256)) * 300]:
+    rng = np.random.default_rng(3)
+    # block sums reduce once per 5552 bytes (zlib's NMAX): lengths on both
+    # sides of one and three block edges, and all-0xFF, the largest sums
+    sized = [rng.integers(0, 256, size=n, dtype=np.uint8).tobytes()
+             for n in (0, 1, 5551, 5552, 5553, 16_657)]
+    for data in [b"", b"a", b"hello world" * 100, bytes(range(256)) * 300,
+                 *sized, b"\xff" * 100_000]:
         assert _adler32(data) == zlib.adler32(data)
 
 
@@ -214,6 +239,64 @@ def test_inflate_handles_fixed_huffman_blocks():
     assert inflate(raw) == b"abc" * 20
 
 
+def _kraft_valid_lengths(rng, n_symbols: int, complete: bool) -> list[int]:
+    """Code lengths of a random binary tree with at most 15 levels: leaves
+    split at random (deep leaves half the time, so lengths 11-15 show up),
+    then scattered over n_symbols with zeros between; dropping leaves keeps
+    the Kraft sum below 1 (an incomplete code)."""
+    leaves = [0]
+    while len(leaves) < n_symbols // 2:
+        i = max(range(len(leaves)), key=leaves.__getitem__) if rng.random() < 0.5 \
+            else int(rng.integers(len(leaves)))
+        if leaves[i] < 15:
+            d = leaves.pop(i) + 1
+            leaves += [d, d]
+    if not complete:
+        leaves = leaves[: int(rng.integers(1, len(leaves) + 1))]
+    out = [0] * n_symbols
+    for sym, ln in zip(rng.choice(n_symbols, size=len(leaves), replace=False), leaves):
+        out[int(sym)] = ln
+    return out
+
+
+def _build_fast_reference(lengths: list[int]):
+    """The root table built symbol by symbol from bitio.canonical_codes."""
+    from flock_spark.operators.bitio import canonical_codes
+    from flock_spark.operators.multimodal import _BITREV10, _FAST_ROOT_BITS
+
+    root_bits = min(max(lengths, default=0), _FAST_ROOT_BITS) or 1
+    root = [0] * (1 << root_bits)
+    table_dict = {}
+    for sym, (c, ln) in enumerate(canonical_codes(lengths)):
+        if not ln:
+            continue
+        if ln > root_bits:
+            table_dict[(ln, c)] = sym
+            continue
+        rev = _BITREV10[c] >> (_FAST_ROOT_BITS - ln)
+        root[rev :: 1 << ln] = [(sym << 4) | ln] * (((len(root) - rev - 1) >> ln) + 1)
+    return root, root_bits, len(root) - 1, table_dict
+
+
+def test_build_fast_matches_canonical_reference():
+    from flock_spark.operators.multimodal import _build_fast
+
+    fixed = [[8] * 144 + [9] * 112 + [7] * 24 + [8] * 8, [5] * 30]
+    rng = np.random.default_rng(17)
+    vectors = fixed + [[0] * 30, [1], [0, 0, 1]] + [
+        _kraft_valid_lengths(rng, int(rng.choice([19, 30, 288])), complete=bool(k % 2))
+        for k in range(400)
+    ]
+    assert max(max(v) for v in vectors) == 15
+    assert sum(any(ln > 10 for ln in v) for v in vectors) > 50  # dict fallback
+    for v in vectors:
+        assert _build_fast(v) == _build_fast_reference(v), v
+    with pytest.raises(ValueError, match="over-subscribed"):
+        _build_fast([5] * 200 + [10] * 10)
+    with pytest.raises(ValueError, match="over-subscribed"):
+        _build_fast([1, 1, 1])
+
+
 def test_inflate_rejects_malformed():
     import zlib
 
@@ -230,6 +313,15 @@ def test_inflate_rejects_malformed():
     # reserved BTYPE=11: first block header bits BFINAL=1, BTYPE=3
     with pytest.raises(ValueError, match="BTYPE"):
         inflate(bytes([0b00000111, 0, 0]))
+    # a dynamic block whose header declares 200 literal lengths of 5 (a
+    # 5-bit code has only 32 codewords), 10 of 10, 47 zeros and one
+    # distance length of 5, all through a valid code-length code; the
+    # canonical codes would run past every table
+    oversubscribed = bytes.fromhex(
+        "789c05c086090024f7de7befbdf7de7befbdf7de7befbdf7de7befbdb7ed7192"
+        "00000001")
+    with pytest.raises(ValueError, match="over-subscribed"):
+        zlib_inflate(oversubscribed)
     # distance beyond window: length/dist pair pointing before start —
     # craft via truncation-free check on a corrupt dynamic stream is
     # overkill; the guard is unit-visible in inflate() (dist > len(out))
