@@ -23,10 +23,10 @@ import hashlib
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from flock_spark.operators.digests import _AUDIT_ORACLE, column_audit
+from flock_spark.operators.digests import _AUDIT_ORACLE
+from flock_spark.operators.digests import column_audit, map_rows
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -900,41 +900,19 @@ def mm_arrow_ipc_encode_roundtrip(
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        _fields, cols = arrow_ipc_stream_read(bytes(content))
+        joined = ",".join(hashlib.md5(t.encode()).hexdigest() for t in cols["text"])
+        yield (
+            len(cols["doc_id"]),
+            sum(cols["doc_id"]),
+            sum(1 for v in cols["n_chars_gap"] if v is None),
+            sum(1 for v in cols["is_third"] if v),
+            hashlib.md5(joined.encode()).hexdigest(),
+        )
 
-        for pdf in batches:
-            out = {"n_rows": [], "doc_id_sum": [], "n_gap_nulls": [],
-                   "n_third": [], "text_md5": []}
-            for content in pdf["content"]:
-                _fields, cols = arrow_ipc_stream_read(bytes(content))
-                out["n_rows"].append(len(cols["doc_id"]))
-                out["doc_id_sum"].append(sum(cols["doc_id"]))
-                out["n_gap_nulls"].append(
-                    sum(1 for v in cols["n_chars_gap"] if v is None)
-                )
-                out["n_third"].append(sum(1 for v in cols["is_third"] if v))
-                joined = ",".join(
-                    hashlib.md5(t.encode()).hexdigest()
-                    for t in cols["text"]
-                )
-                out["text_md5"].append(
-                    hashlib.md5(joined.encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "n_rows": pd.Series(out["n_rows"], dtype="int64"),
-                    "doc_id_sum": pd.Series(out["doc_id_sum"], dtype="int64"),
-                    "n_gap_nulls": pd.Series(
-                        out["n_gap_nulls"], dtype="int64"
-                    ),
-                    "n_third": pd.Series(out["n_third"], dtype="int64"),
-                    "text_md5": pd.Series(out["text_md5"], dtype="object"),
-                }
-            )
-
-    return bf.mapInPandas(
-        run,
-        schema="n_rows long, doc_id_sum long, n_gap_nulls long, "
-        "n_third long, text_md5 string",
+    return map_rows(
+        bf,
+        "n_rows long, doc_id_sum long, n_gap_nulls long, n_third long, text_md5 string",
+        rows_of,
     )

@@ -42,7 +42,6 @@ import json
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from flock_spark.operators.bitio import (
@@ -52,6 +51,8 @@ from flock_spark.operators.bitio import (
     write_uvarint,
     zigzag,
 )
+from flock_spark.operators.digests import _AUDIT_ORACLE
+from flock_spark.operators.digests import column_digest, map_rows
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -335,38 +336,10 @@ def _stage_avro(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "scan_avro_container_decode",
-    oracle="""
-    WITH codecs(codec) AS (VALUES ('null'), ('deflate'), ('snappy')),
-    audit AS (
-      SELECT 'doc_id' AS col_name,
-             CAST(count(*) AS BIGINT) AS n_values,
-             CAST(0 AS BIGINT) AS n_nulls,
-             CAST(sum(doc_id) AS BIGINT) AS sum_v,
-             md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-               AS values_md5
-      FROM documents
-      UNION ALL
-      SELECT 'n_chars_gap', CAST(count(*) AS BIGINT),
-             CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT),
-             CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE n_chars END)
-                  AS BIGINT),
-             md5(string_agg(
-               CASE WHEN doc_id % 7 = 0 THEN 'null'
-                    ELSE CAST(n_chars AS VARCHAR) END, ',' ORDER BY doc_id))
-      FROM documents
-      UNION ALL
-      SELECT 'text', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-             CAST(sum(octet_length(encode(text))) AS BIGINT),
-             md5(string_agg(md5(text), ',' ORDER BY doc_id))
-      FROM documents
-      UNION ALL
-      SELECT 'source', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT),
-             CAST(sum(octet_length(encode(source))) AS BIGINT),
-             md5(string_agg(md5(source), ',' ORDER BY doc_id))
-      FROM documents
-    )
+    oracle=f"""
+    WITH codecs(codec) AS (VALUES ('null'), ('deflate'), ('snappy'))
     SELECT codec, col_name, n_values, n_nulls, sum_v, values_md5
-    FROM codecs CROSS JOIN audit
+    FROM codecs CROSS JOIN ({_AUDIT_ORACLE}) audit
     """,
     tags=("scan", "formats", "codec", "wire", "pandas_udf", "staged"),
     doc="From-spec Apache Avro Object Container File read over files "
@@ -390,54 +363,17 @@ def scan_avro_container_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "codec": [], "col_name": [], "n_values": [],
-                "n_nulls": [], "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                codec, records = avro_container_read(bytes(content))
-                for col in ("doc_id", "n_chars_gap", "text", "source"):
-                    vals = [r[col] for r in records]
-                    nulls = sum(1 for v in vals if v is None)
-                    if col in ("text", "source"):
-                        sv = sum(
-                            len(v.encode()) for v in vals if v is not None
-                        )
-                        joined = ",".join(
-                            "null" if v is None
-                            else hashlib.md5(v.encode()).hexdigest()
-                            for v in vals
-                        )
-                    else:
-                        sv = sum(v for v in vals if v is not None)
-                        joined = ",".join(
-                            "null" if v is None else str(v) for v in vals
-                        )
-                    out["codec"].append(codec)
-                    out["col_name"].append(col)
-                    out["n_values"].append(len(vals))
-                    out["n_nulls"].append(nulls)
-                    out["sum_v"].append(sv)
-                    out["values_md5"].append(
-                        hashlib.md5(joined.encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "codec": pd.Series(out["codec"], dtype="object"),
-                    "col_name": pd.Series(out["col_name"], dtype="object"),
-                    "n_values": pd.Series(out["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(out["n_nulls"], dtype="int64"),
-                    "sum_v": pd.Series(out["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(out["values_md5"], dtype="object"),
-                }
-            )
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        codec, records = avro_container_read(bytes(content))
+        for col in ("doc_id", "n_chars_gap", "text", "source"):
+            vals = [r[col] for r in records]
+            yield (codec, col, *column_digest(vals, col in ("text", "source")))
 
-    return bf.mapInPandas(
-        run,
-        schema="codec string, col_name string, n_values long, "
+    return map_rows(
+        bf,
+        "codec string, col_name string, n_values long, "
         "n_nulls long, sum_v long, values_md5 string",
+        rows_of,
     )
 
 
@@ -630,45 +566,21 @@ def mm_avro_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "codec": [], "n_rows": [], "doc_id_sum": [],
-                "n_gap_nulls": [], "text_md5": [],
-            }
-            for content in pdf["content"]:
-                codec, records = avro_container_read(bytes(content))
-                out["codec"].append(codec)
-                out["n_rows"].append(len(records))
-                out["doc_id_sum"].append(sum(r["doc_id"] for r in records))
-                out["n_gap_nulls"].append(
-                    sum(1 for r in records if r["n_chars_gap"] is None)
-                )
-                joined = ",".join(
-                    hashlib.md5(r["text"].encode()).hexdigest()
-                    for r in records
-                )
-                out["text_md5"].append(
-                    hashlib.md5(joined.encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "codec": pd.Series(out["codec"], dtype="object"),
-                    "n_rows": pd.Series(out["n_rows"], dtype="int64"),
-                    "doc_id_sum": pd.Series(
-                        out["doc_id_sum"], dtype="int64"
-                    ),
-                    "n_gap_nulls": pd.Series(
-                        out["n_gap_nulls"], dtype="int64"
-                    ),
-                    "text_md5": pd.Series(out["text_md5"], dtype="object"),
-                }
-            )
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        codec, records = avro_container_read(bytes(content))
+        joined = ",".join(hashlib.md5(r["text"].encode()).hexdigest() for r in records)
+        yield (
+            codec,
+            len(records),
+            sum(r["doc_id"] for r in records),
+            sum(1 for r in records if r["n_chars_gap"] is None),
+            hashlib.md5(joined.encode()).hexdigest(),
+        )
 
-    return bf.mapInPandas(
-        run,
-        schema="codec string, n_rows long, doc_id_sum long, "
-        "n_gap_nulls long, text_md5 string",
+    return map_rows(
+        bf,
+        "codec string, n_rows long, doc_id_sum long, n_gap_nulls long, text_md5 string",
+        rows_of,
     )
 
 

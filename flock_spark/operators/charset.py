@@ -28,11 +28,11 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flock_spark.catalog import spread, tbl
+from flock_spark.operators.digests import map_rows
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -205,45 +205,27 @@ def text_charset_detect_transcode(
         .select("doc_id", "text")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_enc, out_n, out_md5 = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                v = int(doc_id) % 4
-                if v == 0:
-                    want = text + _SUFFIX
-                    payload = b"\xef\xbb\xbf" + want.encode("utf-8")
-                elif v == 1:
-                    want = text + _SUFFIX
-                    payload = b"\xff\xfe" + want.encode("utf-16-le")
-                elif v == 2:
-                    want = text + _SUFFIX
-                    payload = want.encode("utf-16-be")
-                else:
-                    want = text + _L1_SUFFIX
-                    payload = want.encode("latin-1")
-                enc, decoded = sniff_and_decode(payload)
-                if decoded != want:
-                    raise ValueError(f"transcode mismatch for doc {doc_id}")
-                out_doc.append(int(doc_id))
-                out_enc.append(enc)
-                out_n.append(len(decoded))
-                out_md5.append(
-                    hashlib.md5(decoded.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "encoding": pd.Series(out_enc, dtype="object"),
-                    "n_chars": pd.Series(out_n, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        v = int(doc_id) % 4
+        if v == 0:
+            want = text + _SUFFIX
+            payload = b"\xef\xbb\xbf" + want.encode("utf-8")
+        elif v == 1:
+            want = text + _SUFFIX
+            payload = b"\xff\xfe" + want.encode("utf-16-le")
+        elif v == 2:
+            want = text + _SUFFIX
+            payload = want.encode("utf-16-be")
+        else:
+            want = text + _L1_SUFFIX
+            payload = want.encode("latin-1")
+        enc, decoded = sniff_and_decode(payload)
+        if decoded != want:
+            raise ValueError(f"transcode mismatch for doc {doc_id}")
+        yield doc_id, enc, len(decoded), hashlib.md5(decoded.encode("utf-8")).hexdigest()
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, encoding string, n_chars long, "
-        "decoded_md5 string",
+    return map_rows(
+        spread(d), "doc_id long, encoding string, n_chars long, decoded_md5 string", rows_of
     )
 
 
@@ -349,40 +331,17 @@ def archive_ingest_chain_end_to_end(
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_enc, out_n, out_md5 = [], [], [], []
-            for content in pdf["content"]:
-                for name, _size, _mtime, payload in tar_member_walk(
-                    bytes(content)
-                ):
-                    if not (name.startswith("doc_")
-                            and name.endswith(".txt.gz")):
-                        raise ValueError(f"unexpected member {name}")
-                    doc_id = int(name[4:-7])
-                    fname, _gz_mtime, raw, end = gzip_member_parse_at(
-                        payload, 0
-                    )
-                    if end != len(payload) or fname != f"doc_{doc_id}.txt":
-                        raise ValueError(f"gzip member mismatch in {name}")
-                    enc, decoded = sniff_and_decode(raw)
-                    out_doc.append(doc_id)
-                    out_enc.append(enc)
-                    out_n.append(len(decoded))
-                    out_md5.append(
-                        hashlib.md5(decoded.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "encoding": pd.Series(out_enc, dtype="object"),
-                    "n_chars": pd.Series(out_n, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        for name, _size, _mtime, payload in tar_member_walk(bytes(content)):
+            if not (name.startswith("doc_") and name.endswith(".txt.gz")):
+                raise ValueError(f"unexpected member {name}")
+            doc_id = int(name[4:-7])
+            fname, _gz_mtime, raw, end = gzip_member_parse_at(payload, 0)
+            if end != len(payload) or fname != f"doc_{doc_id}.txt":
+                raise ValueError(f"gzip member mismatch in {name}")
+            enc, decoded = sniff_and_decode(raw)
+            yield doc_id, enc, len(decoded), hashlib.md5(decoded.encode("utf-8")).hexdigest()
 
-    return bf.mapInPandas(
-        run,
-        schema="doc_id long, encoding string, n_chars long, "
-        "decoded_md5 string",
+    return map_rows(
+        bf, "doc_id long, encoding string, n_chars long, decoded_md5 string", rows_of
     )

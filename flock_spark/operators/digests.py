@@ -1,6 +1,7 @@
 """Digests shared by the codec and file-format certification entries, each next to
 the DuckDB oracle it must agree with: byte roundtrip (md5 over upper-case hex, as in
-DuckDB's ``hex()``), parquet page-decode stats, and the per-column audit."""
+DuckDB's ``hex()``), parquet page-decode stats, and the per-column audit. Also the
+row mapper every per-row pandas UDF runs through: ``map_rows(df, schema, rows_of)``."""
 
 from __future__ import annotations
 
@@ -78,11 +79,24 @@ def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
 
 
+_DTYPES = {"long": "int64", "int": "int32", "boolean": "bool", "string": "object"}
+
+
 def _batch(schema: str, rows: list[tuple]) -> pd.DataFrame:
     """``rows`` as one output batch, typed by the DDL ``schema``."""
     cols = dict(c.split() for c in schema.split(", "))
-    dtypes = {n: {"long": "int64", "string": "object"}[t] for n, t in cols.items()}
+    dtypes = {n: _DTYPES[t] for n, t in cols.items()}
     return pd.DataFrame(rows, columns=list(cols)).astype(dtypes)
+
+
+def map_rows(df: DataFrame, schema: str, rows_of: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """Emit the tuples ``rows_of(*row)`` yields (none, one or many) for each row of
+    ``df``, one output batch per input batch, typed by the DDL ``schema``."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _batch(schema, [r for row in pdf.itertuples(False, None) for r in rows_of(*row)])
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def byte_digest(b: bytes) -> tuple[int, int, str]:
@@ -107,20 +121,12 @@ def byte_roundtrip(d: DataFrame, make_check: Callable[[], Callable[[int, bytes],
     return spread(d).mapInPandas(run, schema=schema)
 
 
-def _map_files(bf: DataFrame, schema: str, rows_of: Callable[[bytes], Iterable[tuple]]) -> DataFrame:
-    """Emit ``rows_of(content)`` for each file of a binaryFile DataFrame."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _batch(schema, [r for c in pdf["content"] for r in rows_of(bytes(c))])
-
-    return bf.mapInPandas(run, schema=schema)
-
-
 def page_decode(bf: DataFrame, codec: str) -> DataFrame:
     """doc_id and n_chars read from each parquet file's raw bytes, all pages ``codec``."""
     def rows_of(content: bytes) -> Iterator[tuple]:
         # formats imports this module, so its readers are looked up here
         from flock_spark.operators.formats import parquet_column_read, parquet_footer_parse
+        content = bytes(content)
         info = parquet_footer_parse(content)
         codecs = {c["codec"] for rg in info["row_groups"] for c in rg["columns"]}
         if codecs != {codec}:
@@ -131,8 +137,8 @@ def page_decode(bf: DataFrame, codec: str) -> DataFrame:
             p = [v for v in vals if v is not None]
             yield col, len(vals), len(vals) - len(p), min(p), max(p), sum(p), _md5(",".join(map(str, p)))
 
-    return _map_files(bf, "col_name string, n_values long, n_nulls long, min_v long, max_v long, "
-                      "sum_v long, values_md5 string", rows_of)
+    return map_rows(bf, "col_name string, n_values long, n_nulls long, min_v long, max_v long, "
+                    "sum_v long, values_md5 string", rows_of)
 
 
 def column_digest(vals: list, stringish: bool) -> tuple[int, int, int, str]:
@@ -147,4 +153,4 @@ def column_digest(vals: list, stringish: bool) -> tuple[int, int, int, str]:
 def column_audit(bf: DataFrame, walk: Callable[[bytes], Iterable[tuple[str, list, bool]]]) -> DataFrame:
     """Audit the ``(col_name, values, stringish)`` columns ``walk`` reads from each file."""
     schema = "col_name string, n_values long, n_nulls long, sum_v long, values_md5 string"
-    return _map_files(bf, schema, lambda c: ((n, *column_digest(v, s)) for n, v, s in walk(c)))
+    return map_rows(bf, schema, lambda c: ((n, *column_digest(v, s)) for n, v, s in walk(bytes(c))))

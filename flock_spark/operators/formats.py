@@ -17,7 +17,6 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,7 +25,7 @@ from flock_spark.operators.bitio import read_uvarint, unzigzag, write_uvarint
 # constants apart from helpers: an entry's fingerprint takes in the whole
 # import statement of each constant it reads (tools/slate_builder.py)
 from flock_spark.operators.digests import _PAGE_ORACLE, _PAYLOAD_CASE, _ZSTD_ORACLE
-from flock_spark.operators.digests import byte_roundtrip, page_decode
+from flock_spark.operators.digests import byte_roundtrip, map_rows, page_decode
 from flock_spark.registry import register
 
 # Thrift compact protocol type nibbles (public spec).
@@ -265,77 +264,49 @@ def scan_parquet_footer_thrift_walk(
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "column_id": [], "col_name": [], "num_values": [],
-                "codec": [], "stat_min": [], "stat_max": [],
-            }
-            for _path, content in zip(pdf["path"], pdf["content"]):
-                info = parquet_footer_parse(bytes(content))
-                leaf_names = [n for n, _ in info["schema"]]
-                # aggregate chunk stats across row groups per column so the
-                # walk stays correct even if the file is ever rewritten with
-                # multiple row groups
-                agg: dict[str, dict] = {}
-                total = 0
-                for rg in info["row_groups"]:
-                    if len(rg["columns"]) != len(leaf_names):
-                        raise ValueError("row group chunk count != schema leaves")
-                    for cc in rg["columns"]:
-                        if cc["path"] not in leaf_names:
-                            raise ValueError(
-                                f"chunk path {cc['path']} not in schema"
-                            )
-                        if cc["num_values"] != rg["num_rows"]:
-                            raise ValueError(
-                                "flat column chunk num_values != row group rows"
-                            )
-                        a = agg.setdefault(
-                            cc["path"],
-                            {"n": 0, "codec": cc["codec"], "mn": None, "mx": None,
-                             "phys": cc["phys"]},
-                        )
-                        a["n"] += cc["num_values"]
-                        key = (
-                            (lambda s: int(s))
-                            if cc["phys"].startswith("INT")
-                            else (lambda s: s)
-                        )
-                        if cc["stat_min"] is not None and (
-                            a["mn"] is None or key(cc["stat_min"]) < key(a["mn"])
-                        ):
-                            a["mn"] = cc["stat_min"]
-                        if cc["stat_max"] is not None and (
-                            a["mx"] is None or key(cc["stat_max"]) > key(a["mx"])
-                        ):
-                            a["mx"] = cc["stat_max"]
-                    total += rg["num_rows"]
-                if total != info["num_rows"]:
-                    raise ValueError("row group rows disagree with num_rows")
-                for i, name in enumerate(leaf_names):
-                    a = agg[name]
-                    rows["column_id"].append(i)
-                    rows["col_name"].append(name)
-                    rows["num_values"].append(a["n"])
-                    rows["codec"].append(a["codec"])
-                    rows["stat_min"].append(a["mn"])
-                    rows["stat_max"].append(a["mx"])
-            yield pd.DataFrame(
-                {
-                    "column_id": pd.Series(rows["column_id"], dtype="int64"),
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "num_values": pd.Series(rows["num_values"], dtype="int64"),
-                    "codec": pd.Series(rows["codec"], dtype="object"),
-                    "stat_min": pd.Series(rows["stat_min"], dtype="object"),
-                    "stat_max": pd.Series(rows["stat_max"], dtype="object"),
-                }
-            )
+    def rows_of(_path: str, content: bytes) -> Iterator[tuple]:
+        info = parquet_footer_parse(bytes(content))
+        leaf_names = [n for n, _ in info["schema"]]
+        # aggregate chunk stats across row groups per column so the
+        # walk stays correct even if the file is ever rewritten with
+        # multiple row groups
+        agg: dict[str, dict] = {}
+        total = 0
+        for rg in info["row_groups"]:
+            if len(rg["columns"]) != len(leaf_names):
+                raise ValueError("row group chunk count != schema leaves")
+            for cc in rg["columns"]:
+                if cc["path"] not in leaf_names:
+                    raise ValueError(f"chunk path {cc['path']} not in schema")
+                if cc["num_values"] != rg["num_rows"]:
+                    raise ValueError("flat column chunk num_values != row group rows")
+                a = agg.setdefault(
+                    cc["path"],
+                    {"n": 0, "codec": cc["codec"], "mn": None, "mx": None,
+                     "phys": cc["phys"]},
+                )
+                a["n"] += cc["num_values"]
+                key = (lambda s: int(s)) if cc["phys"].startswith("INT") else (lambda s: s)
+                if cc["stat_min"] is not None and (
+                    a["mn"] is None or key(cc["stat_min"]) < key(a["mn"])
+                ):
+                    a["mn"] = cc["stat_min"]
+                if cc["stat_max"] is not None and (
+                    a["mx"] is None or key(cc["stat_max"]) > key(a["mx"])
+                ):
+                    a["mx"] = cc["stat_max"]
+            total += rg["num_rows"]
+        if total != info["num_rows"]:
+            raise ValueError("row group rows disagree with num_rows")
+        for i, name in enumerate(leaf_names):
+            a = agg[name]
+            yield i, name, a["n"], a["codec"], a["mn"], a["mx"]
 
-    return bf.mapInPandas(
-        run,
-        schema="column_id long, col_name string, num_values long, "
+    return map_rows(
+        bf,
+        "column_id long, col_name string, num_values long, "
         "codec string, stat_min string, stat_max string",
+        rows_of,
     )
 
 
@@ -911,43 +882,22 @@ def scan_csv_rfc4180_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_fields": [], "tricky_len": [],
-                "tricky_md5": [], "n_chars_field": [],
-            }
-            for content in pdf["content"]:
-                for rec in csv_rfc4180_parse(bytes(content)):
-                    if len(rec) != 3:
-                        raise ValueError(f"row has {len(rec)} fields, not 3")
-                    tricky = rec[1]
-                    if not tricky.startswith(CSV_TRICKY_PREFIX):
-                        raise ValueError("dequoting lost the hazard prefix")
-                    tb = tricky.encode("utf-8")
-                    rows["doc_id"].append(int(rec[0]))
-                    rows["n_fields"].append(len(rec))
-                    rows["tricky_len"].append(len(tb))
-                    rows["tricky_md5"].append(
-                        hashlib.md5(tb.hex().upper().encode()).hexdigest()
-                    )
-                    rows["n_chars_field"].append(int(rec[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_fields": pd.Series(rows["n_fields"], dtype="int64"),
-                    "tricky_len": pd.Series(rows["tricky_len"], dtype="int64"),
-                    "tricky_md5": pd.Series(rows["tricky_md5"], dtype="object"),
-                    "n_chars_field": pd.Series(
-                        rows["n_chars_field"], dtype="int64"
-                    ),
-                }
-            )
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        for rec in csv_rfc4180_parse(bytes(content)):
+            if len(rec) != 3:
+                raise ValueError(f"row has {len(rec)} fields, not 3")
+            tricky = rec[1]
+            if not tricky.startswith(CSV_TRICKY_PREFIX):
+                raise ValueError("dequoting lost the hazard prefix")
+            tb = tricky.encode("utf-8")
+            md5 = hashlib.md5(tb.hex().upper().encode()).hexdigest()
+            yield int(rec[0]), len(rec), len(tb), md5, int(rec[2])
 
-    return bf.mapInPandas(
-        run,
-        schema="doc_id long, n_fields long, tricky_len long, "
+    return map_rows(
+        bf,
+        "doc_id long, n_fields long, tricky_len long, "
         "tricky_md5 string, n_chars_field long",
+        rows_of,
     )
 
 
@@ -1125,60 +1075,30 @@ def scan_parquet_v2_delta_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "col_name": [], "n_values": [], "n_nulls": [], "min_v": [],
-                "max_v": [], "sum_v": [], "values_md5": [],
-            }
-            for content in pdf["content"]:
-                content = bytes(content)
-                info = parquet_footer_parse(content)
-                names = [n for n, _ in info["schema"]]
-                codecs = {
-                    c["codec"]
-                    for rg in info["row_groups"]
-                    for c in rg["columns"]
-                }
-                if codecs != {"ZSTD"}:
-                    raise ValueError(f"fixture not zstd-paged: {codecs}")
-                for col in ("doc_id", "n_chars", "text", "source"):
-                    vals = parquet_column_read(content, names.index(col))
-                    present = [v for v in vals if v is not None]
-                    if col in ("text", "source"):
-                        stats = [len(v.encode()) for v in present]
-                        joined = ",".join(
-                            hashlib.md5(v.encode()).hexdigest()
-                            for v in present
-                        )
-                    else:
-                        stats = present
-                        joined = ",".join(str(v) for v in present)
-                    rows["col_name"].append(col)
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["min_v"].append(min(stats))
-                    rows["max_v"].append(max(stats))
-                    rows["sum_v"].append(sum(stats))
-                    rows["values_md5"].append(
-                        hashlib.md5(joined.encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "col_name": pd.Series(rows["col_name"], dtype="object"),
-                    "n_values": pd.Series(rows["n_values"], dtype="int64"),
-                    "n_nulls": pd.Series(rows["n_nulls"], dtype="int64"),
-                    "min_v": pd.Series(rows["min_v"], dtype="int64"),
-                    "max_v": pd.Series(rows["max_v"], dtype="int64"),
-                    "sum_v": pd.Series(rows["sum_v"], dtype="int64"),
-                    "values_md5": pd.Series(rows["values_md5"], dtype="object"),
-                }
-            )
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        content = bytes(content)
+        info = parquet_footer_parse(content)
+        names = [n for n, _ in info["schema"]]
+        codecs = {c["codec"] for rg in info["row_groups"] for c in rg["columns"]}
+        if codecs != {"ZSTD"}:
+            raise ValueError(f"fixture not zstd-paged: {codecs}")
+        for col in ("doc_id", "n_chars", "text", "source"):
+            vals = parquet_column_read(content, names.index(col))
+            present = [v for v in vals if v is not None]
+            if col in ("text", "source"):
+                stats = [len(v.encode()) for v in present]
+                joined = ",".join(hashlib.md5(v.encode()).hexdigest() for v in present)
+            else:
+                stats = present
+                joined = ",".join(str(v) for v in present)
+            yield (col, len(vals), len(vals) - len(present), min(stats), max(stats),
+                   sum(stats), hashlib.md5(joined.encode()).hexdigest())
 
-    return bf.mapInPandas(
-        run,
-        schema="col_name string, n_values long, n_nulls long, min_v long, "
+    return map_rows(
+        bf,
+        "col_name string, n_values long, n_nulls long, min_v long, "
         "max_v long, sum_v long, values_md5 string",
+        rows_of,
     )
 
 
@@ -1423,26 +1343,14 @@ def scan_parquet_page_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "n_selected": [], "sum_selected": [],
-                "index_min": [], "index_max": [],
-            }
-            for content in pdf["content"]:
-                st = page_index_prune_read(bytes(content), 0, "INT64", True)
-                rows["n_selected"].append(st["n_selected"])
-                rows["sum_selected"].append(st["sum_selected"])
-                rows["index_min"].append(st["index_min"])
-                rows["index_max"].append(st["index_max"])
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        st = page_index_prune_read(bytes(content), 0, "INT64", True)
+        yield st["n_selected"], st["sum_selected"], st["index_min"], st["index_max"]
 
-    return bf.mapInPandas(
-        run,
-        schema="n_selected long, sum_selected long, "
-        "index_min long, index_max long",
+    return map_rows(
+        bf,
+        "n_selected long, sum_selected long, index_min long, index_max long",
+        rows_of,
     )
 
 

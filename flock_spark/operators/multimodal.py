@@ -9,18 +9,24 @@ The synthetic payload is the document text encoded as UTF-8 bytes — which
 makes even the pandas-UDF path *oracle-checkable*: byte length, md5, and the
 hash-derived fake decode dimensions are all reproducible in DuckDB SQL.
 
-Scale: mapInPandas streams Arrow batches — constant memory per task, no
-per-row Python. Real decode at 100 TB would bump
-spark.sql.execution.arrow.maxRecordsPerBatch down so image batches fit in
-executor memory; the partitioning/schema here would not change.
+Scale: mapInPandas streams Arrow batches — constant memory per task. The
+work itself is per-row Python: each entry's row function (most run through
+``digests.map_rows``) parses, decodes or digests one payload at a time, so
+worker CPU grows with rows and bytes, not with batches. Real decode at 100 TB
+would bump spark.sql.execution.arrow.maxRecordsPerBatch down so image batches
+fit in executor memory; the partitioning/schema here would not change.
 """
 
 from __future__ import annotations
 
 import hashlib
+import re
+import struct
+import zlib
 from collections.abc import Iterator
 from itertools import accumulate
 
+import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
@@ -34,12 +40,10 @@ from flock_spark.operators.bitio import (
     canonical_codes,
     crc32,
 )
-from flock_spark.operators.digests import (
-    _PAYLOAD_CASE,
-    _PLAIN_ORACLE,
-    _ZSTD_ORACLE,
-    byte_roundtrip,
-)
+# constants apart from helpers: an entry's fingerprint takes in the whole
+# import statement of each constant it reads (tools/slate_builder.py)
+from flock_spark.operators.digests import _PAYLOAD_CASE, _PLAIN_ORACLE, _ZSTD_ORACLE
+from flock_spark.operators.digests import byte_roundtrip, map_rows
 from flock_spark.registry import register
 
 try:  # decode libs absent in this container — gate, don't fail at import
@@ -175,7 +179,6 @@ RESIZE_TH = 8  # target height
     "codec-backed decode would swap only the np.frombuffer line.",
 )
 def mm_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -183,37 +186,24 @@ def mm_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("text").cast("binary")) >= RESIZE_SRC_W)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs = (np.arange(RESIZE_TW) * RESIZE_SRC_W) // RESIZE_TW
-        for pdf in batches:
-            out_md5, out_sum = [], []
-            for t in pdf["text"]:
-                b = t.encode("utf-8")
-                src_h = len(b) // RESIZE_SRC_W
-                arr = np.frombuffer(b[: src_h * RESIZE_SRC_W], dtype=np.uint8).reshape(
-                    src_h, RESIZE_SRC_W
-                )
-                yidx = (np.arange(RESIZE_TH) * src_h) // RESIZE_TH
-                resized = arr[np.ix_(yidx, xs)]
-                # DuckDB hex() is uppercase; md5 the same hex text both sides
-                out_md5.append(
-                    hashlib.md5(resized.tobytes().hex().upper().encode()).hexdigest()
-                )
-                out_sum.append(int(resized.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "resized_md5": out_md5,
-                    "pixel_sum": out_sum,
-                    "target_w": RESIZE_TW,
-                    "target_h": RESIZE_TH,
-                }
-            )
+    xs = (np.arange(RESIZE_TW) * RESIZE_SRC_W) // RESIZE_TW
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, resized_md5 string, pixel_sum long, "
-        "target_w int, target_h int",
+    def rows_of(doc_id: int, t: str) -> Iterator[tuple]:
+        b = t.encode("utf-8")
+        src_h = len(b) // RESIZE_SRC_W
+        arr = np.frombuffer(b[: src_h * RESIZE_SRC_W], dtype=np.uint8).reshape(
+            src_h, RESIZE_SRC_W
+        )
+        yidx = (np.arange(RESIZE_TH) * src_h) // RESIZE_TH
+        resized = arr[np.ix_(yidx, xs)]
+        # DuckDB hex() is uppercase; md5 the same hex text both sides
+        md5 = hashlib.md5(resized.tobytes().hex().upper().encode()).hexdigest()
+        yield doc_id, md5, int(resized.sum()), RESIZE_TW, RESIZE_TH
+
+    return map_rows(
+        spread(d),
+        "doc_id long, resized_md5 string, pixel_sum long, target_w int, target_h int",
+        rows_of,
     )
 
 
@@ -249,36 +239,27 @@ AUDIO_WINDOW = 32  # fake-PCM samples (bytes) per analysis window
     "ascii()/length() would diverge there).",
 )
 def mm_audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = tbl(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_w, out_e, out_n = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                amps = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
-                n = len(amps)
-                if n == 0:
-                    continue
-                n_windows = -(-n // AUDIO_WINDOW)
-                padded = np.zeros(n_windows * AUDIO_WINDOW, dtype=np.int64)
-                padded[:n] = amps
-                sq = (padded * padded).reshape(n_windows, AUDIO_WINDOW).sum(axis=1)
-                counts = np.full(n_windows, AUDIO_WINDOW, dtype=np.int64)
-                counts[-1] = n - (n_windows - 1) * AUDIO_WINDOW
-                out_doc.extend([doc_id] * n_windows)
-                out_w.extend(range(n_windows))
-                out_e.extend(sq.tolist())
-                out_n.extend(counts.tolist())
-            yield pd.DataFrame(
-                {"doc_id": out_doc, "window_idx": out_w, "energy": out_e, "n_samples": out_n}
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        amps = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
+        n = len(amps)
+        if n == 0:
+            return
+        n_windows = -(-n // AUDIO_WINDOW)
+        padded = np.zeros(n_windows * AUDIO_WINDOW, dtype=np.int64)
+        padded[:n] = amps
+        sq = (padded * padded).reshape(n_windows, AUDIO_WINDOW).sum(axis=1)
+        counts = np.full(n_windows, AUDIO_WINDOW, dtype=np.int64)
+        counts[-1] = n - (n_windows - 1) * AUDIO_WINDOW
+        for w, (e, c) in enumerate(zip(sq.tolist(), counts.tolist())):
+            yield doc_id, w, e, c
 
-    return spread(d).mapInPandas(
-        energy, schema="doc_id long, window_idx long, energy long, n_samples long"
+    return map_rows(
+        spread(d), "doc_id long, window_idx long, energy long, n_samples long", rows_of
     )
 
 
@@ -328,35 +309,20 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_sidx, out_fidx, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = len(payload) // FRAME_BYTES
-                for sample_idx in range(FRAME_CAP):
-                    frame_idx = sample_idx * FRAME_STRIDE
-                    if frame_idx >= n_frames:
-                        break
-                    start = frame_idx * FRAME_BYTES
-                    frame = bytes(payload[start : start + FRAME_BYTES])
-                    out_doc.append(doc_id)
-                    out_sidx.append(sample_idx)
-                    out_fidx.append(frame_idx)
-                    # digest over lowercase hex: the byte representation both
-                    # engines can slice and md5 identically (see oracle doc)
-                    out_md5.append(hashlib.md5(frame.hex().encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "sample_idx": out_sidx,
-                    "frame_idx": out_fidx,
-                    "frame_md5": out_md5,
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        n_frames = len(payload) // FRAME_BYTES
+        for sample_idx in range(FRAME_CAP):
+            frame_idx = sample_idx * FRAME_STRIDE
+            if frame_idx >= n_frames:
+                break
+            start = frame_idx * FRAME_BYTES
+            frame = bytes(payload[start : start + FRAME_BYTES])
+            # digest over lowercase hex: the byte representation both
+            # engines can slice and md5 identically (see oracle doc)
+            yield doc_id, sample_idx, frame_idx, hashlib.md5(frame.hex().encode()).hexdigest()
 
-    return spread(d).mapInPandas(
-        sample,
-        schema="doc_id long, sample_idx long, frame_idx long, frame_md5 string",
+    return map_rows(
+        spread(d), "doc_id long, sample_idx long, frame_idx long, frame_md5 string", rows_of
     )
 
 
@@ -400,46 +366,31 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "8 bytes/row regardless of payload size.",
 )
 def mm_phash64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = tbl(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[int] = []
-            words: list[list[int]] = [[], [], [], []]
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    # NULL text: the oracle's unnest(generate_series(1, NULL))
-                    # emits nothing for the doc — skip, don't crash
-                    continue
-                b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                n = len(b)
-                if n == 0:
-                    # no bytes → no hash row, matching the oracle's
-                    # generate_series(1, 0) emitting nothing for the doc
-                    continue
-                doc_ids.append(int(doc_id))
-                chunks = (np.arange(n) * 64) // n
-                sums = np.bincount(chunks, weights=b, minlength=64).astype(np.int64)
-                cnts = np.bincount(chunks, minlength=64).astype(np.int64)
-                bits = (sums * n > int(b.sum()) * cnts).astype(np.int64)
-                weights = 1 << (15 - np.arange(16))
-                for k in range(4):
-                    words[k].append(int((bits[16 * k : 16 * k + 16] * weights).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "w0": pd.Series(words[0], dtype="int64"),
-                    "w1": pd.Series(words[1], dtype="int64"),
-                    "w2": pd.Series(words[2], dtype="int64"),
-                    "w3": pd.Series(words[3], dtype="int64"),
-                }
-            )
+    weights = 1 << (15 - np.arange(16))
 
-    return spread(d).mapInPandas(extract, schema="doc_id long, w0 long, w1 long, w2 long, w3 long")
+    def rows_of(doc_id: int, payload: bytes | None) -> Iterator[tuple]:
+        if payload is None:
+            # NULL text: the oracle's unnest(generate_series(1, NULL))
+            # emits nothing for the doc — skip, don't crash
+            return
+        b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        n = len(b)
+        if n == 0:
+            # no bytes → no hash row, matching the oracle's
+            # generate_series(1, 0) emitting nothing for the doc
+            return
+        chunks = (np.arange(n) * 64) // n
+        sums = np.bincount(chunks, weights=b, minlength=64).astype(np.int64)
+        cnts = np.bincount(chunks, minlength=64).astype(np.int64)
+        bits = (sums * n > int(b.sum()) * cnts).astype(np.int64)
+        yield doc_id, *(int((bits[16 * k : 16 * k + 16] * weights).sum()) for k in range(4))
+
+    return map_rows(spread(d), "doc_id long, w0 long, w1 long, w2 long, w3 long", rows_of)
 
 
 @register(
@@ -472,42 +423,30 @@ def mm_phash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     "other extractors, one corpus scan for the whole feature block.",
 )
 def mm_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = tbl(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def profile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "distinct_bytes", "min_byte", "max_byte",
-                    "top_byte_cnt", "top_byte")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                # NULL text → None payload: the oracle drops those docs via
-                # octet_length(encode(text)) > 0, so skip, don't crash
-                if payload is None:
-                    continue
-                b = np.frombuffer(payload, dtype=np.uint8)
-                if len(b) == 0:
-                    continue
-                cnts = np.bincount(b, minlength=256)
-                nz = np.nonzero(cnts)[0]
-                out["doc_id"].append(int(doc_id))
-                out["distinct_bytes"].append(int(len(nz)))
-                out["min_byte"].append(int(nz[0]))
-                out["max_byte"].append(int(nz[-1]))
-                top_cnt = int(cnts.max())
-                out["top_byte_cnt"].append(top_cnt)
-                # argmax returns the FIRST max — lowest byte value on ties,
-                # matching the oracle's min(CASE WHEN c = mx ...)
-                out["top_byte"].append(int(np.argmax(cnts)))
-            yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in out.items()})
+    def rows_of(doc_id: int, payload: bytes | None) -> Iterator[tuple]:
+        # NULL text → None payload: the oracle drops those docs via
+        # octet_length(encode(text)) > 0, so skip, don't crash
+        if payload is None:
+            return
+        b = np.frombuffer(payload, dtype=np.uint8)
+        if len(b) == 0:
+            return
+        cnts = np.bincount(b, minlength=256)
+        nz = np.nonzero(cnts)[0]
+        # argmax returns the FIRST max — lowest byte value on ties,
+        # matching the oracle's min(CASE WHEN c = mx ...)
+        yield doc_id, len(nz), int(nz[0]), int(nz[-1]), int(cnts.max()), int(np.argmax(cnts))
 
-    return spread(d).mapInPandas(
-        profile,
-        schema="doc_id long, distinct_bytes long, min_byte long, max_byte long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, distinct_bytes long, min_byte long, max_byte long, "
         "top_byte_cnt long, top_byte long",
+        rows_of,
     )
 
 
@@ -547,35 +486,28 @@ HDR_W_MOD, HDR_H_MOD = 4080, 2144  # synthetic dims: 16..4095 × 16..2159
 def mm_header_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        w = 16 + doc_id % HDR_W_MOD
+        h = 16 + (doc_id * 7) % HDR_H_MOD
+        body = str(text).encode("utf-8")
+        payload = (
+            PNG_SIG
+            + struct.pack(">I", 13)
+            + b"IHDR"
+            + struct.pack(">II", w, h)
+            + bytes([8, 2, 0, 0, 0])
+            + body
+        )
+        # the parse half — what production runs against real files:
+        sig_ok = payload[:8] == PNG_SIG and payload[12:16] == b"IHDR"
+        pw = int.from_bytes(payload[16:20], "big")
+        ph = int.from_bytes(payload[20:24], "big")
+        yield doc_id, len(payload), pw, ph, sig_ok
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = 16 + int(doc_id) % HDR_W_MOD
-                h = 16 + (int(doc_id) * 7) % HDR_H_MOD
-                body = str(text).encode("utf-8")
-                payload = (
-                    PNG_SIG
-                    + struct.pack(">I", 13)
-                    + b"IHDR"
-                    + struct.pack(">II", w, h)
-                    + bytes([8, 2, 0, 0, 0])
-                    + body
-                )
-                # the parse half — what production runs against real files:
-                sig_ok = payload[:8] == PNG_SIG and payload[12:16] == b"IHDR"
-                pw = int.from_bytes(payload[16:20], "big")
-                ph = int.from_bytes(payload[20:24], "big")
-                rows.append((int(doc_id), len(payload), pw, ph, bool(sig_ok)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "byte_len", "width", "height", "sig_ok"]
-            )
-
-    return spread(d).mapInPandas(
-        parse,
-        schema="doc_id long, byte_len long, width long, height long, sig_ok boolean",
+    return map_rows(
+        spread(d),
+        "doc_id long, byte_len long, width long, height long, sig_ok boolean",
+        rows_of,
     )
 
 
@@ -613,48 +545,40 @@ JPEG_COM_MOD = 23  # variable-length comment segment: forces real marker walking
 def mm_jpeg_header_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        w = 16 + doc_id % HDR_W_MOD
+        h = 16 + (doc_id * 7) % HDR_H_MOD
+        c = doc_id % JPEG_COM_MOD
+        body = str(text).encode("utf-8")
+        payload = (
+            b"\xff\xd8"  # SOI
+            + b"\xff\xfe" + struct.pack(">H", 2 + c) + b"x" * c  # COM
+            + b"\xff\xc0" + struct.pack(">H", 17)  # SOF0, len 17
+            + bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
+            + b"\x01\x22\x00\x02\x11\x01\x03\x11\x01"  # 3 comp specs
+            + body
+        )
+        # the parse half — real marker walk, as against actual files:
+        sof_ok, pw, ph, ncomp = False, 0, 0, 0
+        if payload[:2] == b"\xff\xd8":
+            pos = 2
+            while pos + 4 <= len(payload) and payload[pos] == 0xFF:
+                marker = payload[pos + 1]
+                seg_len = int.from_bytes(payload[pos + 2 : pos + 4], "big")
+                if marker == 0xC0:  # SOF0: precision, H, W, ncomp
+                    ph = int.from_bytes(payload[pos + 5 : pos + 7], "big")
+                    pw = int.from_bytes(payload[pos + 7 : pos + 9], "big")
+                    ncomp = payload[pos + 9]
+                    sof_ok = True
+                    break
+                pos += 2 + seg_len
+        yield doc_id, len(payload), pw, ph, ncomp, sof_ok
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = 16 + int(doc_id) % HDR_W_MOD
-                h = 16 + (int(doc_id) * 7) % HDR_H_MOD
-                c = int(doc_id) % JPEG_COM_MOD
-                body = str(text).encode("utf-8")
-                payload = (
-                    b"\xff\xd8"  # SOI
-                    + b"\xff\xfe" + struct.pack(">H", 2 + c) + b"x" * c  # COM
-                    + b"\xff\xc0" + struct.pack(">H", 17)  # SOF0, len 17
-                    + bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-                    + b"\x01\x22\x00\x02\x11\x01\x03\x11\x01"  # 3 comp specs
-                    + body
-                )
-                # the parse half — real marker walk, as against actual files:
-                sof_ok, pw, ph, ncomp = False, 0, 0, 0
-                if payload[:2] == b"\xff\xd8":
-                    pos = 2
-                    while pos + 4 <= len(payload) and payload[pos] == 0xFF:
-                        marker = payload[pos + 1]
-                        seg_len = int.from_bytes(payload[pos + 2 : pos + 4], "big")
-                        if marker == 0xC0:  # SOF0: precision, H, W, ncomp
-                            ph = int.from_bytes(payload[pos + 5 : pos + 7], "big")
-                            pw = int.from_bytes(payload[pos + 7 : pos + 9], "big")
-                            ncomp = payload[pos + 9]
-                            sof_ok = True
-                            break
-                        pos += 2 + seg_len
-                rows.append((int(doc_id), len(payload), pw, ph, ncomp, sof_ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "byte_len", "width", "height", "n_components", "sof_ok"],
-            )
-
-    return spread(d).mapInPandas(
-        parse,
-        schema="doc_id long, byte_len long, width long, height long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, byte_len long, width long, height long, "
         "n_components long, sof_ok boolean",
+        rows_of,
     )
 
 
@@ -692,45 +616,35 @@ WAV_RATES = (8000, 16000, 24000, 32000, 40000)  # sample_rate = WAV_RATES[doc_id
 def mm_wav_header_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        ch = 1 + doc_id % 2
+        rate = WAV_RATES[doc_id % 5]
+        block = ch * 2  # 16-bit PCM
+        data = str(text).encode("utf-8")
+        payload = (
+            b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, rate,
+                                    rate * block, block, 16)
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        # the parse half — little-endian field reads per the RIFF spec:
+        riff_ok = (
+            payload[:4] == b"RIFF"
+            and payload[8:12] == b"WAVE"
+            and payload[12:16] == b"fmt "
+            and payload[36:40] == b"data"
+        )
+        p_ch = int.from_bytes(payload[22:24], "little")
+        p_rate = int.from_bytes(payload[24:28], "little")
+        p_byte_rate = int.from_bytes(payload[28:32], "little")
+        p_data = int.from_bytes(payload[40:44], "little")
+        yield doc_id, p_ch, p_rate, p_data, p_data * 1_000_000 // p_byte_rate, riff_ok
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ch = 1 + int(doc_id) % 2
-                rate = WAV_RATES[int(doc_id) % 5]
-                block = ch * 2  # 16-bit PCM
-                data = str(text).encode("utf-8")
-                payload = (
-                    b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                    + b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, rate,
-                                            rate * block, block, 16)
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                # the parse half — little-endian field reads per the RIFF spec:
-                riff_ok = (
-                    payload[:4] == b"RIFF"
-                    and payload[8:12] == b"WAVE"
-                    and payload[12:16] == b"fmt "
-                    and payload[36:40] == b"data"
-                )
-                p_ch = int.from_bytes(payload[22:24], "little")
-                p_rate = int.from_bytes(payload[24:28], "little")
-                p_byte_rate = int.from_bytes(payload[28:32], "little")
-                p_data = int.from_bytes(payload[40:44], "little")
-                dur_us = p_data * 1_000_000 // p_byte_rate
-                rows.append((int(doc_id), p_ch, p_rate, p_data, dur_us, riff_ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "channels", "sample_rate", "data_bytes",
-                         "duration_us", "riff_ok"],
-            )
-
-    return spread(d).mapInPandas(
-        parse,
-        schema="doc_id long, channels long, sample_rate long, data_bytes long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, channels long, sample_rate long, data_bytes long, "
         "duration_us long, riff_ok boolean",
+        rows_of,
     )
 
 
@@ -862,36 +776,22 @@ SCENE_CUT_DELTA = 200  # energy jump that marks a cut (p99 of frame deltas)
     "sampling) → scene cuts (content-adaptive sampling).",
 )
 def mm_scene_cut_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
     from pyspark.sql import Window as W
 
     d = tbl(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_idx, out_en = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                n_frames = len(b) // 16
-                if n_frames == 0:
-                    continue
-                sums = b[: n_frames * 16].reshape(n_frames, 16).sum(axis=1)
-                out_doc.extend([int(doc_id)] * n_frames)
-                out_idx.extend(range(n_frames))
-                out_en.extend(int(x) for x in sums)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "frame_idx": pd.Series(out_idx, dtype="int64"),
-                    "energy": pd.Series(out_en, dtype="int64"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes | None) -> Iterator[tuple]:
+        if payload is None:
+            return
+        b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        n_frames = len(b) // 16
+        sums = b[: n_frames * 16].reshape(n_frames, 16).sum(axis=1)
+        for i, x in enumerate(sums.tolist()):
+            yield doc_id, i, x
 
-    en = spread(d).mapInPandas(energies, schema="doc_id long, frame_idx long, energy long")
+    en = map_rows(spread(d), "doc_id long, frame_idx long, energy long", rows_of)
     w = W.partitionBy("doc_id").orderBy("frame_idx")
     dd = en.withColumn("prev_energy", F.lag("energy").over(w))
     return dd.filter(
@@ -976,38 +876,29 @@ GIF_W_MOD, GIF_H_MOD = 4080, 2144
 def mm_gif_header_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        w = 16 + doc_id % GIF_W_MOD
+        h = 16 + (doc_id * 11) % GIF_H_MOD
+        gct_bits = doc_id % 8
+        packed = 0x80 | gct_bits  # GCT present, size field
+        payload = (
+            b"GIF89a"
+            + struct.pack("<HH", w, h)
+            + bytes([packed, 0, 0])
+            + str(text).encode("utf-8")
+        )
+        # parse half — what production runs on real files:
+        sig_ok = payload[:6] in (b"GIF89a", b"GIF87a")
+        pw = int.from_bytes(payload[6:8], "little")
+        ph = int.from_bytes(payload[8:10], "little")
+        pk = payload[10]
+        n_colors = 1 << ((pk & 0x07) + 1) if pk & 0x80 else 0
+        yield doc_id, pw, ph, n_colors, sig_ok
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = 16 + int(doc_id) % GIF_W_MOD
-                h = 16 + (int(doc_id) * 11) % GIF_H_MOD
-                gct_bits = int(doc_id) % 8
-                packed = 0x80 | gct_bits  # GCT present, size field
-                payload = (
-                    b"GIF89a"
-                    + struct.pack("<HH", w, h)
-                    + bytes([packed, 0, 0])
-                    + str(text).encode("utf-8")
-                )
-                # parse half — what production runs on real files:
-                sig_ok = payload[:6] in (b"GIF89a", b"GIF87a")
-                pw = int.from_bytes(payload[6:8], "little")
-                ph = int.from_bytes(payload[8:10], "little")
-                pk = payload[10]
-                n_colors = 1 << ((pk & 0x07) + 1) if pk & 0x80 else 0
-                rows.append((int(doc_id), pw, ph, n_colors, bool(sig_ok)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "n_gct_colors", "sig_ok"],
-            )
-
-    return spread(d).mapInPandas(
-        parse,
-        schema="doc_id long, width long, height long, n_gct_colors long, "
-        "sig_ok boolean",
+    return map_rows(
+        spread(d),
+        "doc_id long, width long, height long, n_gct_colors long, sig_ok boolean",
+        rows_of,
     )
 
 
@@ -1050,7 +941,6 @@ TILE_G = 4  # tile grid: TILE_G x TILE_G tiles over the H x 32 byte grid
     "oracle re-derives the identical tile map per byte in SQL.",
 )
 def mm_image_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -1058,36 +948,27 @@ def mm_image_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("text").cast("binary")) >= TILE_G * RESIZE_SRC_W)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tx = (np.arange(RESIZE_SRC_W) * TILE_G) // RESIZE_SRC_W
-        out = {k: [] for k in ("doc_id", "tile_y", "tile_x", "n_px", "px_sum", "px_sumsq")}
-        for pdf in batches:
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                b = t.encode("utf-8")
-                src_h = len(b) // RESIZE_SRC_W
-                arr = np.frombuffer(
-                    b[: src_h * RESIZE_SRC_W], dtype=np.uint8
-                ).reshape(src_h, RESIZE_SRC_W).astype(np.int64)
-                ty = (np.arange(src_h) * TILE_G) // src_h
-                tid = (ty[:, None] * TILE_G + tx[None, :]).ravel()
-                flat = arr.ravel()
-                n = np.bincount(tid, minlength=TILE_G * TILE_G)
-                s = np.bincount(tid, weights=flat, minlength=TILE_G * TILE_G)
-                s2 = np.bincount(tid, weights=flat * flat, minlength=TILE_G * TILE_G)
-                for k in range(TILE_G * TILE_G):
-                    out["doc_id"].append(doc_id)
-                    out["tile_y"].append(k // TILE_G)
-                    out["tile_x"].append(k % TILE_G)
-                    out["n_px"].append(int(n[k]))
-                    out["px_sum"].append(int(s[k]))
-                    out["px_sumsq"].append(int(s2[k]))
-            yield pd.DataFrame(out)
-            out = {k: [] for k in out}
+    tx = (np.arange(RESIZE_SRC_W) * TILE_G) // RESIZE_SRC_W
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, tile_y long, tile_x long, n_px long, "
-        "px_sum long, px_sumsq long",
+    def rows_of(doc_id: int, t: str) -> Iterator[tuple]:
+        b = t.encode("utf-8")
+        src_h = len(b) // RESIZE_SRC_W
+        arr = np.frombuffer(
+            b[: src_h * RESIZE_SRC_W], dtype=np.uint8
+        ).reshape(src_h, RESIZE_SRC_W).astype(np.int64)
+        ty = (np.arange(src_h) * TILE_G) // src_h
+        tid = (ty[:, None] * TILE_G + tx[None, :]).ravel()
+        flat = arr.ravel()
+        n = np.bincount(tid, minlength=TILE_G * TILE_G)
+        s = np.bincount(tid, weights=flat, minlength=TILE_G * TILE_G)
+        s2 = np.bincount(tid, weights=flat * flat, minlength=TILE_G * TILE_G)
+        for k in range(TILE_G * TILE_G):
+            yield doc_id, k // TILE_G, k % TILE_G, int(n[k]), int(s[k]), int(s2[k])
+
+    return map_rows(
+        spread(d),
+        "doc_id long, tile_y long, tile_x long, n_px long, px_sum long, px_sumsq long",
+        rows_of,
     )
 
 
@@ -1145,7 +1026,6 @@ def mm_image_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output pixel in SQL and md5s the same pixel sequence.",
 )
 def mm_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -1153,45 +1033,31 @@ def mm_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("text").cast("binary")) >= RESIZE_SRC_W)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs0 = 4 * np.arange(RESIZE_TW) + 1  # x0; fx = 8 (constant for 32->8)
-        for pdf in batches:
-            out_md5, out_sum = [], []
-            for t in pdf["text"]:
-                b = t.encode("utf-8")
-                src_h = len(b) // RESIZE_SRC_W
-                arr = np.frombuffer(
-                    b[: src_h * RESIZE_SRC_W], dtype=np.uint8
-                ).reshape(src_h, RESIZE_SRC_W).astype(np.int64)
-                sy16 = np.maximum(
-                    0, (2 * np.arange(RESIZE_TH) + 1) * src_h - RESIZE_TH
-                )
-                y0 = sy16 // 16
-                y1 = np.minimum(y0 + 1, src_h - 1)
-                fy = (sy16 % 16)[:, None]
-                p00 = arr[np.ix_(y0, xs0)]
-                p01 = arr[np.ix_(y0, xs0 + 1)]
-                p10 = arr[np.ix_(y1, xs0)]
-                p11 = arr[np.ix_(y1, xs0 + 1)]
-                pv = ((16 - fy) * (8 * p00 + 8 * p01) + fy * (8 * p10 + 8 * p11)) // 256
-                flat = pv.ravel()
-                key = ",".join(str(int(v)) for v in flat)
-                out_md5.append(hashlib.md5(key.encode()).hexdigest())
-                out_sum.append(int(flat.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "resized_md5": out_md5,
-                    "pixel_sum": out_sum,
-                    "target_w": RESIZE_TW,
-                    "target_h": RESIZE_TH,
-                }
-            )
+    xs0 = 4 * np.arange(RESIZE_TW) + 1  # x0; fx = 8 (constant for 32->8)
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, resized_md5 string, pixel_sum long, "
-        "target_w int, target_h int",
+    def rows_of(doc_id: int, t: str) -> Iterator[tuple]:
+        b = t.encode("utf-8")
+        src_h = len(b) // RESIZE_SRC_W
+        arr = np.frombuffer(
+            b[: src_h * RESIZE_SRC_W], dtype=np.uint8
+        ).reshape(src_h, RESIZE_SRC_W).astype(np.int64)
+        sy16 = np.maximum(0, (2 * np.arange(RESIZE_TH) + 1) * src_h - RESIZE_TH)
+        y0 = sy16 // 16
+        y1 = np.minimum(y0 + 1, src_h - 1)
+        fy = (sy16 % 16)[:, None]
+        p00 = arr[np.ix_(y0, xs0)]
+        p01 = arr[np.ix_(y0, xs0 + 1)]
+        p10 = arr[np.ix_(y1, xs0)]
+        p11 = arr[np.ix_(y1, xs0 + 1)]
+        pv = ((16 - fy) * (8 * p00 + 8 * p01) + fy * (8 * p10 + 8 * p11)) // 256
+        flat = pv.ravel()
+        key = ",".join(str(int(v)) for v in flat)
+        yield doc_id, hashlib.md5(key.encode()).hexdigest(), int(flat.sum()), RESIZE_TW, RESIZE_TH
+
+    return map_rows(
+        spread(d),
+        "doc_id long, resized_md5 string, pixel_sum long, target_w int, target_h int",
+        rows_of,
     )
 
 
@@ -1295,9 +1161,11 @@ def lzw_decode_bytes(data: bytes) -> bytes:
     if not data:
         raise ValueError("empty LZW stream")
     min_code = data[0]
-    if not 1 <= min_code <= 11:
-        # GIF caps code width at 12 bits, so min code size is at most 11;
-        # an unvalidated byte here would size the base table as 2^min_code
+    if not 2 <= min_code <= 11:
+        # GIF89a requires a min code size of at least 2 (a 1 would start the
+        # codes 2 bits wide and never widen them) and caps code width at 12
+        # bits, so at most 11; an unvalidated byte here would size the base
+        # table as 2^min_code
         raise ValueError(f"invalid LZW min code size {min_code}")
     clear = 1 << min_code
     eoi = clear + 1
@@ -1406,7 +1274,6 @@ def lzw_decode(data: bytes) -> list[int]:
     "distributes (the per-object decode is the irreducible cost).",
 )
 def mm_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -1414,36 +1281,20 @@ def mm_gif_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_n, out_sum, out_md5 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pixels = (
-                    np.frombuffer(bytes(payload), dtype=np.uint8) % 4
-                ).tobytes()
-                decoded = lzw_decode_bytes(lzw_encode(pixels))
-                if decoded != pixels:  # hard fail beats silent corruption
-                    raise ValueError(f"LZW roundtrip mismatch for doc {doc_id}")
-                px = np.frombuffer(decoded, dtype=np.uint8)
-                # the oracle's key, the pixels joined by commas: every pixel
-                # is one digit, so pixel k is byte 2k and commas fill the rest
-                key = np.full(2 * len(px) - 1, ord(","), dtype=np.uint8)
-                key[::2] = px + ord("0")
-                out_doc.append(int(doc_id))
-                out_n.append(len(px))
-                out_sum.append(int(px.sum()))
-                out_md5.append(hashlib.md5(key.tobytes()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "n_px": pd.Series(out_n, dtype="int64"),
-                    "px_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        pixels = (np.frombuffer(bytes(payload), dtype=np.uint8) % 4).tobytes()
+        decoded = lzw_decode_bytes(lzw_encode(pixels))
+        if decoded != pixels:  # hard fail beats silent corruption
+            raise ValueError(f"LZW roundtrip mismatch for doc {doc_id}")
+        px = np.frombuffer(decoded, dtype=np.uint8)
+        # the oracle's key, the pixels joined by commas: every pixel
+        # is one digit, so pixel k is byte 2k and commas fill the rest
+        key = np.full(2 * len(px) - 1, ord(","), dtype=np.uint8)
+        key[::2] = px + ord("0")
+        yield doc_id, len(px), int(px.sum()), hashlib.md5(key.tobytes()).hexdigest()
 
-    return spread(d).mapInPandas(
-        run, schema="doc_id long, n_px long, px_sum long, decoded_md5 string"
+    return map_rows(
+        spread(d), "doc_id long, n_px long, px_sum long, decoded_md5 string", rows_of
     )
 
 
@@ -1608,7 +1459,6 @@ def png_unfilter_rows(raw: bytes, width: int, np):
     "decode in this family.",
 )
 def mm_png_inflate_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -1616,43 +1466,22 @@ def mm_png_inflate_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) >= PNG_ROW_W)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_h, out_n, out_sum, out_md5 = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                h = len(b) // PNG_ROW_W
-                grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(
-                    h, PNG_ROW_W
-                )
-                stream = png_stored_deflate(png_filter_rows(grid, np))
-                recon = png_unfilter_rows(
-                    png_inflate_stored(stream), PNG_ROW_W, np
-                )
-                if not (recon == grid).all():
-                    raise ValueError(f"PNG roundtrip mismatch for doc {doc_id}")
-                rb = recon.astype(np.uint8).tobytes()
-                out_doc.append(int(doc_id))
-                out_h.append(h)
-                out_n.append(h * PNG_ROW_W)
-                out_sum.append(int(recon.sum()))
-                out_md5.append(
-                    hashlib.md5(rb.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "height": pd.Series(out_h, dtype="int64"),
-                    "n_px": pd.Series(out_n, dtype="int64"),
-                    "px_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        b = bytes(payload)
+        h = len(b) // PNG_ROW_W
+        grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(h, PNG_ROW_W)
+        stream = png_stored_deflate(png_filter_rows(grid, np))
+        recon = png_unfilter_rows(png_inflate_stored(stream), PNG_ROW_W, np)
+        if not (recon == grid).all():
+            raise ValueError(f"PNG roundtrip mismatch for doc {doc_id}")
+        rb = recon.astype(np.uint8).tobytes()
+        md5 = hashlib.md5(rb.hex().upper().encode()).hexdigest()
+        yield doc_id, h, h * PNG_ROW_W, int(recon.sum()), md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, height long, n_px long, px_sum long, "
-        "decoded_md5 string",
+    return map_rows(
+        spread(d),
+        "doc_id long, height long, n_px long, px_sum long, decoded_md5 string",
+        rows_of,
     )
 
 
@@ -1784,7 +1613,6 @@ def png_unfilter_rows_full(raw: bytes, width: int, np):
     "single scan, no shuffle — the codec-sibling plan family.",
 )
 def mm_png_filter_suite_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -1792,47 +1620,22 @@ def mm_png_filter_suite_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) >= PNG_ROW_W * 5)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib as _zlib
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        b = bytes(payload)
+        h = len(b) // PNG_ROW_W
+        grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(h, PNG_ROW_W)
+        stream = zlib.compress(png_filter_rows_full(grid, np), 6)
+        recon = png_unfilter_rows_full(zlib_inflate(stream), PNG_ROW_W, np)
+        if not (recon == grid).all():
+            raise ValueError(f"PNG filter-suite roundtrip mismatch for doc {doc_id}")
+        rb = recon.astype(np.uint8).tobytes()
+        md5 = hashlib.md5(rb.hex().upper().encode()).hexdigest()
+        yield doc_id, h, h * PNG_ROW_W, int(recon.sum()), md5
 
-        for pdf in batches:
-            out_doc, out_h, out_n, out_sum, out_md5 = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                h = len(b) // PNG_ROW_W
-                grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(
-                    h, PNG_ROW_W
-                )
-                stream = _zlib.compress(png_filter_rows_full(grid, np), 6)
-                recon = png_unfilter_rows_full(
-                    zlib_inflate(stream), PNG_ROW_W, np
-                )
-                if not (recon == grid).all():
-                    raise ValueError(
-                        f"PNG filter-suite roundtrip mismatch for doc {doc_id}"
-                    )
-                rb = recon.astype(np.uint8).tobytes()
-                out_doc.append(int(doc_id))
-                out_h.append(h)
-                out_n.append(h * PNG_ROW_W)
-                out_sum.append(int(recon.sum()))
-                out_md5.append(
-                    hashlib.md5(rb.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "height": pd.Series(out_h, dtype="int64"),
-                    "n_px": pd.Series(out_n, dtype="int64"),
-                    "px_sum": pd.Series(out_sum, dtype="int64"),
-                    "decoded_md5": pd.Series(out_md5, dtype="object"),
-                }
-            )
-
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, height long, n_px long, px_sum long, "
-        "decoded_md5 string",
+    return map_rows(
+        spread(d),
+        "doc_id long, height long, n_px long, px_sum long, decoded_md5 string",
+        rows_of,
     )
 
 
@@ -2482,43 +2285,19 @@ def mm_gzip_member_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "fname": [], "mtime": [], "flg": [],
-                "isize": [], "payload_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                original = bytes(payload)
-                member = gzip_member_build(
-                    f"doc_{int(doc_id)}.txt", int(doc_id), original
-                )
-                fname, mtime, decoded = gzip_member_parse(member)
-                if decoded != original:
-                    raise ValueError(f"gzip roundtrip mismatch for doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["fname"].append(fname)
-                rows["mtime"].append(mtime)
-                rows["flg"].append(member[3])
-                rows["isize"].append(len(decoded))
-                rows["payload_md5"].append(
-                    hashlib.md5(decoded.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "fname": pd.Series(rows["fname"], dtype="object"),
-                    "mtime": pd.Series(rows["mtime"], dtype="int64"),
-                    "flg": pd.Series(rows["flg"], dtype="int64"),
-                    "isize": pd.Series(rows["isize"], dtype="int64"),
-                    "payload_md5": pd.Series(rows["payload_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        original = bytes(payload)
+        member = gzip_member_build(f"doc_{int(doc_id)}.txt", int(doc_id), original)
+        fname, mtime, decoded = gzip_member_parse(member)
+        if decoded != original:
+            raise ValueError(f"gzip roundtrip mismatch for doc {doc_id}")
+        md5 = hashlib.md5(decoded.hex().upper().encode()).hexdigest()
+        yield doc_id, fname, mtime, member[3], len(decoded), md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, fname string, mtime long, flg long, isize long, "
-        "payload_md5 string",
+    return map_rows(
+        spread(d),
+        "doc_id long, fname string, mtime long, flg long, isize long, payload_md5 string",
+        rows_of,
     )
 
 
@@ -2637,7 +2416,6 @@ def png_container_walk(stream: bytes, np):
     "Scale: per-object mapInPandas, same as the whole decode family.",
 )
 def mm_png_chunk_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -2647,53 +2425,22 @@ def mm_png_chunk_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) >= PNG_ROW_W)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_chunks": [],
-                "idat_len": [], "src": [], "pixels_md5": [],
-            }
-            for doc_id, source, payload in zip(
-                pdf["doc_id"], pdf["source"], pdf["payload"]
-            ):
-                b = bytes(payload)
-                h = len(b) // PNG_ROW_W
-                grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(
-                    h, PNG_ROW_W
-                )
-                png = png_container_build(grid, str(source), np)
-                w2, h2, n_chunks, idat_len, texts, recon = png_container_walk(
-                    png, np
-                )
-                if not (recon == grid).all():
-                    raise ValueError(f"PNG walk roundtrip mismatch doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w2)
-                rows["height"].append(h2)
-                rows["n_chunks"].append(n_chunks)
-                rows["idat_len"].append(idat_len)
-                rows["src"].append(texts["source"])
-                rows["pixels_md5"].append(
-                    hashlib.md5(
-                        recon.astype(np.uint8).tobytes().hex().upper().encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int64"),
-                    "height": pd.Series(rows["height"], dtype="int64"),
-                    "n_chunks": pd.Series(rows["n_chunks"], dtype="int64"),
-                    "idat_len": pd.Series(rows["idat_len"], dtype="int64"),
-                    "src": pd.Series(rows["src"], dtype="object"),
-                    "pixels_md5": pd.Series(rows["pixels_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, source: str, payload: bytes) -> Iterator[tuple]:
+        b = bytes(payload)
+        h = len(b) // PNG_ROW_W
+        grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(h, PNG_ROW_W)
+        png = png_container_build(grid, str(source), np)
+        w2, h2, n_chunks, idat_len, texts, recon = png_container_walk(png, np)
+        if not (recon == grid).all():
+            raise ValueError(f"PNG walk roundtrip mismatch doc {doc_id}")
+        md5 = hashlib.md5(recon.astype(np.uint8).tobytes().hex().upper().encode()).hexdigest()
+        yield doc_id, w2, h2, n_chunks, idat_len, texts["source"], md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, n_chunks long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, width long, height long, n_chunks long, "
         "idat_len long, src string, pixels_md5 string",
+        rows_of,
     )
 
 
@@ -2761,7 +2508,6 @@ def gif_deinterlace(rows_in_stream_order: list, h: int) -> list:
     "constant-memory shape.",
 )
 def mm_gif_deinterlace(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
 
     d = (
         tbl(spark, sf_dir, "documents")
@@ -2769,47 +2515,24 @@ def mm_gif_deinterlace(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) >= PNG_ROW_W)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_rows": [], "perm_md5": [], "restored_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                h = len(b) // PNG_ROW_W
-                grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(
-                    h, PNG_ROW_W
-                )
-                order = gif_interlace_order(h)
-                interlaced = [grid[y] for y in order]  # what the encoder emits
-                restored = gif_deinterlace(interlaced, h)
-                recon = np.stack(restored)
-                if not (recon == grid).all():
-                    raise ValueError(f"deinterlace mismatch for doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["n_rows"].append(h)
-                rows["perm_md5"].append(
-                    hashlib.md5(
-                        ",".join(str(y) for y in order).encode()
-                    ).hexdigest()
-                )
-                rows["restored_md5"].append(
-                    hashlib.md5(
-                        recon.astype(np.uint8).tobytes().hex().upper().encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_rows": pd.Series(rows["n_rows"], dtype="int64"),
-                    "perm_md5": pd.Series(rows["perm_md5"], dtype="object"),
-                    "restored_md5": pd.Series(rows["restored_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        b = bytes(payload)
+        h = len(b) // PNG_ROW_W
+        grid = np.frombuffer(b[: h * PNG_ROW_W], dtype=np.uint8).reshape(h, PNG_ROW_W)
+        order = gif_interlace_order(h)
+        interlaced = [grid[y] for y in order]  # what the encoder emits
+        restored = gif_deinterlace(interlaced, h)
+        recon = np.stack(restored)
+        if not (recon == grid).all():
+            raise ValueError(f"deinterlace mismatch for doc {doc_id}")
+        perm_md5 = hashlib.md5(",".join(str(y) for y in order).encode()).hexdigest()
+        restored_md5 = hashlib.md5(
+            recon.astype(np.uint8).tobytes().hex().upper().encode()
+        ).hexdigest()
+        yield doc_id, h, perm_md5, restored_md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_rows long, perm_md5 string, restored_md5 string",
+    return map_rows(
+        spread(d), "doc_id long, n_rows long, perm_md5 string, restored_md5 string", rows_of
     )
 
 
@@ -2927,59 +2650,25 @@ def mm_tar_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_members": [], "total_size": [], "mtime": [],
-                "names_md5": [], "payload_md5": [],
-            }
-            for doc_id, lang, payload in zip(
-                pdf["doc_id"], pdf["lang"], pdf["payload"]
-            ):
-                text = bytes(payload)
-                meta = f"lang={lang}\n".encode()
-                archive = tar_build(
-                    [
-                        (f"doc_{int(doc_id)}.txt", text),
-                        (f"doc_{int(doc_id)}.meta", meta),
-                    ],
-                    mtime=int(doc_id),
-                )
-                members = tar_member_walk(archive)
-                if [(m[0], m[3]) for m in members] != [
-                    (f"doc_{int(doc_id)}.txt", text),
-                    (f"doc_{int(doc_id)}.meta", meta),
-                ]:
-                    raise ValueError(f"tar roundtrip mismatch for doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["n_members"].append(len(members))
-                rows["total_size"].append(sum(m[1] for m in members))
-                rows["mtime"].append(members[0][2])
-                rows["names_md5"].append(
-                    hashlib.md5(
-                        ",".join(m[0] for m in members).encode()
-                    ).hexdigest()
-                )
-                rows["payload_md5"].append(
-                    hashlib.md5(
-                        b"".join(m[3] for m in members).hex().upper().encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_members": pd.Series(rows["n_members"], dtype="int64"),
-                    "total_size": pd.Series(rows["total_size"], dtype="int64"),
-                    "mtime": pd.Series(rows["mtime"], dtype="int64"),
-                    "names_md5": pd.Series(rows["names_md5"], dtype="object"),
-                    "payload_md5": pd.Series(rows["payload_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, lang: str, payload: bytes) -> Iterator[tuple]:
+        text = bytes(payload)
+        meta = f"lang={lang}\n".encode()
+        want = [(f"doc_{int(doc_id)}.txt", text), (f"doc_{int(doc_id)}.meta", meta)]
+        members = tar_member_walk(tar_build(want, mtime=int(doc_id)))
+        if [(m[0], m[3]) for m in members] != want:
+            raise ValueError(f"tar roundtrip mismatch for doc {doc_id}")
+        names_md5 = hashlib.md5(",".join(m[0] for m in members).encode()).hexdigest()
+        payload_md5 = hashlib.md5(
+            b"".join(m[3] for m in members).hex().upper().encode()
+        ).hexdigest()
+        yield (doc_id, len(members), sum(m[1] for m in members), members[0][2],
+               names_md5, payload_md5)
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_members long, total_size long, mtime long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, n_members long, total_size long, mtime long, "
         "names_md5 string, payload_md5 string",
+        rows_of,
     )
 
 
@@ -3021,48 +2710,27 @@ def mm_gzip_multistream_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) >= 3)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_members": [], "isize_1": [], "isize_2": [],
-                "isize_3": [], "payload_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                original = bytes(payload)
-                c = len(original) // 3
-                chunks = [original[:c], original[c : 2 * c], original[2 * c :]]
-                stream = b"".join(
-                    gzip_member_build(f"rec_{i}", int(doc_id) * 4 + i, ch)
-                    for i, ch in enumerate(chunks)
-                )
-                members = gzip_multistream_walk(stream)
-                if b"".join(m[2] for m in members) != original or [
-                    m[0] for m in members
-                ] != ["rec_0", "rec_1", "rec_2"]:
-                    raise ValueError(f"multistream mismatch for doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["n_members"].append(len(members))
-                rows["isize_1"].append(len(members[0][2]))
-                rows["isize_2"].append(len(members[1][2]))
-                rows["isize_3"].append(len(members[2][2]))
-                rows["payload_md5"].append(
-                    hashlib.md5(original.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_members": pd.Series(rows["n_members"], dtype="int64"),
-                    "isize_1": pd.Series(rows["isize_1"], dtype="int64"),
-                    "isize_2": pd.Series(rows["isize_2"], dtype="int64"),
-                    "isize_3": pd.Series(rows["isize_3"], dtype="int64"),
-                    "payload_md5": pd.Series(rows["payload_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        original = bytes(payload)
+        c = len(original) // 3
+        chunks = [original[:c], original[c : 2 * c], original[2 * c :]]
+        stream = b"".join(
+            gzip_member_build(f"rec_{i}", int(doc_id) * 4 + i, ch)
+            for i, ch in enumerate(chunks)
+        )
+        members = gzip_multistream_walk(stream)
+        if b"".join(m[2] for m in members) != original or [
+            m[0] for m in members
+        ] != ["rec_0", "rec_1", "rec_2"]:
+            raise ValueError(f"multistream mismatch for doc {doc_id}")
+        md5 = hashlib.md5(original.hex().upper().encode()).hexdigest()
+        yield doc_id, len(members), *(len(m[2]) for m in members[:3]), md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_members long, isize_1 long, isize_2 long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, n_members long, isize_1 long, isize_2 long, "
         "isize_3 long, payload_md5 string",
+        rows_of,
     )
 
 
@@ -3191,67 +2859,34 @@ def mm_zip_central_dir_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_entries": [], "txt_size": [], "meta_size": [],
-                "txt_method": [], "meta_method": [], "names_md5": [],
-                "payload_md5": [],
-            }
-            for doc_id, source, payload in zip(
-                pdf["doc_id"], pdf["source"], pdf["payload"]
-            ):
-                text = bytes(payload)
-                meta = f"src={source}\n".encode()
-                archive = zip_build(
-                    [
-                        (f"doc_{int(doc_id)}.txt", text, True),
-                        (f"doc_{int(doc_id)}.meta", meta, False),
-                    ]
-                )
-                entries = zip_central_dir_walk(archive)
-                if [(e[0], e[3]) for e in entries] != [
-                    (f"doc_{int(doc_id)}.txt", text),
-                    (f"doc_{int(doc_id)}.meta", meta),
-                ]:
-                    raise ValueError(f"zip roundtrip mismatch for doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["n_entries"].append(len(entries))
-                rows["txt_size"].append(entries[0][2])
-                rows["meta_size"].append(entries[1][2])
-                rows["txt_method"].append(entries[0][1])
-                rows["meta_method"].append(entries[1][1])
-                rows["names_md5"].append(
-                    hashlib.md5(
-                        ",".join(e[0] for e in entries).encode()
-                    ).hexdigest()
-                )
-                rows["payload_md5"].append(
-                    hashlib.md5(
-                        b"".join(e[3] for e in entries)
-                        .hex()
-                        .upper()
-                        .encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_entries": pd.Series(rows["n_entries"], dtype="int64"),
-                    "txt_size": pd.Series(rows["txt_size"], dtype="int64"),
-                    "meta_size": pd.Series(rows["meta_size"], dtype="int64"),
-                    "txt_method": pd.Series(rows["txt_method"], dtype="int64"),
-                    "meta_method": pd.Series(rows["meta_method"], dtype="int64"),
-                    "names_md5": pd.Series(rows["names_md5"], dtype="object"),
-                    "payload_md5": pd.Series(rows["payload_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, source: str, payload: bytes) -> Iterator[tuple]:
+        text = bytes(payload)
+        meta = f"src={source}\n".encode()
+        archive = zip_build(
+            [
+                (f"doc_{int(doc_id)}.txt", text, True),
+                (f"doc_{int(doc_id)}.meta", meta, False),
+            ]
+        )
+        entries = zip_central_dir_walk(archive)
+        if [(e[0], e[3]) for e in entries] != [
+            (f"doc_{int(doc_id)}.txt", text),
+            (f"doc_{int(doc_id)}.meta", meta),
+        ]:
+            raise ValueError(f"zip roundtrip mismatch for doc {doc_id}")
+        names_md5 = hashlib.md5(",".join(e[0] for e in entries).encode()).hexdigest()
+        payload_md5 = hashlib.md5(
+            b"".join(e[3] for e in entries).hex().upper().encode()
+        ).hexdigest()
+        yield (doc_id, len(entries), entries[0][2], entries[1][2], entries[0][1],
+               entries[1][1], names_md5, payload_md5)
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_entries long, txt_size long, meta_size long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, n_entries long, txt_size long, meta_size long, "
         "txt_method long, meta_method long, names_md5 string, "
         "payload_md5 string",
+        rows_of,
     )
 
 
@@ -3430,58 +3065,31 @@ def mm_warc_record_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_records": [], "target_uri": [],
-                "response_content_length": [], "http_status": [],
-                "body_len": [], "body_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                body = bytes(payload)
-                uri = f"http://example.com/doc_{int(doc_id)}"
-                archive = warc_gz_build(int(doc_id), uri, body)
-                members = gzip_multistream_walk(archive)
-                parsed = [warc_record_parse(m[2]) for m in members]
-                types = [f["warc-type"] for f, _ in parsed]
-                if types != ["warcinfo", "request", "response"]:
-                    raise ValueError(f"record type walk mismatch: {types}")
-                resp_fields, resp_block = parsed[2]
-                if resp_fields.get("warc-target-uri") != uri:
-                    raise ValueError("response WARC-Target-URI mismatch")
-                status, http_headers, got = http_response_parse(resp_block)
-                if got != body:
-                    raise ValueError(f"extracted body mismatch for {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["n_records"].append(len(parsed))
-                rows["target_uri"].append(uri)
-                rows["response_content_length"].append(
-                    int(resp_fields["content-length"])
-                )
-                rows["http_status"].append(status)
-                rows["body_len"].append(len(got))
-                rows["body_md5"].append(
-                    hashlib.md5(got.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_records": pd.Series(rows["n_records"], dtype="int64"),
-                    "target_uri": pd.Series(rows["target_uri"], dtype="object"),
-                    "response_content_length": pd.Series(
-                        rows["response_content_length"], dtype="int64"
-                    ),
-                    "http_status": pd.Series(rows["http_status"], dtype="int64"),
-                    "body_len": pd.Series(rows["body_len"], dtype="int64"),
-                    "body_md5": pd.Series(rows["body_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        body = bytes(payload)
+        uri = f"http://example.com/doc_{int(doc_id)}"
+        archive = warc_gz_build(int(doc_id), uri, body)
+        members = gzip_multistream_walk(archive)
+        parsed = [warc_record_parse(m[2]) for m in members]
+        types = [f["warc-type"] for f, _ in parsed]
+        if types != ["warcinfo", "request", "response"]:
+            raise ValueError(f"record type walk mismatch: {types}")
+        resp_fields, resp_block = parsed[2]
+        if resp_fields.get("warc-target-uri") != uri:
+            raise ValueError("response WARC-Target-URI mismatch")
+        status, http_headers, got = http_response_parse(resp_block)
+        if got != body:
+            raise ValueError(f"extracted body mismatch for {doc_id}")
+        md5 = hashlib.md5(got.hex().upper().encode()).hexdigest()
+        yield (doc_id, len(parsed), uri, int(resp_fields["content-length"]), status,
+               len(got), md5)
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_records long, target_uri string, "
+    return map_rows(
+        spread(d),
+        "doc_id long, n_records long, target_uri string, "
         "response_content_length long, http_status long, body_len long, "
         "body_md5 string",
+        rows_of,
     )
 
 
@@ -3563,7 +3171,6 @@ def _stage_warc_corpus(sf_dir: str) -> str:
     "a Spark binaryFile scan.",
 )
 def mm_warc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
 
     path = _stage_warc_corpus(sf_dir)
     bf = (
@@ -3572,67 +3179,37 @@ def mm_warc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "shard": [], "n_records": [],
-                "target_uri": [], "http_status": [], "body_len": [],
-                "body_md5": [],
-            }
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                m = _re.search(r"shard-(\d+)\.warc\.gz$", str(fpath))
-                if not m:
-                    raise ValueError(f"unexpected shard file name: {fpath}")
-                shard = int(m.group(1))
-                members = gzip_multistream_walk(bytes(content))
-                parsed = [warc_record_parse(mm[2]) for mm in members]
-                if len(parsed) % 3:
-                    raise ValueError(
-                        f"shard {shard}: {len(parsed)} records, not 3/capture"
-                    )
-                for i in range(0, len(parsed), 3):
-                    cap = parsed[i : i + 3]
-                    types = [f["warc-type"] for f, _ in cap]
-                    if types != ["warcinfo", "request", "response"]:
-                        raise ValueError(f"capture type walk mismatch: {types}")
-                    resp_fields, resp_block = cap[2]
-                    uri = resp_fields["warc-target-uri"]
-                    um = _re.search(r"/doc_(\d+)$", uri)
-                    if not um:
-                        raise ValueError(f"unparseable target URI: {uri}")
-                    doc_id = int(um.group(1))
-                    if doc_id % WARC_N_SHARDS != shard:
-                        raise ValueError(
-                            f"doc {doc_id} found in wrong shard {shard}"
-                        )
-                    status, _hh, body = http_response_parse(resp_block)
-                    rows["doc_id"].append(doc_id)
-                    rows["shard"].append(shard)
-                    rows["n_records"].append(len(cap))
-                    rows["target_uri"].append(uri)
-                    rows["http_status"].append(status)
-                    rows["body_len"].append(len(body))
-                    rows["body_md5"].append(
-                        hashlib.md5(body.hex().upper().encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "shard": pd.Series(rows["shard"], dtype="int64"),
-                    "n_records": pd.Series(rows["n_records"], dtype="int64"),
-                    "target_uri": pd.Series(rows["target_uri"], dtype="object"),
-                    "http_status": pd.Series(
-                        rows["http_status"], dtype="int64"
-                    ),
-                    "body_len": pd.Series(rows["body_len"], dtype="int64"),
-                    "body_md5": pd.Series(rows["body_md5"], dtype="object"),
-                }
-            )
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        m = re.search(r"shard-(\d+)\.warc\.gz$", str(fpath))
+        if not m:
+            raise ValueError(f"unexpected shard file name: {fpath}")
+        shard = int(m.group(1))
+        members = gzip_multistream_walk(bytes(content))
+        parsed = [warc_record_parse(mm[2]) for mm in members]
+        if len(parsed) % 3:
+            raise ValueError(f"shard {shard}: {len(parsed)} records, not 3/capture")
+        for i in range(0, len(parsed), 3):
+            cap = parsed[i : i + 3]
+            types = [f["warc-type"] for f, _ in cap]
+            if types != ["warcinfo", "request", "response"]:
+                raise ValueError(f"capture type walk mismatch: {types}")
+            resp_fields, resp_block = cap[2]
+            uri = resp_fields["warc-target-uri"]
+            um = re.search(r"/doc_(\d+)$", uri)
+            if not um:
+                raise ValueError(f"unparseable target URI: {uri}")
+            doc_id = int(um.group(1))
+            if doc_id % WARC_N_SHARDS != shard:
+                raise ValueError(f"doc {doc_id} found in wrong shard {shard}")
+            status, _hh, body = http_response_parse(resp_block)
+            md5 = hashlib.md5(body.hex().upper().encode()).hexdigest()
+            yield doc_id, shard, len(cap), uri, status, len(body), md5
 
-    return bf.mapInPandas(
-        run,
-        schema="doc_id long, shard long, n_records long, target_uri string, "
+    return map_rows(
+        bf,
+        "doc_id long, shard long, n_records long, target_uri string, "
         "http_status long, body_len long, body_md5 string",
+        rows_of,
     )
 
 
@@ -4125,69 +3702,36 @@ def mm_jpeg_baseline_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") >= 16)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_blocks": [],
-                "const_px_sum": [], "const_px_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # % 256: non-ASCII codepoints overflow uint8 (NumPy 2
-                # raises; NumPy 1 silently wraps while the oracle's
-                # ascii() keeps the full codepoint) — wrap explicitly and
-                # mirror the same % 256 in the oracle
-                chars = [ord(c) % 256 for c in str(text)[:16]]
-                grid = _jpeg_seed_grid(chars, np)
-                data = jpeg_encode_baseline(grid, np)
-                dec, blocks = jpeg_decode_baseline(data, np)
-                if dec.shape != (32, 32) or len(blocks) != 16:
-                    raise ValueError(f"decode shape mismatch for doc {doc_id}")
-                sos = data.find(b"\xff\xda")
-                ecs_start = sos + 2 + int.from_bytes(
-                    data[sos + 2 : sos + 4], "big"
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        # % 256: non-ASCII codepoints overflow uint8 (NumPy 2
+        # raises; NumPy 1 silently wraps while the oracle's
+        # ascii() keeps the full codepoint) — wrap explicitly and
+        # mirror the same % 256 in the oracle
+        chars = [ord(c) % 256 for c in str(text)[:16]]
+        grid = _jpeg_seed_grid(chars, np)
+        data = jpeg_encode_baseline(grid, np)
+        dec, blocks = jpeg_decode_baseline(data, np)
+        if dec.shape != (32, 32) or len(blocks) != 16:
+            raise ValueError(f"decode shape mismatch for doc {doc_id}")
+        sos = data.find(b"\xff\xda")
+        ecs_start = sos + 2 + int.from_bytes(data[sos + 2 : sos + 4], "big")
+        if jpeg_encode_ecs(blocks) != data[ecs_start:-2]:
+            raise ValueError(f"entropy layer not lossless for doc {doc_id}")
+        const_vals = [int(dec[(k // 4) * 8, (k % 4) * 8]) for k in range(8)]
+        for k in range(8):
+            if const_vals[k] != 2 * ((chars[k] + 129) // 2) - 128:
+                raise ValueError(
+                    f"constant-block closed form violated: doc "
+                    f"{doc_id} block {k}"
                 )
-                if jpeg_encode_ecs(blocks) != data[ecs_start:-2]:
-                    raise ValueError(
-                        f"entropy layer not lossless for doc {doc_id}"
-                    )
-                const_vals = [int(dec[(k // 4) * 8, (k % 4) * 8]) for k in range(8)]
-                for k in range(8):
-                    if const_vals[k] != 2 * ((chars[k] + 129) // 2) - 128:
-                        raise ValueError(
-                            f"constant-block closed form violated: doc "
-                            f"{doc_id} block {k}"
-                        )
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(dec.shape[1])
-                rows["height"].append(dec.shape[0])
-                rows["n_blocks"].append(len(blocks))
-                rows["const_px_sum"].append(sum(const_vals))
-                rows["const_px_md5"].append(
-                    hashlib.md5(
-                        ",".join(str(v) for v in const_vals).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int64"),
-                    "height": pd.Series(rows["height"], dtype="int64"),
-                    "n_blocks": pd.Series(rows["n_blocks"], dtype="int64"),
-                    "const_px_sum": pd.Series(
-                        rows["const_px_sum"], dtype="int64"
-                    ),
-                    "const_px_md5": pd.Series(
-                        rows["const_px_md5"], dtype="object"
-                    ),
-                }
-            )
+        md5 = hashlib.md5(",".join(str(v) for v in const_vals).encode()).hexdigest()
+        yield doc_id, dec.shape[1], dec.shape[0], len(blocks), sum(const_vals), md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, n_blocks long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, width long, height long, n_blocks long, "
         "const_px_sum long, const_px_md5 string",
+        rows_of,
     )
 
 
@@ -4473,73 +4017,41 @@ def mm_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") >= 16)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_blocks": [],
-                "n_scans": [], "const_px_sum": [], "const_px_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                chars = [ord(c) % 256 for c in str(text)[:16]]
-                grid = _jpeg_seed_grid(chars, np)
-                src_blocks = _jpeg_quantize_blocks(grid, np)
-                data = jpeg_encode_progressive(grid, np)
-                dec, blocks, n_scans = jpeg_decode_progressive(data, np)
-                if dec.shape != (32, 32) or len(blocks) != 16:
-                    raise ValueError(f"decode shape mismatch for doc {doc_id}")
-                if blocks != src_blocks:
-                    raise ValueError(
-                        f"progressive entropy layer not lossless for doc "
-                        f"{doc_id}"
-                    )
-                base_dec, base_blocks = jpeg_decode_baseline(
-                    jpeg_encode_baseline(grid, np), np
-                )
-                if base_blocks != blocks or not (base_dec == dec).all():
-                    raise ValueError(
-                        f"progressive and baseline paths disagree for doc "
-                        f"{doc_id}"
-                    )
-                const_vals = [int(dec[(k // 4) * 8, (k % 4) * 8]) for k in range(8)]
-                for k in range(8):
-                    if const_vals[k] != 2 * ((chars[k] + 129) // 2) - 128:
-                        raise ValueError(
-                            f"constant-block closed form violated: doc "
-                            f"{doc_id} block {k}"
-                        )
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(dec.shape[1])
-                rows["height"].append(dec.shape[0])
-                rows["n_blocks"].append(len(blocks))
-                rows["n_scans"].append(n_scans)
-                rows["const_px_sum"].append(sum(const_vals))
-                rows["const_px_md5"].append(
-                    hashlib.md5(
-                        ",".join(str(v) for v in const_vals).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int64"),
-                    "height": pd.Series(rows["height"], dtype="int64"),
-                    "n_blocks": pd.Series(rows["n_blocks"], dtype="int64"),
-                    "n_scans": pd.Series(rows["n_scans"], dtype="int64"),
-                    "const_px_sum": pd.Series(
-                        rows["const_px_sum"], dtype="int64"
-                    ),
-                    "const_px_md5": pd.Series(
-                        rows["const_px_md5"], dtype="object"
-                    ),
-                }
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        chars = [ord(c) % 256 for c in str(text)[:16]]
+        grid = _jpeg_seed_grid(chars, np)
+        src_blocks = _jpeg_quantize_blocks(grid, np)
+        data = jpeg_encode_progressive(grid, np)
+        dec, blocks, n_scans = jpeg_decode_progressive(data, np)
+        if dec.shape != (32, 32) or len(blocks) != 16:
+            raise ValueError(f"decode shape mismatch for doc {doc_id}")
+        if blocks != src_blocks:
+            raise ValueError(
+                f"progressive entropy layer not lossless for doc "
+                f"{doc_id}"
             )
+        base_dec, base_blocks = jpeg_decode_baseline(jpeg_encode_baseline(grid, np), np)
+        if base_blocks != blocks or not (base_dec == dec).all():
+            raise ValueError(
+                f"progressive and baseline paths disagree for doc "
+                f"{doc_id}"
+            )
+        const_vals = [int(dec[(k // 4) * 8, (k % 4) * 8]) for k in range(8)]
+        for k in range(8):
+            if const_vals[k] != 2 * ((chars[k] + 129) // 2) - 128:
+                raise ValueError(
+                    f"constant-block closed form violated: doc "
+                    f"{doc_id} block {k}"
+                )
+        md5 = hashlib.md5(",".join(str(v) for v in const_vals).encode()).hexdigest()
+        yield (doc_id, dec.shape[1], dec.shape[0], len(blocks), n_scans, sum(const_vals),
+               md5)
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, n_blocks long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, width long, height long, n_blocks long, "
         "n_scans long, const_px_sum long, const_px_md5 string",
+        rows_of,
     )
 
 
@@ -4657,42 +4169,22 @@ def mm_http_chunked_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_chunks": [], "body_len": [],
-                "trailer_ok": [], "body_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                original = bytes(payload)
-                coded = http_chunked_build(original)
-                body, n_chunks, trailers = http_chunked_decode(coded)
-                if body != original:
-                    raise ValueError(f"de-chunk mismatch for doc {doc_id}")
-                ok = trailers.get("x-body-md5") == hashlib.md5(body).hexdigest()
-                if not ok:
-                    raise ValueError(f"trailer digest mismatch for doc {doc_id}")
-                rows["doc_id"].append(int(doc_id))
-                rows["n_chunks"].append(n_chunks)
-                rows["body_len"].append(len(body))
-                rows["trailer_ok"].append(1)
-                rows["body_md5"].append(
-                    hashlib.md5(body.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_chunks": pd.Series(rows["n_chunks"], dtype="int64"),
-                    "body_len": pd.Series(rows["body_len"], dtype="int64"),
-                    "trailer_ok": pd.Series(rows["trailer_ok"], dtype="int64"),
-                    "body_md5": pd.Series(rows["body_md5"], dtype="object"),
-                }
-            )
+    def rows_of(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        original = bytes(payload)
+        coded = http_chunked_build(original)
+        body, n_chunks, trailers = http_chunked_decode(coded)
+        if body != original:
+            raise ValueError(f"de-chunk mismatch for doc {doc_id}")
+        ok = trailers.get("x-body-md5") == hashlib.md5(body).hexdigest()
+        if not ok:
+            raise ValueError(f"trailer digest mismatch for doc {doc_id}")
+        md5 = hashlib.md5(body.hex().upper().encode()).hexdigest()
+        yield doc_id, n_chunks, len(body), 1, md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_chunks long, body_len long, trailer_ok long, "
-        "body_md5 string",
+    return map_rows(
+        spread(d),
+        "doc_id long, n_chunks long, body_len long, trailer_ok long, body_md5 string",
+        rows_of,
     )
 
 
@@ -4775,99 +4267,70 @@ def mm_wet_conversion_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_src_records": [], "n_chunks": [],
-                "body_len": [], "wet_record_len": [], "body_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                body = bytes(payload)
-                did = int(doc_id)
-                if did >= 10**8:
-                    # {did:08d} stops zero-padding at 9 digits, growing the
-                    # WARC-Record-ID/WARC-Refers-To headers past the 216
-                    # fixed octets the oracle hardcodes — fail loudly
-                    # instead of silently breaking wet_record_len parity
-                    raise ValueError(
-                        f"doc_id {did} >= 10^8 breaks the fixed-width "
-                        "record-id assumption of the wet_record_len oracle"
-                    )
-                uri = f"http://example.com/doc_{did}"
-                chunked = http_chunked_build(body)
-                http = (
-                    b"HTTP/1.1 200 OK\r\n"
-                    b"Content-Type: text/plain\r\n"
-                    b"Transfer-Encoding: chunked\r\n"
-                    b"\r\n" + chunked
-                )
-                recs = [
-                    warc_record_build(
-                        "request", f"<urn:uuid:{did:08d}-req>",
-                        f"GET /doc_{did} HTTP/1.1\r\n\r\n".encode(),
-                        extra=[("WARC-Target-URI", uri)],
-                    ),
-                    warc_record_build(
-                        "response", f"<urn:uuid:{did:08d}-resp>", http,
-                        extra=[("WARC-Target-URI", uri)],
-                    ),
-                ]
-                src = b"".join(
-                    gzip_member_build("", did * 4 + i, r)
-                    for i, r in enumerate(recs)
-                )
-                # consume: walk, parse, de-chunk, extract
-                members = gzip_multistream_walk(src)
-                parsed = [warc_record_parse(m[2]) for m in members]
-                if [f["warc-type"] for f, _ in parsed] != ["request", "response"]:
-                    raise ValueError(f"source walk mismatch for doc {did}")
-                status, hh, extracted = http_response_parse_any(parsed[1][1])
-                if status != 200 or extracted != body:
-                    raise ValueError(f"extraction mismatch for doc {did}")
-                n_chunks = (len(body) + HTTP_CHUNK_SIZE - 1) // HTTP_CHUNK_SIZE
-                # produce: the WET conversion record, its own gzip member
-                wet_rec = warc_record_build(
-                    "conversion", f"<urn:uuid:{did:08d}-conv>", extracted,
-                    extra=[
-                        ("WARC-Refers-To", f"<urn:uuid:{did:08d}-resp>"),
-                        ("WARC-Target-URI", uri),
-                    ],
-                )
-                wet = gzip_member_build("", did * 4 + 3, wet_rec)
-                # re-consume our own product
-                back = gzip_multistream_walk(wet)
-                bf, bblock = warc_record_parse(back[0][2])
-                if bf["warc-type"] != "conversion" or bblock != body:
-                    raise ValueError(f"WET roundtrip mismatch for doc {did}")
-                if bf["warc-refers-to"] != f"<urn:uuid:{did:08d}-resp>":
-                    raise ValueError(f"WARC-Refers-To broken for doc {did}")
-                rows["doc_id"].append(did)
-                rows["n_src_records"].append(len(parsed))
-                rows["n_chunks"].append(n_chunks)
-                rows["body_len"].append(len(body))
-                rows["wet_record_len"].append(len(wet_rec))
-                rows["body_md5"].append(
-                    hashlib.md5(body.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_src_records": pd.Series(
-                        rows["n_src_records"], dtype="int64"
-                    ),
-                    "n_chunks": pd.Series(rows["n_chunks"], dtype="int64"),
-                    "body_len": pd.Series(rows["body_len"], dtype="int64"),
-                    "wet_record_len": pd.Series(
-                        rows["wet_record_len"], dtype="int64"
-                    ),
-                    "body_md5": pd.Series(rows["body_md5"], dtype="object"),
-                }
+    def rows_of(did: int, payload: bytes) -> Iterator[tuple]:
+        body = bytes(payload)
+        if did >= 10**8:
+            # {did:08d} stops zero-padding at 9 digits, growing the
+            # WARC-Record-ID/WARC-Refers-To headers past the 216
+            # fixed octets the oracle hardcodes — fail loudly
+            # instead of silently breaking wet_record_len parity
+            raise ValueError(
+                f"doc_id {did} >= 10^8 breaks the fixed-width "
+                "record-id assumption of the wet_record_len oracle"
             )
+        uri = f"http://example.com/doc_{did}"
+        chunked = http_chunked_build(body)
+        http = (
+            b"HTTP/1.1 200 OK\r\n"
+            b"Content-Type: text/plain\r\n"
+            b"Transfer-Encoding: chunked\r\n"
+            b"\r\n" + chunked
+        )
+        recs = [
+            warc_record_build(
+                "request", f"<urn:uuid:{did:08d}-req>",
+                f"GET /doc_{did} HTTP/1.1\r\n\r\n".encode(),
+                extra=[("WARC-Target-URI", uri)],
+            ),
+            warc_record_build(
+                "response", f"<urn:uuid:{did:08d}-resp>", http,
+                extra=[("WARC-Target-URI", uri)],
+            ),
+        ]
+        src = b"".join(gzip_member_build("", did * 4 + i, r) for i, r in enumerate(recs))
+        # consume: walk, parse, de-chunk, extract
+        members = gzip_multistream_walk(src)
+        parsed = [warc_record_parse(m[2]) for m in members]
+        if [f["warc-type"] for f, _ in parsed] != ["request", "response"]:
+            raise ValueError(f"source walk mismatch for doc {did}")
+        status, hh, extracted = http_response_parse_any(parsed[1][1])
+        if status != 200 or extracted != body:
+            raise ValueError(f"extraction mismatch for doc {did}")
+        n_chunks = (len(body) + HTTP_CHUNK_SIZE - 1) // HTTP_CHUNK_SIZE
+        # produce: the WET conversion record, its own gzip member
+        wet_rec = warc_record_build(
+            "conversion", f"<urn:uuid:{did:08d}-conv>", extracted,
+            extra=[
+                ("WARC-Refers-To", f"<urn:uuid:{did:08d}-resp>"),
+                ("WARC-Target-URI", uri),
+            ],
+        )
+        wet = gzip_member_build("", did * 4 + 3, wet_rec)
+        # re-consume our own product
+        back = gzip_multistream_walk(wet)
+        bf, bblock = warc_record_parse(back[0][2])
+        if bf["warc-type"] != "conversion" or bblock != body:
+            raise ValueError(f"WET roundtrip mismatch for doc {did}")
+        if bf["warc-refers-to"] != f"<urn:uuid:{did:08d}-resp>":
+            raise ValueError(f"WARC-Refers-To broken for doc {did}")
+        md5 = hashlib.md5(body.hex().upper().encode()).hexdigest()
+        yield did, len(parsed), n_chunks, len(body), len(wet_rec), md5
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_src_records long, n_chunks long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, n_src_records long, n_chunks long, "
         "body_len long, wet_record_len long, body_md5 string",
+        rows_of,
     )
 
 

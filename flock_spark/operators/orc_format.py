@@ -27,11 +27,11 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from flock_spark.operators.bitio import MsbReader, read_uvarint, unzigzag
-from flock_spark.operators.digests import _AUDIT_ORACLE, column_audit
+from flock_spark.operators.digests import _AUDIT_ORACLE
+from flock_spark.operators.digests import column_audit, map_rows
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -511,47 +511,25 @@ def scan_formats_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).hexdigest()
         return (fmt, len(doc_ids), sum(doc_ids), t_md5, s_md5)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                p = str(fpath)
-                if p.endswith(".arrows"):
-                    _f, cols = arrow_ipc_stream_read(data)
-                    out.append(facts(
-                        "arrow", cols["doc_id"], cols["text"], cols["source"]
-                    ))
-                elif p.endswith(".orc"):
-                    _n, cols = orc_read_columns(data)
-                    out.append(facts(
-                        "orc", cols["doc_id"], cols["text"], cols["source"]
-                    ))
-                elif p.endswith(".parquet"):
-                    names = [
-                        n for n, _ in parquet_footer_parse(data)["schema"]
-                    ]
-                    out.append(facts(
-                        "parquet",
-                        parquet_column_read(data, names.index("doc_id")),
-                        parquet_column_read(data, names.index("text")),
-                        parquet_column_read(data, names.index("source")),
-                    ))
-                else:
-                    raise ValueError(f"unexpected staged file {p}")
-            yield pd.DataFrame(
-                {
-                    "fmt": pd.Series([o[0] for o in out], dtype="object"),
-                    "n_rows": pd.Series([o[1] for o in out], dtype="int64"),
-                    "doc_id_sum": pd.Series(
-                        [o[2] for o in out], dtype="int64"
-                    ),
-                    "text_md5": pd.Series([o[3] for o in out], dtype="object"),
-                    "source_md5": pd.Series(
-                        [o[4] for o in out], dtype="object"
-                    ),
-                }
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        data = bytes(content)
+        p = str(fpath)
+        if p.endswith(".arrows"):
+            _f, cols = arrow_ipc_stream_read(data)
+            yield facts("arrow", cols["doc_id"], cols["text"], cols["source"])
+        elif p.endswith(".orc"):
+            _n, cols = orc_read_columns(data)
+            yield facts("orc", cols["doc_id"], cols["text"], cols["source"])
+        elif p.endswith(".parquet"):
+            names = [n for n, _ in parquet_footer_parse(data)["schema"]]
+            yield facts(
+                "parquet",
+                parquet_column_read(data, names.index("doc_id")),
+                parquet_column_read(data, names.index("text")),
+                parquet_column_read(data, names.index("source")),
             )
+        else:
+            raise ValueError(f"unexpected staged file {p}")
 
     bf = (
         spark.read.format("binaryFile")
@@ -564,8 +542,8 @@ def scan_formats_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("path", "content")
     )
-    return bf.mapInPandas(
-        run,
-        schema="fmt string, n_rows long, doc_id_sum long, "
-        "text_md5 string, source_md5 string",
+    return map_rows(
+        bf,
+        "fmt string, n_rows long, doc_id_sum long, text_md5 string, source_md5 string",
+        rows_of,
     )

@@ -28,9 +28,13 @@ scan — a pure-JVM plan with pushdown available like any ORC.
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 
 from flock_spark.operators.bitio import MsbWriter, write_uvarint, zigzag
+from flock_spark.operators.digests import map_rows
 from flock_spark.registry import register
 from flock_spark.staging import stage_once
 
@@ -499,11 +503,6 @@ def scan_orc_own_writer_roundtrip(
     "unioned, no shuffle — the lakehouse write-path audit.",
 )
 def scan_own_writers_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.arrow_ipc import (
         _stage_arrows_own,
         arrow_ipc_stream_read,
@@ -536,57 +535,37 @@ def scan_own_writers_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (fmt, len(doc_ids), sum(doc_ids),
                 sum(1 for g in gaps if g is None), t_md5)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                p = str(fpath)
-                if p.endswith(".arrows"):
-                    _f, cols = arrow_ipc_stream_read(data)
-                    out.append(facts("arrow", cols["doc_id"],
-                                     cols["n_chars_gap"], cols["text"]))
-                elif p.endswith(".avro"):
-                    _codec, recs = avro_container_read(data)
-                    out.append(facts(
-                        "avro", [r["doc_id"] for r in recs],
-                        [r["n_chars_gap"] for r in recs],
-                        [r["text"] for r in recs]))
-                elif p.endswith(".orc"):
-                    _n, cols = orc_read_columns(data)
-                    out.append(facts("orc", cols["doc_id"],
-                                     cols["n_chars_gap"], cols["text"]))
-                elif p.endswith(".parquet"):
-                    names = [
-                        n for n, _ in parquet_footer_parse(data)["schema"]
-                    ]
-                    out.append(facts(
-                        "parquet",
-                        parquet_column_read(data, names.index("doc_id")),
-                        parquet_column_read(
-                            data, names.index("n_chars_gap")),
-                        parquet_column_read(data, names.index("text"))))
-                else:
-                    raise ValueError(f"unexpected staged file {p}")
-            yield pd.DataFrame(
-                {
-                    "fmt": pd.Series([o[0] for o in out], dtype="object"),
-                    "n_rows": pd.Series([o[1] for o in out], dtype="int64"),
-                    "doc_id_sum": pd.Series(
-                        [o[2] for o in out], dtype="int64"),
-                    "n_gap_nulls": pd.Series(
-                        [o[3] for o in out], dtype="int64"),
-                    "text_md5": pd.Series([o[4] for o in out],
-                                          dtype="object"),
-                }
-            )
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        data = bytes(content)
+        p = str(fpath)
+        if p.endswith(".arrows"):
+            _f, cols = arrow_ipc_stream_read(data)
+            yield facts("arrow", cols["doc_id"], cols["n_chars_gap"], cols["text"])
+        elif p.endswith(".avro"):
+            _codec, recs = avro_container_read(data)
+            yield facts(
+                "avro", [r["doc_id"] for r in recs],
+                [r["n_chars_gap"] for r in recs],
+                [r["text"] for r in recs])
+        elif p.endswith(".orc"):
+            _n, cols = orc_read_columns(data)
+            yield facts("orc", cols["doc_id"], cols["n_chars_gap"], cols["text"])
+        elif p.endswith(".parquet"):
+            names = [n for n, _ in parquet_footer_parse(data)["schema"]]
+            yield facts(
+                "parquet",
+                parquet_column_read(data, names.index("doc_id")),
+                parquet_column_read(data, names.index("n_chars_gap")),
+                parquet_column_read(data, names.index("text")))
+        else:
+            raise ValueError(f"unexpected staged file {p}")
 
     bf = (
         spark.read.format("binaryFile").load(paths)
         .select("path", "content")
     )
-    return bf.mapInPandas(
-        run,
-        schema="fmt string, n_rows long, doc_id_sum long, "
-        "n_gap_nulls long, text_md5 string",
+    return map_rows(
+        bf,
+        "fmt string, n_rows long, doc_id_sum long, n_gap_nulls long, text_md5 string",
+        rows_of,
     )

@@ -13,10 +13,15 @@ corpus — embarrassingly parallel, no shuffle except the final group-by.
 
 from __future__ import annotations
 
+import hashlib
+import re
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flock_spark.catalog import spread, tbl
+from flock_spark.operators.digests import map_rows
 from flock_spark.registry import register
 
 # stopword markers per language, matched as ' word ' inside ' ' || text || ' '
@@ -2035,68 +2040,42 @@ _PUNY_MD5_SQL = "md5(concat_ws(','," + ",".join(
     "100 TB URL pipeline.",
 )
 def text_punycode_idna_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     d = (
         tbl(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.length("text") >= PUNY_LABEL_LEN)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [], "n_basic": [], "n_encoded": [],
-                "decoded_cp_sum": [], "decoded_cp_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                cs = [ord(c) % 256 for c in str(text)[:PUNY_LABEL_LEN]]
-                label = "".join(
-                    chr(97 + c % 26) if k % 2 == 0 else chr(19968 + c)
-                    for k, c in enumerate(cs)
-                )
-                enc = punycode_encode(label)
-                ref = label.encode("punycode").decode("ascii")
-                if enc != ref:
-                    raise ValueError(
-                        f"encoder disagrees with stdlib for doc {doc_id}: "
-                        f"{enc!r} != {ref!r}"
-                    )
-                dec = punycode_decode(enc)
-                if dec != label:
-                    raise ValueError(f"roundtrip mismatch for doc {doc_id}")
-                cps = [ord(c) for c in dec]
-                rows["doc_id"].append(int(doc_id))
-                rows["n_basic"].append(sum(1 for c in dec if ord(c) < 128))
-                rows["n_encoded"].append(sum(1 for c in dec if ord(c) >= 128))
-                rows["decoded_cp_sum"].append(sum(cps))
-                rows["decoded_cp_md5"].append(
-                    hashlib.md5(
-                        ",".join(str(v) for v in cps).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_basic": pd.Series(rows["n_basic"], dtype="int64"),
-                    "n_encoded": pd.Series(rows["n_encoded"], dtype="int64"),
-                    "decoded_cp_sum": pd.Series(
-                        rows["decoded_cp_sum"], dtype="int64"
-                    ),
-                    "decoded_cp_md5": pd.Series(
-                        rows["decoded_cp_md5"], dtype="object"
-                    ),
-                }
+    def rows_of(doc_id: int, text: str) -> Iterator[tuple]:
+        cs = [ord(c) % 256 for c in str(text)[:PUNY_LABEL_LEN]]
+        label = "".join(
+            chr(97 + c % 26) if k % 2 == 0 else chr(19968 + c)
+            for k, c in enumerate(cs)
+        )
+        enc = punycode_encode(label)
+        ref = label.encode("punycode").decode("ascii")
+        if enc != ref:
+            raise ValueError(
+                f"encoder disagrees with stdlib for doc {doc_id}: "
+                f"{enc!r} != {ref!r}"
             )
+        dec = punycode_decode(enc)
+        if dec != label:
+            raise ValueError(f"roundtrip mismatch for doc {doc_id}")
+        cps = [ord(c) for c in dec]
+        yield (
+            doc_id,
+            sum(1 for c in dec if ord(c) < 128),
+            sum(1 for c in dec if ord(c) >= 128),
+            sum(cps),
+            hashlib.md5(",".join(str(v) for v in cps).encode()).hexdigest(),
+        )
 
-    return spread(d).mapInPandas(
-        run,
-        schema="doc_id long, n_basic long, n_encoded long, "
+    return map_rows(
+        spread(d),
+        "doc_id long, n_basic long, n_encoded long, "
         "decoded_cp_sum long, decoded_cp_md5 string",
+        rows_of,
     )
 
 
@@ -3007,8 +2986,6 @@ _CHAIN_DUCK = _crawl_chain_sql(
     "composition proof VERDICT r11 asked for (stretch item 7).",
 )
 def crawl_chain_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from flock_spark.operators.multimodal import (
         WARC_N_SHARDS,
         _stage_warc_corpus,
@@ -3024,39 +3001,21 @@ def crawl_chain_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def ingest(batches) -> object:
-        import hashlib as _hl
-
-        import pandas as _pd
-
-        for pdf in batches:
-            ids, lens, md5s = [], [], []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                m = _re.search(r"shard-(\d+)\.warc\.gz$", str(fpath))
-                if not m:
-                    raise ValueError(f"unexpected shard file name: {fpath}")
-                shard = int(m.group(1))
-                members = gzip_multistream_walk(bytes(content))
-                parsed = [warc_record_parse(mm[2]) for mm in members]
-                for i in range(0, len(parsed), 3):
-                    resp_fields, resp_block = parsed[i + 2]
-                    uri = resp_fields["warc-target-uri"]
-                    doc_id = int(_re.search(r"/doc_(\d+)$", uri).group(1))
-                    if doc_id % WARC_N_SHARDS != shard:
-                        raise ValueError(f"doc {doc_id} in wrong shard")
-                    _status, _hh, body = http_response_parse(resp_block)
-                    ids.append(doc_id)
-                    lens.append(len(body))
-                    md5s.append(
-                        _hl.md5(body.hex().upper().encode()).hexdigest()
-                    )
-            yield _pd.DataFrame(
-                {
-                    "doc_id": _pd.Series(ids, dtype="int64"),
-                    "body_len": _pd.Series(lens, dtype="int64"),
-                    "body_md5": _pd.Series(md5s, dtype="object"),
-                }
-            )
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        m = re.search(r"shard-(\d+)\.warc\.gz$", str(fpath))
+        if not m:
+            raise ValueError(f"unexpected shard file name: {fpath}")
+        shard = int(m.group(1))
+        members = gzip_multistream_walk(bytes(content))
+        parsed = [warc_record_parse(mm[2]) for mm in members]
+        for i in range(0, len(parsed), 3):
+            resp_fields, resp_block = parsed[i + 2]
+            uri = resp_fields["warc-target-uri"]
+            doc_id = int(re.search(r"/doc_(\d+)$", uri).group(1))
+            if doc_id % WARC_N_SHARDS != shard:
+                raise ValueError(f"doc {doc_id} in wrong shard")
+            _status, _hh, body = http_response_parse(resp_block)
+            yield doc_id, len(body), hashlib.md5(body.hex().upper().encode()).hexdigest()
 
     # the chain fans out over the ingest result (page stats, link stats,
     # robots verdicts, scheduler all consume it): pin it per invocation so
@@ -3065,8 +3024,8 @@ def crawl_chain_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist-to-storage-level (or a first-stage write), not a rewrite.
     # (NOT .cache(): a plan-matched InMemoryRelation would survive into
     # later runs — cross-run result caching.)
-    ing = bf.mapInPandas(
-        ingest, schema="doc_id long, body_len long, body_md5 string"
+    ing = map_rows(
+        bf, "doc_id long, body_len long, body_md5 string", rows_of
     ).localCheckpoint(eager=True)
     ing.createOrReplaceTempView("warc_chain_ingested")
     # verdicts feed two consumers (frontier/scheduler and robots stats) and

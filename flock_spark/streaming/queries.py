@@ -22,9 +22,14 @@ Window-driver parity (reference → here):
 
 from __future__ import annotations
 
+import hashlib
+import re
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flock_spark.operators.digests import map_rows
 from flock_spark.queries.relational import fsum
 from flock_spark.registry import register
 from flock_spark.streaming.runner import run_to_memory, stage_batches
@@ -1409,10 +1414,6 @@ def streaming_tws_value_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a 1-row running aggregate, so state does not grow with the corpus.",
 )
 def streaming_warc_ingest_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.multimodal import (
         gzip_multistream_walk,
         http_response_parse,
@@ -1426,40 +1427,18 @@ def streaming_warc_ingest_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.col("payload")) > 0)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(did: int, payload: bytes) -> Iterator[tuple]:
+        body = bytes(payload)
+        uri = f"http://example.com/doc_{did}"
+        archive = warc_gz_build(did, uri, body)
+        parsed = [warc_record_parse(m[2]) for m in gzip_multistream_walk(archive)]
+        status, _h, got = http_response_parse(parsed[2][1])
+        if status != 200 or got != body:
+            raise ValueError(f"stream extraction mismatch for {did}")
+        yield did, len(parsed), len(got), hashlib.md5(got.hex().upper().encode()).hexdigest()
 
-        for pdf in batches:
-            rows = {"doc_id": [], "n_records": [], "body_len": [], "body_md5": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                body = bytes(payload)
-                did = int(doc_id)
-                uri = f"http://example.com/doc_{did}"
-                archive = warc_gz_build(did, uri, body)
-                parsed = [
-                    warc_record_parse(m[2])
-                    for m in gzip_multistream_walk(archive)
-                ]
-                status, _h, got = http_response_parse(parsed[2][1])
-                if status != 200 or got != body:
-                    raise ValueError(f"stream extraction mismatch for {did}")
-                rows["doc_id"].append(did)
-                rows["n_records"].append(len(parsed))
-                rows["body_len"].append(len(got))
-                rows["body_md5"].append(
-                    hashlib.md5(got.hex().upper().encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_records": pd.Series(rows["n_records"], dtype="int64"),
-                    "body_len": pd.Series(rows["body_len"], dtype="int64"),
-                    "body_md5": pd.Series(rows["body_md5"], dtype="object"),
-                }
-            )
-
-    decoded = docs.mapInPandas(
-        run, schema="doc_id long, n_records long, body_len long, body_md5 string"
+    decoded = map_rows(
+        docs, "doc_id long, n_records long, body_len long, body_md5 string", rows_of
     )
     agg = decoded.agg(
         F.count("*").alias("n_docs"),
@@ -1504,11 +1483,6 @@ def streaming_warc_ingest_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan is a production Common-Crawl tailer.",
 )
 def streaming_warc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.multimodal import (
         WARC_N_SHARDS,
         _stage_warc_corpus,
@@ -1529,50 +1503,27 @@ def streaming_warc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        m = re.search(r"shard-(\d+)\.warc\.gz$", str(fpath))
+        if not m:
+            raise ValueError(f"unexpected shard file name: {fpath}")
+        shard = int(m.group(1))
+        parsed = [warc_record_parse(mm[2]) for mm in gzip_multistream_walk(bytes(content))]
+        if len(parsed) % 3:
+            raise ValueError(f"shard {shard}: capture framing broken")
+        for i in range(0, len(parsed), 3):
+            resp_fields, resp_block = parsed[i + 2]
+            uri = resp_fields["warc-target-uri"]
+            did = int(uri.rsplit("_", 1)[1])
+            if did % WARC_N_SHARDS != shard:
+                raise ValueError(f"doc {did} streamed from wrong shard {shard}")
+            status, _h, body = http_response_parse(resp_block)
+            if status != 200:
+                raise ValueError(f"bad status {status} for doc {did}")
+            yield did, 3, len(body), hashlib.md5(body.hex().upper().encode()).hexdigest()
 
-        for pdf in batches:
-            rows = {"doc_id": [], "n_records": [], "body_len": [], "body_md5": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                m = _re.search(r"shard-(\d+)\.warc\.gz$", str(fpath))
-                if not m:
-                    raise ValueError(f"unexpected shard file name: {fpath}")
-                shard = int(m.group(1))
-                parsed = [
-                    warc_record_parse(mm[2])
-                    for mm in gzip_multistream_walk(bytes(content))
-                ]
-                if len(parsed) % 3:
-                    raise ValueError(f"shard {shard}: capture framing broken")
-                for i in range(0, len(parsed), 3):
-                    resp_fields, resp_block = parsed[i + 2]
-                    uri = resp_fields["warc-target-uri"]
-                    did = int(uri.rsplit("_", 1)[1])
-                    if did % WARC_N_SHARDS != shard:
-                        raise ValueError(
-                            f"doc {did} streamed from wrong shard {shard}"
-                        )
-                    status, _h, body = http_response_parse(resp_block)
-                    if status != 200:
-                        raise ValueError(f"bad status {status} for doc {did}")
-                    rows["doc_id"].append(did)
-                    rows["n_records"].append(3)
-                    rows["body_len"].append(len(body))
-                    rows["body_md5"].append(
-                        hashlib.md5(body.hex().upper().encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_records": pd.Series(rows["n_records"], dtype="int64"),
-                    "body_len": pd.Series(rows["body_len"], dtype="int64"),
-                    "body_md5": pd.Series(rows["body_md5"], dtype="object"),
-                }
-            )
-
-    decoded = shards.mapInPandas(
-        run, schema="doc_id long, n_records long, body_len long, body_md5 string"
+    decoded = map_rows(
+        shards, "doc_id long, n_records long, body_len long, body_md5 string", rows_of
     )
     agg = decoded.agg(
         F.count("*").alias("n_docs"),
@@ -1663,10 +1614,6 @@ def _stage_arrows_shards(sf_dir: str) -> str:
     "Flight/IPC bucket tailer.",
 )
 def streaming_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.arrow_ipc import arrow_ipc_stream_read
 
     path = _stage_arrows_shards(sf_dir)
@@ -1681,38 +1628,17 @@ def streaming_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(content: bytes) -> Iterator[tuple]:
+        fields, cols = arrow_ipc_stream_read(bytes(content))
+        by_name = {f["name"]: f for f in fields}
+        if by_name["source"]["dict_id"] is None:
+            raise ValueError("source column lost its dictionary")
+        for did, gap, text in zip(cols["doc_id"], cols["n_chars_gap"], cols["text"]):
+            digest = int(hashlib.md5(text.encode()).hexdigest()[:15], 16) % 2147483647
+            yield did, 1 if gap is None else 0, 0 if gap is None else gap, digest
 
-        for pdf in batches:
-            rows = {"doc_id": [], "gap_null": [], "n_chars": [], "digest": []}
-            for content in pdf["content"]:
-                fields, cols = arrow_ipc_stream_read(bytes(content))
-                by_name = {f["name"]: f for f in fields}
-                if by_name["source"]["dict_id"] is None:
-                    raise ValueError("source column lost its dictionary")
-                for did, gap, text in zip(
-                    cols["doc_id"], cols["n_chars_gap"], cols["text"]
-                ):
-                    rows["doc_id"].append(did)
-                    rows["gap_null"].append(1 if gap is None else 0)
-                    rows["n_chars"].append(0 if gap is None else gap)
-                    rows["digest"].append(
-                        int(
-                            hashlib.md5(text.encode()).hexdigest()[:15], 16
-                        ) % 2147483647
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "gap_null": pd.Series(rows["gap_null"], dtype="int64"),
-                    "n_chars": pd.Series(rows["n_chars"], dtype="int64"),
-                    "digest": pd.Series(rows["digest"], dtype="int64"),
-                }
-            )
-
-    decoded = shards.mapInPandas(
-        run, schema="doc_id long, gap_null long, n_chars long, digest long"
+    decoded = map_rows(
+        shards, "doc_id long, gap_null long, n_chars long, digest long", rows_of
     )
     agg = decoded.agg(
         F.count("*").alias("n_rows"),
@@ -1784,10 +1710,6 @@ def _stage_orc_shards(spark: SparkSession, sf_dir: str) -> str:
     "notification source and this tails an ORC lake.",
 )
 def streaming_orc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.orc_format import orc_read_columns
 
     path = _stage_orc_shards(spark, sf_dir)
@@ -1802,42 +1724,20 @@ def streaming_orc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import re as _re
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        m = re.search(r"shard-(\d+)\.orc$", str(fpath))
+        if not m:
+            raise ValueError(f"unexpected shard file name: {fpath}")
+        shard = int(m.group(1))
+        _names, cols = orc_read_columns(bytes(content))
+        for did, gap, text in zip(cols["doc_id"], cols["n_chars_gap"], cols["text"]):
+            if did % 4 != shard:
+                raise ValueError(f"doc {did} in wrong shard {shard}")
+            digest = int(hashlib.md5(text.encode()).hexdigest()[:15], 16) % 2147483647
+            yield did, 1 if gap is None else 0, 0 if gap is None else gap, digest
 
-        for pdf in batches:
-            rows = {"doc_id": [], "gap_null": [], "n_chars": [], "digest": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                m = _re.search(r"shard-(\d+)\.orc$", str(fpath))
-                if not m:
-                    raise ValueError(f"unexpected shard file name: {fpath}")
-                shard = int(m.group(1))
-                _names, cols = orc_read_columns(bytes(content))
-                for did, gap, text in zip(
-                    cols["doc_id"], cols["n_chars_gap"], cols["text"]
-                ):
-                    if did % 4 != shard:
-                        raise ValueError(f"doc {did} in wrong shard {shard}")
-                    rows["doc_id"].append(did)
-                    rows["gap_null"].append(1 if gap is None else 0)
-                    rows["n_chars"].append(0 if gap is None else gap)
-                    rows["digest"].append(
-                        int(
-                            hashlib.md5(text.encode()).hexdigest()[:15], 16
-                        ) % 2147483647
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "gap_null": pd.Series(rows["gap_null"], dtype="int64"),
-                    "n_chars": pd.Series(rows["n_chars"], dtype="int64"),
-                    "digest": pd.Series(rows["digest"], dtype="int64"),
-                }
-            )
-
-    decoded = shards.mapInPandas(
-        run, schema="doc_id long, gap_null long, n_chars long, digest long"
+    decoded = map_rows(
+        shards, "doc_id long, gap_null long, n_chars long, digest long", rows_of
     )
     agg = decoded.agg(
         F.count("*").alias("n_rows"),
@@ -1876,10 +1776,6 @@ def streaming_orc_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "notification source and this tails an Avro lake.",
 )
 def streaming_avro_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.avro_format import (
         CODECS,
         _stage_avro,
@@ -1898,43 +1794,16 @@ def streaming_avro_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        codec, records = avro_container_read(bytes(content))
+        if codec not in CODECS or not str(fpath).endswith(f"{codec}.avro"):
+            raise ValueError(f"codec {codec} vs file {fpath}")
+        for i, r in enumerate(records):
+            digest = int(hashlib.md5(r["text"].encode()).hexdigest()[:15], 16) % 2147483647
+            yield 1 if i == 0 else 0, r["doc_id"], 1 if r["n_chars_gap"] is None else 0, digest
 
-        for pdf in batches:
-            rows = {"is_file": [], "doc_id": [], "gap_null": [], "digest": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                codec, records = avro_container_read(bytes(content))
-                if codec not in CODECS or not str(fpath).endswith(
-                    f"{codec}.avro"
-                ):
-                    raise ValueError(f"codec {codec} vs file {fpath}")
-                first = True
-                for r in records:
-                    rows["is_file"].append(1 if first else 0)
-                    first = False
-                    rows["doc_id"].append(r["doc_id"])
-                    rows["gap_null"].append(
-                        1 if r["n_chars_gap"] is None else 0
-                    )
-                    rows["digest"].append(
-                        int(
-                            hashlib.md5(
-                                r["text"].encode()
-                            ).hexdigest()[:15], 16
-                        ) % 2147483647
-                    )
-            yield pd.DataFrame(
-                {
-                    "is_file": pd.Series(rows["is_file"], dtype="int64"),
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "gap_null": pd.Series(rows["gap_null"], dtype="int64"),
-                    "digest": pd.Series(rows["digest"], dtype="int64"),
-                }
-            )
-
-    decoded = files.mapInPandas(
-        run, schema="is_file long, doc_id long, gap_null long, digest long"
+    decoded = map_rows(
+        files, "is_file long, doc_id long, gap_null long, digest long", rows_of
     )
     agg = decoded.agg(
         F.sum("is_file").alias("n_files"),
@@ -1973,10 +1842,6 @@ def streaming_avro_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "trigger, O(1) aggregation state — the wikidump-tailer shape.",
 )
 def streaming_xz_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from flock_spark.operators.lzma_codec import xz_compress, xz_decompress
     from flock_spark.staging import stage_once
 
@@ -2020,45 +1885,22 @@ def streaming_xz_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import re as _re
+    def rows_of(fpath: str, content: bytes) -> Iterator[tuple]:
+        m = re.search(r"shard-(\d)\.xz$", str(fpath))
+        if not m:
+            raise ValueError(f"unexpected shard name {fpath}")
+        shard = int(m.group(1))
+        tsv = xz_decompress(bytes(content)).decode("utf-8")
+        for i, line in enumerate(tsv.splitlines()):
+            did, text = line.split("\t", 1)
+            did = int(did)
+            if did % 4 != shard:
+                raise ValueError(f"doc {did} in wrong shard")
+            digest = int(hashlib.md5(text.encode()).hexdigest()[:15], 16) % 2147483647
+            yield 1 if i == 0 else 0, did, len(text.encode()), digest
 
-        for pdf in batches:
-            rows = {"is_file": [], "doc_id": [], "n_bytes": [],
-                    "digest": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                m = _re.search(r"shard-(\d)\.xz$", str(fpath))
-                if not m:
-                    raise ValueError(f"unexpected shard name {fpath}")
-                shard = int(m.group(1))
-                tsv = xz_decompress(bytes(content)).decode("utf-8")
-                first = True
-                for line in tsv.splitlines():
-                    did, text = line.split("\t", 1)
-                    did = int(did)
-                    if did % 4 != shard:
-                        raise ValueError(f"doc {did} in wrong shard")
-                    rows["is_file"].append(1 if first else 0)
-                    first = False
-                    rows["doc_id"].append(did)
-                    rows["n_bytes"].append(len(text.encode()))
-                    rows["digest"].append(
-                        int(hashlib.md5(
-                            text.encode()).hexdigest()[:15], 16)
-                        % 2147483647
-                    )
-            yield pd.DataFrame(
-                {
-                    "is_file": pd.Series(rows["is_file"], dtype="int64"),
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                    "digest": pd.Series(rows["digest"], dtype="int64"),
-                }
-            )
-
-    decoded = files.mapInPandas(
-        run, schema="is_file long, doc_id long, n_bytes long, digest long"
+    decoded = map_rows(
+        files, "is_file long, doc_id long, n_bytes long, digest long", rows_of
     )
     agg = decoded.agg(
         F.sum("is_file").alias("n_files"),

@@ -83,6 +83,8 @@ def test_lzw_rejects_malformed():
     # packed LSB-first. Each case must raise ValueError, never IndexError.
     for stream, match in [
         (bytes([0, 1, 0x04, 0]), "min code size 0"),
+        # GIF89a floor: 1 would keep its codes 2 bits wide for the whole stream
+        (bytes([1, 1, 0x02, 0]), "min code size 1"),
         (bytes([12, 1, 0x04, 0]), "min code size 12"),
         (bytes([2, 1, 0x04, 0]), "truncated"),  # CLEAR, 0, then no EOI
         (bytes([2, 1, 4 | 6 << 3, 0]), "first code 6"),  # CLEAR, 6

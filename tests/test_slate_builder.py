@@ -50,6 +50,30 @@ PAGE_DECODE_CONSUMERS = {
 }
 COLUMN_AUDIT_CONSUMERS = {
     "scan_arrow_ipc_stream_walk", "scan_arrow_ipc_file_walk", "scan_orc_stripe_decode",
+    "scan_avro_container_decode",  # digests each (codec, column) without column_audit
+}
+# Every per-row pandas UDF runs through digests.map_rows: the page-decode and
+# column-audit families, the hand-written row functions, and the two entries
+# that reach mm_phash64 (mm_phash_near_dup calls it, mm_dedup_clusters calls that).
+MAP_ROWS_CONSUMERS = {
+    "archive_ingest_chain_end_to_end", "crawl_chain_end_to_end",
+    "mm_arrow_ipc_encode_roundtrip", "mm_audio_window_energy", "mm_avro_encode_roundtrip",
+    "mm_byte_histogram", "mm_dedup_clusters", "mm_frame_sample", "mm_gif_deinterlace",
+    "mm_gif_header_dims", "mm_gif_lzw_decode", "mm_gzip_member_parse",
+    "mm_gzip_multistream_walk", "mm_header_dims", "mm_http_chunked_decode",
+    "mm_image_tile_stats", "mm_jpeg_baseline_decode", "mm_jpeg_header_dims",
+    "mm_jpeg_progressive_decode", "mm_phash64", "mm_phash_near_dup", "mm_png_chunk_walk",
+    "mm_png_filter_suite_decode", "mm_png_inflate_stored", "mm_resize_bilinear",
+    "mm_resize_nearest", "mm_scene_cut_detect", "mm_tar_member_walk", "mm_warc_file_ingest",
+    "mm_warc_record_walk", "mm_wav_header_audio", "mm_wet_conversion_roundtrip",
+    "mm_zip_central_dir_walk", "scan_arrow_ipc_file_walk", "scan_arrow_ipc_stream_walk",
+    "scan_avro_container_decode", "scan_csv_rfc4180_parse", "scan_formats_consensus",
+    "scan_orc_stripe_decode", "scan_own_writers_consensus", "scan_parquet_footer_thrift_walk",
+    "scan_parquet_gzip_page_decode", "scan_parquet_lz4_page_decode", "scan_parquet_page_decode",
+    "scan_parquet_page_index_prune", "scan_parquet_v2_delta_decode",
+    "scan_parquet_zstd_page_decode", "streaming_arrow_ipc_ingest", "streaming_avro_file_ingest",
+    "streaming_orc_file_ingest", "streaming_warc_file_ingest", "streaming_warc_ingest_decode",
+    "streaming_xz_file_ingest", "text_charset_detect_transcode", "text_punycode_idna_roundtrip",
 }
 SPARK_AUDIT_CONSUMERS = {
     "scan_parquet_own_writer_roundtrip", "scan_parquet_own_writer_v2_roundtrip",
@@ -171,8 +195,9 @@ def _flagged(monkeypatch, live, target, edit) -> set[str]:
     ("flock_spark.operators.digests", "byte_roundtrip", BYTE_ROUNDTRIP_CONSUMERS),
     ("flock_spark.operators.digests", "page_decode", PAGE_DECODE_CONSUMERS),
     ("flock_spark.operators.digests", "column_digest", COLUMN_AUDIT_CONSUMERS),
+    ("flock_spark.operators.digests", "map_rows", MAP_ROWS_CONSUMERS),
     ("flock_spark.operators.parquet_writer", "_audit_sql", SPARK_AUDIT_CONSUMERS),
-], ids=["minhash", "byte_roundtrip", "page_decode", "column_digest", "audit_sql"])
+], ids=["minhash", "byte_roundtrip", "page_decode", "column_digest", "map_rows", "audit_sql"])
 def test_helper_edit_flags_exactly_its_consumers(monkeypatch, live, module, helper, consumers):
     target = getattr(sys.modules[module], helper)
     flagged = _flagged(monkeypatch, live, target, lambda s: s + "# edit\n")
